@@ -173,14 +173,14 @@ object SparkEntry {
         .select(col("o_custkey"),
           round(col("change") * 100).cast("long").as("c_cents"),
           when(col("is_reduced"), 1L).otherwise(0L).as("r"))
-      val assigned = Clustering.portableFitAssign(
+      // summarizes the fit's staged features, qv = [c_cents, r]
+      Clustering.portableFitAssign(
         ch, "o_custkey", Seq(col("c_cents"), col("r")), k = 5, iters = 3)
-      assigned.join(ch.withColumnRenamed("o_custkey", "id"), "id")
         .groupBy(col("cluster"))
         .agg(count(lit(1)).as("n"),
-          sum(col("r")).as("n_reduced"),
-          min(col("c_cents")).as("min_change_cents"),
-          max(col("c_cents")).as("max_change_cents"))
+          sum(col("qv")(1)).as("n_reduced"),
+          min(col("qv")(0)).as("min_change_cents"),
+          max(col("qv")(0)).as("max_change_cents"))
     }),
 
     // R17: DISTINCT projection

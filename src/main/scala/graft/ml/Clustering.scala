@@ -121,20 +121,24 @@ object Clustering {
     *    carry over.
     *
     * Scale shape: identical to the semDeDup fit — each round is one
-    * distributed codegen'd argmin pass plus one k×dim-row aggregate
-    * collected driver-side; nothing corpus-sized ever reaches the
-    * driver. Caller must keep Σ(Δfeature)² inside int64 (cents-scale
-    * features with dim ≤ ~16 are far inside it).
+    * [[graft.ops.Lloyd.round]] job over the staged features, a k×dim
+    * partial per partition summed driver-side; nothing corpus-sized
+    * ever reaches the driver. Caller must keep Σ(Δfeature)² inside
+    * int64 (cents-scale features with dim ≤ ~16 are far inside it);
+    * component sums that overflow int64 fail the fit.
     *
-    * Returns (id, cluster).
+    * Returns (id, qv, cluster), `qv` the features as array<bigint>. The
+    * features stay staged for the life of the caller's query (the
+    * semDeDup convention): the result reads them, so the caller's
+    * `catalog.clearCache()` after the query releases them.
     */
   def portableFitAssign(
       df: DataFrame, idCol: String, featCols: Seq[Column],
       k: Int, iters: Int, tag: String = "km"): DataFrame = {
     import graft.functions.exprs
-    val keyed = df.select(col(idCol).as("id"),
-      array(featCols.map(_.cast("long")): _*).as("qv"))
-    val staged = graft.ops.Staging.stageToDisk(keyed)
+    // chained: the init collect is the first consumer and materializes it
+    val staged = graft.ops.Staging.stageToDiskChained(df.select(
+      col(idCol).as("id"), array(featCols.map(_.cast("long")): _*).as("qv")))
     val initRows = staged
       .withColumn("h", md5(concat(lit(tag + ":"), col("id").cast("string"))))
       .orderBy(col("h"), col("id").cast("string")).limit(k)
@@ -142,28 +146,8 @@ object Clustering {
     require(initRows.length >= k, s"portable k-means: ${initRows.length} rows < k=$k")
     var cents: Array[Array[Long]] =
       initRows.map(_.getAs[scala.collection.Seq[Long]](0).toArray)
-    val dim = cents(0).length
-    for (_ <- 1 to iters) {
-      val sums = staged
-        .withColumn("cell", exprs.argmin_cell(col("qv"), cents.flatten, k, dim))
-        .select(col("cell"), posexplode(col("qv")).as(Seq("i", "q")))
-        .groupBy(col("cell"), col("i"))
-        .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
-        .collect()
-      val next = cents.map(_.clone()) // empty cells carry over
-      sums.foreach { r =>
-        next(r.getInt(0))(r.getInt(1)) =
-          r.getLong(2) / r.getLong(3) // truncating div = DuckDB `//`
-      }
-      cents = next
-    }
-    // The cache only has to outlive the Lloyd loop above; the final
-    // assignment is one deterministic codegen'd scan, so release BEFORE
-    // returning (r10 advisory: the session-lifetime DISK_ONLY leak) and
-    // let the caller's materialization recompute from source.
-    val out = staged.select(col("id"),
-      exprs.argmin_cell(col("qv"), cents.flatten, k, dim).as("cluster"))
-    graft.ops.Staging.release(staged)
-    out
+    for (_ <- 1 to iters) cents = graft.ops.Lloyd.round(staged, cents)
+    staged.select(col("id"), col("qv"),
+      exprs.argmin_cell(col("qv"), cents.flatten, k, cents(0).length).as("cluster"))
   }
 }

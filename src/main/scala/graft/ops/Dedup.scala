@@ -1155,10 +1155,10 @@ object Dedup {
     // correctness invariant (one kept per τ-group, keep-rule) holds for
     // ANY partition of the vectors — so two loose rounds are enough;
     // quality beyond τ-pair co-location is invisible to the operator.
-    // Each round is one distributed argmin pass + one k×dim-row
-    // aggregate collected driver-side (k ≤ ~1024 — bounded like every
-    // codebook fit here); τ-pair cosines and cent_sim use the SAME
-    // quantized vectors via the exact-integer cosine_q kernel.
+    // Each round is one Lloyd.round job whose k×dim partial sums are
+    // added driver-side (k ≤ ~1024 — bounded like every codebook fit
+    // here); τ-pair cosines and cent_sim use the SAME quantized vectors
+    // via the exact-integer cosine_q kernel.
     val keyed = embs.select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("qv", graft.functions.exprs.quantize20_q(col("v")))
       .select(col("id"), col("qv"))
@@ -1173,21 +1173,7 @@ object Dedup {
     var cents: Array[Array[Long]] =
       initRows.map(_.getAs[scala.collection.Seq[Long]](0).toArray)
     val dim = cents(0).length
-    for (_ <- 1 to maxIter) {
-      val assigned = staged.withColumn("cell",
-        exprs.argmin_cell(col("qv"), cents.flatten, cents.length, dim))
-      val sums = assigned
-        .select(col("cell"), posexplode(col("qv")).as(Seq("i", "q")))
-        .groupBy(col("cell"), col("i"))
-        .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
-        .collect()
-      val next = cents.map(_.clone()) // empty cells carry over
-      sums.foreach { r =>
-        next(r.getInt(0))(r.getInt(1)) =
-          r.getLong(2) / r.getLong(3) // truncating div = DuckDB `//`
-      }
-      cents = next
-    }
+    for (_ <- 1 to maxIter) cents = Lloyd.round(staged, cents)
     // final LEVEL-1 assignment — staged: consumed by the k₂ counts, the
     // level-2 init window, every level-2 round, and the final labeling
     val lvl1 = Staging.stageToDisk(staged.withColumn("cell",

@@ -47,10 +47,14 @@ object Staging {
     df
   }
 
-  /** Persist WITHOUT a materialization job — for a staged frame whose
-    * first consumer is itself staged eagerly: that consumer's one
-    * materialization job computes this subtree and populates the cache
-    * along the way, saving a scheduler round-trip per chained frame.
+  /** Persist WITHOUT a materialization job. The right call whenever
+    * the caller's own next action reads every partition of the frame:
+    * a consumer that is itself staged eagerly, or a driver-side collect
+    * over all rows (portableFitAssign's init draw, an order+limit).
+    * That action computes this subtree and populates the cache along
+    * the way, saving the count job [[stageToDisk]] would run. Use
+    * [[stageToDisk]] instead when the first read touches only some
+    * partitions or is left to an arbitrary downstream consumer.
     * Safe even if the consumer's plan scans this frame from several
     * branches: cache population goes through the BlockManager's
     * get-or-compute block locking (one task computes a partition,

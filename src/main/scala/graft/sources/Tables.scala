@@ -46,13 +46,71 @@ object Tables {
         }
       }.toMap).getOrElse(Map.empty)
 
+  /** Parquet read with a pinned schema: `spark.read.parquet(path)` runs
+    * one schema-inference job on every call, `.schema(s)` runs none.
+    * The schema comes from [[pinnedSchema]], so only the first load of
+    * a file set (or the first after it changed) pays the inference job.
+    */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = pinnedSchema(spark, path)
+      .fold(spark.read.parquet(path))(s => spark.read.schema(s).parquet(path))
     tblSample.get(name).fold(df) { case (idCol, thr) =>
       import org.apache.spark.sql.functions._
       df.filter(substring(
         md5(concat(lit("vsample:"), col(idCol).cast("string"))), 1, 2)
         < lit(thr))
+    }
+  }
+
+  /** The session confs that change what parquet schema inference returns
+    * for the same bytes. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
+
+  private final case class Pin(
+      files: Seq[(String, Long, Long)], confs: Seq[Option[String]],
+      schema: StructType)
+
+  /** One pinned schema per table path, process-wide. */
+  private val pins = new java.util.concurrent.ConcurrentHashMap[String, Pin]()
+
+  /** Every file under a table path, recursively (a table is one parquet
+    * file or a directory of them). */
+  private def listing(spark: SparkSession, path: String)
+      : (org.apache.hadoop.conf.Configuration, Vector[org.apache.hadoop.fs.FileStatus]) = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new org.apache.hadoop.fs.Path(path)
+    val it = p.getFileSystem(conf).listFiles(p, true)
+    (conf, Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toVector)
+  }
+
+  /** The inferred schema of the parquet file set at `path`, inferred at
+    * most once per identity: every file's path, length and mtime, plus
+    * the [[inferenceConfs]] values. A file rewritten in place or a
+    * flipped conf misses and re-infers; a new session over unchanged
+    * files hits. The session itself is not part of the key — the schema
+    * is a function of the bytes and those confs only. None when the
+    * path does not exist, so the caller's plain read raises Spark's
+    * usual error.
+    */
+  private def pinnedSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val files =
+      try listing(spark, path)._2
+      catch { case _: java.io.FileNotFoundException => return None }
+    val ids = files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+    val confs = inferenceConfs.map(spark.conf.getOption)
+    val pin = pins.get(path)
+    if (pin != null && pin.files == ids && pin.confs == confs) Some(pin.schema)
+    else {
+      val schema = spark.read.parquet(path).schema
+      pins.put(path, Pin(ids, confs, schema))
+      Some(schema)
     }
   }
 
@@ -123,11 +181,8 @@ object Tables {
     // DuckDB oracle counts the sampled view — a real count() of the
     // sampled frame replaces the footer shortcut only in that mode
     if (tblSample.contains(name)) return load(spark, dir, name).count()
-    val conf = spark.sessionState.newHadoopConf()
-    val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val fs = path.getFileSystem(conf)
-    fs.listStatus(path)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+    val (conf, files) = listing(spark, s"$dir/$name.parquet")
+    files.filter(_.getPath.getName.endsWith(".parquet"))
       .map { f =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile
           .fromStatus(f, conf)

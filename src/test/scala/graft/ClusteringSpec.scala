@@ -92,4 +92,73 @@ class ClusteringSpec extends SparkSpecBase {
     assert(centres(0) > -101 && centres(0) < -97, s"low blob centre: ${centres(0)}")
     assert(centres(1) > 99 && centres(1) < 103, s"high blob centre: ${centres(1)}")
   }
+
+  /** Driver-side exact-integer Lloyd with portableFitAssign's contract:
+    * init = the k rows of smallest (md5(tag:id), id string), argmin of
+    * exact int64 squared distance with ties to the smallest cell,
+    * truncating division of the component sums, empty cells carried
+    * over. Also reports whether the run hit an argmin tie, an empty
+    * cell, and a negative sum the division truncates toward zero. */
+  private def referenceLloyd(rows: Seq[(Long, Array[Long])], k: Int, iters: Int,
+      tag: String): (Map[Long, Int], Boolean, Boolean, Boolean) = {
+    def md5(s: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    def dist(a: Array[Long], b: Array[Long]) =
+      a.indices.map(i => (a(i) - b(i)) * (a(i) - b(i))).sum
+    var tie, empty, truncated = false
+    def argmin(v: Array[Long], cents: Array[Array[Long]]): Int = {
+      val ds = cents.map(dist(v, _))
+      if (ds.count(_ == ds.min) > 1) tie = true
+      ds.indexOf(ds.min)
+    }
+    var cents = rows.sortBy { case (id, _) => (md5(s"$tag:$id"), id.toString) }
+      .take(k).map(_._2).toArray
+    for (_ <- 1 to iters) {
+      val cells = rows.map { case (_, v) => argmin(v, cents) }
+      cents = cents.indices.map { c =>
+        val members = rows.indices.filter(cells(_) == c).map(rows(_)._2)
+        if (members.isEmpty) { empty = true; cents(c) }
+        else cents(c).indices.map { i =>
+          val s = members.map(_(i)).reduce(Math.addExact(_, _))
+          if (s < 0 && s % members.size != 0) truncated = true
+          s / members.size
+        }.toArray
+      }.toArray
+    }
+    (rows.map { case (id, v) => id -> argmin(v, cents) }.toMap, tie, empty, truncated)
+  }
+
+  test("portableFitAssign matches a driver-side exact-integer Lloyd (ties, empty cell, negatives)") {
+    import org.apache.spark.sql.functions.col
+    def md5(s: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val ids = (1L to 40L).sortBy(id => (md5(s"km:$id"), id.toString))
+    // the two init rows of rank 0 and 1 share one vector, so every row
+    // ties between cells 0 and 1 in round 1 and cell 1 empties
+    val rows = ids.zipWithIndex.map { case (id, r) =>
+      id -> (if (r < 2) Array(-7L, 3L)
+             else Array((r * 37L) % 23 - 11, (r * 13L) % 7 - 3))
+    }
+    val (want, tie, empty, truncated) = referenceLloyd(rows, k = 4, iters = 3, tag = "km")
+    assert(tie && empty && truncated, "the frame must exercise ties, an empty cell and truncation")
+    val df = rows.map { case (id, v) => (id, v(0), v(1)) }.toDF("id", "a", "b")
+    val out = Clustering.portableFitAssign(df, "id", Seq(col("a"), col("b")), k = 4, iters = 3)
+    val got = out.collect()
+    assert(got.map(r => r.getLong(0) -> r.getInt(2)).toMap === want)
+    assert(got.map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap ===
+      rows.map { case (id, v) => id -> v.toSeq }.toMap)
+    spark.catalog.clearCache()
+  }
+
+  test("portableFitAssign: a component sum that overflows int64 fails the fit") {
+    import org.apache.spark.sql.functions.col
+    val big = Long.MaxValue / 2 + 1
+    val df = Seq((1L, big), (2L, big), (3L, big)).toDF("id", "a")
+    val e = intercept[Exception] {
+      Clustering.portableFitAssign(df, "id", Seq(col("a")), k = 1, iters = 1).collect()
+    }
+    spark.catalog.clearCache()
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]), e.toString)
+  }
 }

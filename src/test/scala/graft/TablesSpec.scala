@@ -1,6 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, StandardCopyOption}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{BinaryType, StringType}
 import graft.sources.Tables
 
 class TablesSpec extends SparkSpecBase {
@@ -118,6 +121,70 @@ class TablesSpec extends SparkSpecBase {
       Tables.documents(spark, Sf0001).filter($"n_chars" > 100).count())
     val e = Tables.embeddingsTyped(spark, Sf0001).head()
     assert(e.embedding.length === 64)
+  }
+
+  /** Writes `df` as the single parquet file `<dir>/t.parquet`, replacing
+    * it in place if it exists (same path, new length and mtime). */
+  private def writeTable(df: DataFrame, dir: Path): Unit = {
+    val tmp = Files.createTempDirectory("graft-pin-w").toString
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    Files.copy(part.toPath, dir.resolve("t.parquet"), StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  test("pinned reads carry the inferred schema of every star table") {
+    Tables.starTables.foreach { t =>
+      assert(Tables.load(spark, Sf0001, t).schema ===
+        spark.read.parquet(s"$Sf0001/$t.parquet").schema, t)
+    }
+  }
+
+  test("a second load of an unchanged table runs no Spark job, in any session") {
+    val dir = Files.createTempDirectory("graft-pin").toString
+    spark.range(10).write.parquet(s"$dir/t.parquet")
+    val (_, first) = JobCount(spark)(Tables.load(spark, dir, "t"))
+    assert(first >= 1, "the first load infers the schema")
+    val (again, jobs) = JobCount(spark)(Tables.load(spark, dir, "t"))
+    assert(jobs === 0)
+    assert(again.count() === 10)
+    val fresh = spark.newSession()
+    assert(JobCount(fresh)(Tables.load(fresh, dir, "t"))._2 === 0)
+  }
+
+  test("a table rewritten in place with an extra column is seen by the next load") {
+    val dir = Files.createTempDirectory("graft-pin")
+    writeTable(spark.range(5).toDF("id"), dir)
+    assert(Tables.load(spark, dir.toString, "t").columns.toSeq === Seq("id"))
+    writeTable(spark.range(5).toDF("id").withColumn("extra", lit(7L)), dir)
+    val df = Tables.load(spark, dir.toString, "t")
+    assert(df.columns.toSeq === Seq("id", "extra"))
+    assert(df.filter(col("extra") === 7L).count() === 5)
+  }
+
+  test("flipping a schema-inference conf re-infers the schema in a new session") {
+    // written without Spark's schema metadata (which Spark would read
+    // back instead of converting), so binaryAsString decides the type
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    val dir = Files.createTempDirectory("graft-pin").toString
+    val conf = spark.sessionState.newHadoopConf()
+    val schema = org.apache.parquet.schema.MessageTypeParser
+      .parseMessageType("message t { required binary b; }")
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+      new org.apache.hadoop.fs.Path(s"$dir/t.parquet"), conf))
+      .withType(schema).withConf(conf).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("b", "hi"))
+    finally w.close()
+    val asBinary = spark.newSession()
+    asBinary.conf.set("spark.sql.parquet.binaryAsString", "false")
+    assert(Tables.load(asBinary, dir, "t").schema("b").dataType === BinaryType)
+    val asString = spark.newSession()
+    asString.conf.set("spark.sql.parquet.binaryAsString", "true")
+    val df = Tables.load(asString, dir, "t")
+    assert(df.schema("b").dataType === StringType)
+    assert(df.head().getString(0) === "hi")
   }
 
   test("entry (flagship) returns rows on sf0.001") {

@@ -186,10 +186,19 @@ def _fail(name, why):
     fails.append((name, why))
     print(f"FAILING {name}: {why[:200]}", flush=True)
 
+passes = []
+rows_only_passes = []
+
+
+def _pass(name, detail):
+    """Record a pass and print its PASS line."""
+    passes.append(name)
+    print(f"PASS {name} ({detail})", flush=True)
+
 nodump = []
 for name, sql in sorted(oracle.items()):
     if name in resume_ok:
-        print(f"PASS {name} (resumed from prior log)")
+        _pass(name, "resumed from prior log")
         continue
     # Verify now always writes the FULL oracle map (so a restricted
     # re-dump can't demote sibling queries to rows-only checks); an
@@ -270,8 +279,7 @@ for name, sql in sorted(oracle.items()):
                     _fail(name, f"commutative checksum mismatch over {en} rows "
                                 f"({echk} != {wchk})")
                 else:
-                    print(f"PASS {name} ({en} rows, full-result commutative "
-                          f"checksum)", flush=True)
+                    _pass(name, f"{en} rows, full-result commutative checksum")
                 continue
             nw, ng = [cc.sql(
                 f"SELECT count(*) FROM read_parquet('{q}')").fetchone()[0]
@@ -303,7 +311,7 @@ for name, sql in sorted(oracle.items()):
                     _fail(name, f"value mismatch (duckdb EXCEPT ALL): "
                                         f"{d1} rows only in engine, {d2} only in oracle")
                 else:
-                    print(f"PASS {name} ({ng} rows, duckdb-side compare)", flush=True)
+                    _pass(name, f"{ng} rows, duckdb-side compare")
                 continue
             want = pd.read_parquet(tmp)
             os.remove(tmp)
@@ -331,7 +339,7 @@ for name, sql in sorted(oracle.items()):
                 f"row{i}: got {cg.loc[i].to_dict()} want {cw.loc[i].to_dict()}" for i in idx)
             _fail(name, f"value mismatch: {detail}")
         else:
-            print(f"PASS {name} ({len(got)} rows)", flush=True)
+            _pass(name, f"{len(got)} rows")
     except Exception as e:
         _fail(name, f"error: {e}")
 
@@ -340,7 +348,8 @@ rows_only = sorted(set(
 for name in rows_only:
     n = len(pd.read_parquet(f"{outdir}/{name}"))
     if n > 0:
-        print(f"PASS {name} (rows-only: {n} rows)")
+        _pass(name, f"rows-only: {n} rows")
+        rows_only_passes.append(name)
     else:  # _fail prints the live FAILING line; the canonical FAIL
         _fail(name, "rows-only check: 0 rows")  # line prints at the end
 
@@ -352,7 +361,10 @@ for name, why in fails:
     print(f"FAIL {name}: {why[:400]}")
 # machine-readable summary so scale-run callers can't mistake a
 # mostly-skipped compare for full coverage
-summary = {"n_pass_or_checked": len(oracle) - len(oracle_timeouts) - len(nodump),
+# counted from the outcomes: n_pass is every PASS line, n_rows_only the
+# passes that were only a rows-nonzero check (no oracle to hash-match)
+summary = {"n_pass": len(passes),
+           "n_rows_only": len(rows_only_passes),
            "n_fail": len(fails),
            "n_oracle_timeouts": len(oracle_timeouts),
            "oracle_timeouts": oracle_timeouts,
