@@ -210,6 +210,7 @@ object Bench {
       R(name, sec, err, firstSec, cpuS, runS, spillMb, stealS)
     }
     val sharedBuilds = graft.ops.BuildAttribution.drain()
+    val buildFailures = graft.ops.SharedBuilds.drainFailures()
     def jstr(s: String): String =
       "\"" + s.flatMap {
         case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
@@ -335,11 +336,14 @@ object Bench {
         s""""sf":${jstr(sfDir)}}"""
     // full detail (every query) for the repo / humans. shared_builds
     // (r17, additive, FILE ONLY): which query paid each session-shared
-    // build this run — the stdout line is unchanged.
+    // build this run; shared_build_failures: every background shared
+    // build that threw — the stdout line is unchanged.
     val sharedJson =
-      if (sharedBuilds.isEmpty) ""
-      else sharedBuilds.map { case (b, q) => s"${jstr(b)}:${jstr(q)}" }
-        .mkString(""","shared_builds":{""", ",", "}")
+      (if (sharedBuilds.isEmpty) ""
+       else sharedBuilds.map { case (b, q) => s"${jstr(b)}:${jstr(q)}" }
+         .mkString(""","shared_builds":{""", ",", "}")) +
+      buildFailures.map { case (b, e) => s"""{"build":${jstr(b)},"error":${jstr(e)}}""" }
+        .mkString(""","shared_build_failures":[""", ",", "]")
     val fullLine = {
       val l = line(qsFull, "")
       l.dropRight(1) + sharedJson + "}"

@@ -4,8 +4,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicReference
 
 /** Best-effort attribution of session-shared builds to the query that
-  * paid them (r16 verdict item 9): the PairFunnel/Similarity memo
-  * layers make later consumers read a first consumer's materialization,
+  * paid them (r16 verdict item 9): the [[SharedBuilds]] memo makes
+  * later consumers read a first consumer's materialization,
   * so per-query bench seconds are NOT standalone costs — q_provenance's
   * 0.3 s is real only because q_corpus_pipeline paid the enrich+funnel
   * build. Bench sets the current query name around each timed run;
@@ -25,20 +25,16 @@ object BuildAttribution {
 
   def clearContext(): Unit = current.set(null)
 
-  /** Called by the shared-build layers when a build actually EXECUTES
-    * (cache/memo misses only — hits cost the consumer nothing worth
+  /** Called by [[SharedBuilds.Build.record]] when a build actually
+    * EXECUTES (memo misses only — hits cost the consumer nothing worth
     * attributing).
     */
-  def recordBuild(build: String): Unit = {
+  private[ops] def recordBuild(build: String): Unit = {
     val q = current.get()
     if (q != null) { records.add((build, q)); () }
   }
 
   /** Drain all recorded (build, paidBy) pairs, first-payer order. */
-  def drain(): Seq[(String, String)] = {
-    val out = Seq.newBuilder[(String, String)]
-    var e = records.poll()
-    while (e != null) { out += e; e = records.poll() }
-    out.result()
-  }
+  def drain(): Seq[(String, String)] =
+    Iterator.continually(records.poll()).takeWhile(_ != null).toSeq
 }

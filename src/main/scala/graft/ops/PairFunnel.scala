@@ -1,8 +1,5 @@
 package graft.ops
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-standing near-dup pair funnel (r11 verdict item 4): the
@@ -40,14 +37,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * With staging on, the cached frame is a plain parquet scan, which no
   * cache hygiene can invalidate.
   *
-  * Key discipline: the caller's `tag` names the dataset snapshot (the
-  * sf dir in this harness). The in-process key additionally folds the
-  * docs plan's `semanticHash`, so a caller passing a filtered or
-  * otherwise different frame under the same tag gets a cache MISS
-  * instead of silently receiving the wrong pair set (r12 advisory).
-  * The persistent layer cannot see plans across JVMs, so it is guarded
-  * by a '''corpus fingerprint''' instead (r13 verdict item 4): row
-  * count + a commutative md5 checksum over `(id, length(text))` —
+  * The in-process layer is [[SharedBuilds]] (family
+  * [[SharedBuilds.Funnel]]); its key also covers the input plans and
+  * files. The caller's `tag` names the dataset snapshot (the sf dir in
+  * this harness). The persistent layer cannot see plans across JVMs,
+  * so it is guarded by a '''corpus fingerprint''' (r13 verdict item
+  * 4): row count + a commutative md5 checksum over `(id, length(text))` —
   * order/partitioning invariant, one column-pruned agg over the funnel
   * input — folded into the staged table's NAME. A caller staging a
   * CHANGED corpus under a reused tag therefore misses and builds its
@@ -62,23 +57,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Correctness: consumers get the IDENTICAL result the per-query build
   * produced in r11 — `Dedup.minhashNearDupPairs` is deterministic for a
   * given dataset — so result bytes are unchanged by sharing (the r12
-  * k300 bit-identity replay pins this). Concurrency: a per-key monitor
-  * serializes the one build; concurrent-session streams
-  * (ConcurrentBench) block on the first build then share it. Entries
-  * from stopped sessions are swept on every lookup, so long-lived
-  * multi-session processes don't accumulate pinned sessions and
-  * checkpoint blocks (r12 advisory).
+  * k300 bit-identity replay pins this).
   */
 object PairFunnel {
-  private val cache = new ConcurrentHashMap[String, DataFrame]()
-  private val locks = new ConcurrentHashMap[String, Object]()
-  private val builds = new AtomicLong(0L)
-
   /** Number of funnel builds actually executed (not served from either
     * cache layer) since JVM start — the spec's "no banding job ran"
     * witness.
     */
-  def buildsExecuted: Long = builds.get()
+  def buildsExecuted: Long = SharedBuilds.Funnel.executed
 
   /** Staging root: session conf `spark.graft.funnelDir`, falling back
     * to env `SPARK_GRAFT_FUNNEL_DIR`; empty/unset disables the
@@ -89,14 +75,6 @@ object PairFunnel {
       sys.env.getOrElse("SPARK_GRAFT_FUNNEL_DIR", ""))
     Option(v).map(_.trim).filter(_.nonEmpty)
   }
-
-  // The in-process key: session identity (frames are session-bound) +
-  // a digest of the docs PLAN (semanticHash — exprId-normalized, so
-  // two reads of the same table match while a filtered variant does
-  // not) + the snapshot/param identity shared with the persistent key.
-  private def key(df: DataFrame, parts: Any*): String =
-    (System.identityHashCode(df.sparkSession) +:
-      df.queryExecution.analyzed.semanticHash() +: parts).mkString("|")
 
   // The persistent key: snapshot tag + columns + params, digested to a
   // filesystem-safe name. Deliberately NO plan hash — it must be
@@ -148,74 +126,39 @@ object PairFunnel {
     f.delete(); ()
   }
 
-  /** Serve from the staging table if present; otherwise build, stage
-    * (when a root is configured) or eagerly checkpoint (when not), and
-    * serve. Runs under the per-key monitor of [[getOrBuild]]. The
-    * `fingerprint` thunk (see [[corpusFingerprint]]) is evaluated only
+  /** One build through both layers: `inputs` key the in-process
+    * [[SharedBuilds]] entry; `kind` + `params` (tag first) name the
+    * staged table. Serve from the staging table if present; otherwise
+    * build, stage (when a root is configured) or eagerly checkpoint
+    * (when not). The [[corpusFingerprint]] over `docs` is computed only
     * when a staging root is configured, and is part of the table name —
     * the cross-JVM verify-on-read the r13 verdict asked for: a reused
     * tag over changed data cannot resolve to the stale table.
     */
-  // attribution label: the persistent tableName folds only
-  // (tag, cols, params) — the raw-corpus and filtered-corpus funnels
-  // of one tag therefore share it, and the r17 shared_builds smoke
-  // run showed their records colliding on one JSON key. Fold a short
-  // digest of the IN-PROCESS key (which adds the input plan's
-  // semanticHash) so distinct builds get distinct labels.
-  private def attribLabel(name: String, inProcessKey: String): String =
-    f"${name}_k${inProcessKey.hashCode & 0xffffff}%06x"
-
-  private def materialize(spark: SparkSession, name: String,
-      attrib: String, fingerprint: => String, build: => DataFrame): DataFrame =
-    stagingRoot(spark) match {
-      case Some(root) =>
-        val dir = new java.io.File(root, s"$name-$fingerprint")
-        if (!dir.isDirectory) {
-          builds.incrementAndGet()
-          BuildAttribution.recordBuild(attrib)
-          val tmp = new java.io.File(root,
-            s"${dir.getName}.inprogress-${java.util.UUID.randomUUID()}")
-          build.write.mode("overwrite").parquet(tmp.getPath)
-          // atomic publish; a lost cross-process race reads the
-          // winner's (byte-identical) table and discards ours — with
-          // the fingerprint in the name, two processes racing on one
-          // name are by construction building the same corpus' funnel
-          if (!tmp.renameTo(dir)) deleteRecursively(tmp)
-        }
-        spark.read.parquet(dir.getPath)
-      case None =>
-        builds.incrementAndGet()
-        BuildAttribution.recordBuild(attrib)
-        build.localCheckpoint(true)
-    }
-
-  // The build runs OUTSIDE the map's bin lock: a labels build invokes
-  // the pairs build (a second cache key), and ConcurrentHashMap.compute
-  // throws "Recursive update" whenever the two keys happen to share a
-  // bin — which they do or don't per SESSION, since the key embeds the
-  // session's identity hash (caught by exactly such a lottery in an r12
-  // verify run). A per-key monitor keeps the build-once guarantee for
-  // concurrent streams; nesting is strictly labels → pairs, so the lock
-  // order is acyclic.
-  private def getOrBuild(k: String, build: => DataFrame): DataFrame = {
-    // sweep entries pinned by stopped sessions (their keys can never
-    // hit again — the key embeds the dead session's identity). Locks
-    // for in-flight builds are NOT swept: only keys with a (stopped)
-    // cache entry lose their lock object, so build-once holds.
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getValue.sparkSession.sparkContext.isStopped) {
-        it.remove(); locks.remove(e.getKey); ()
+  private def shared(kind: String, inputs: Seq[DataFrame], docs: DataFrame,
+      idCol: String, textCol: String, params: Any*)(build: => DataFrame): DataFrame = {
+    val name = tableName(kind, params: _*)
+    SharedBuilds.getOrBuild(SharedBuilds.Funnel, name, inputs, params: _*) { b =>
+      stagingRoot(docs.sparkSession) match {
+        case Some(root) =>
+          val dir = new java.io.File(root,
+            s"$name-${corpusFingerprint(docs, idCol, textCol)}")
+          if (!dir.isDirectory) {
+            b.record()
+            val tmp = new java.io.File(root,
+              s"${dir.getName}.inprogress-${java.util.UUID.randomUUID()}")
+            build.write.mode("overwrite").parquet(tmp.getPath)
+            // atomic publish; a lost cross-process race reads the
+            // winner's (byte-identical) table and discards ours — with
+            // the fingerprint in the name, two processes racing on one
+            // name are by construction building the same corpus' funnel
+            if (!tmp.renameTo(dir)) deleteRecursively(tmp)
+          }
+          docs.sparkSession.read.parquet(dir.getPath)
+        case None =>
+          b.record()
+          build.localCheckpoint(true)
       }
-    }
-    val cached = cache.get(k)
-    if (cached != null) return cached
-    val lock = locks.computeIfAbsent(k, _ => new Object)
-    lock.synchronized {
-      val c2 = cache.get(k)
-      if (c2 != null) c2
-      else { val v = build; cache.put(k, v); v }
     }
   }
 
@@ -223,16 +166,12 @@ object PairFunnel {
     * per snapshot: served from the cross-session staging table when
     * `spark.graft.funnelDir` is set, else once per (session, tag,
     * params). `tag` MUST identify the dataset snapshot (the sf dir in
-    * this harness) — see the key-discipline scaladoc above.
+    * this harness) — see the persistent-layer scaladoc above.
     */
   def nearDupPairs(docs: DataFrame, textCol: String, idCol: String, tag: String,
       p: Dedup.MinhashParams = Dedup.MinhashParams()): DataFrame = {
-    val k = key(docs, "pairs", tag, textCol, idCol, p)
-    val name = tableName("pairs", tag, textCol, idCol, p)
-    getOrBuild(k,
-      materialize(docs.sparkSession, name, attribLabel(name, k),
-        corpusFingerprint(docs, idCol, textCol),
-        Dedup.minhashNearDupPairs(docs, textCol, idCol, p)))
+    shared("pairs", Seq(docs), docs, idCol, textCol, tag, textCol, idCol, p)(
+      Dedup.minhashNearDupPairs(docs, textCol, idCol, p))
   }
 
   /** Smallest-id component labels over [[nearDupPairs]], built once per
@@ -241,12 +180,8 @@ object PairFunnel {
     */
   def componentLabels(docs: DataFrame, textCol: String, idCol: String, tag: String,
       p: Dedup.MinhashParams = Dedup.MinhashParams()): DataFrame = {
-    val k = key(docs, "labels", tag, textCol, idCol, p)
-    val name = tableName("labels", tag, textCol, idCol, p)
-    getOrBuild(k,
-      materialize(docs.sparkSession, name, attribLabel(name, k),
-        corpusFingerprint(docs, idCol, textCol),
-        Dedup.componentMinLabels(nearDupPairs(docs, textCol, idCol, tag, p))))
+    shared("labels", Seq(docs), docs, idCol, textCol, tag, textCol, idCol, p)(
+      Dedup.componentMinLabels(nearDupPairs(docs, textCol, idCol, tag, p)))
   }
 
   /** Verified shared-substring spans ([[Dedup.sharedSubstringSpans]])
@@ -260,35 +195,25 @@ object PairFunnel {
     */
   def sharedSpans(docs: DataFrame, textCol: String, idCol: String, tag: String,
       minLen: Int = 40, anchorStride: Int = 8): DataFrame = {
-    val k = key(docs, "spans", tag, textCol, idCol, minLen, anchorStride)
-    val name = tableName("spans", tag, textCol, idCol, minLen, anchorStride)
-    getOrBuild(k,
-      materialize(docs.sparkSession, name, attribLabel(name, k),
-        corpusFingerprint(docs, idCol, textCol),
-        Dedup.sharedSubstringSpans(docs, textCol, idCol, minLen, anchorStride)))
+    shared("spans", Seq(docs), docs, idCol, textCol,
+        tag, textCol, idCol, minLen, anchorStride)(
+      Dedup.sharedSubstringSpans(docs, textCol, idCol, minLen, anchorStride))
   }
 
   /** Contamination pairs ([[Dedup.contaminationPairsFused]]) for a
     * (corpus, eval) split of `docs`, built once per snapshot (r16):
     * the flag query and the remove query run the identical fused scan.
-    * The in-process key folds BOTH side plans' semantic hashes (a
-    * different split under the same tag must miss, per the r12 key
-    * discipline); the persistent fingerprint is over the PARENT frame,
-    * which covers every row of either side.
+    * The in-process key covers all three frames (a different split
+    * under the same tag must miss); the persistent fingerprint is over
+    * the PARENT frame, which covers every row of either side.
     */
   def contaminationPairs(docs: DataFrame, corpus: DataFrame,
       evalDocs: DataFrame, textCol: String, idCol: String, tag: String,
       shingleN: Int, threshold: Double): DataFrame = {
-    val k = key(docs, "contam",
-      corpus.queryExecution.analyzed.semanticHash(),
-      evalDocs.queryExecution.analyzed.semanticHash(),
-      tag, textCol, idCol, shingleN, threshold)
-    val name = tableName("contam", tag, textCol, idCol, shingleN, threshold)
-    getOrBuild(k,
-      materialize(docs.sparkSession, name, attribLabel(name, k),
-        corpusFingerprint(docs, idCol, textCol),
-        Dedup.contaminationPairsFused(corpus, evalDocs, textCol, idCol,
-          shingleN, threshold)))
+    shared("contam", Seq(docs, corpus, evalDocs), docs, idCol, textCol,
+        tag, textCol, idCol, shingleN, threshold)(
+      Dedup.contaminationPairsFused(corpus, evalDocs, textCol, idCol,
+        shingleN, threshold))
   }
 
   /** Generic session-shared materialization (r16): same two cache
@@ -297,23 +222,18 @@ object PairFunnel {
     * currently the corpus pipeline's enriched+filtered corpus (three
     * regex kernels over every document), which q_corpus_pipeline and
     * q_provenance previously each rebuilt. `docsForKey` is the SOURCE
-    * frame the build reads (its plan hash keys the in-process entry;
-    * its (id, length(text)) fingerprint guards the persistent table),
+    * frame the build reads (it keys the in-process entry; its
+    * (id, length(text)) fingerprint guards the persistent table),
     * and `build` must be a pure deterministic function of it.
     */
   def sharedBuild(docsForKey: DataFrame, kind: String, tag: String,
       idCol: String, textCol: String, params: Seq[Any])(
-      build: => DataFrame): DataFrame = {
-    val k = key(docsForKey, (kind +: tag +: params): _*)
-    val name = tableName(kind, (tag +: params): _*)
-    getOrBuild(k,
-      materialize(docsForKey.sparkSession, name, attribLabel(name, k),
-        corpusFingerprint(docsForKey, idCol, textCol), build))
-  }
+      build: => DataFrame): DataFrame =
+    shared(kind, Seq(docsForKey), docsForKey, idCol, textCol, (tag +: params): _*)(build)
 
   /** Test hook: drop every cached funnel (specs that mutate the
     * underlying dataset between runs call this). Staging tables on
     * disk are NOT touched — delete the directory to invalidate those.
     */
-  def invalidateAll(): Unit = { cache.clear(); locks.clear() }
+  def invalidateAll(): Unit = SharedBuilds.invalidate()
 }

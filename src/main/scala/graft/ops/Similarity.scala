@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.exprs
@@ -21,59 +21,27 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = exprs.cosine_f(a, b)
 
-  // -------------------------------------------------- ANN fit memo (r16)
-  // Session-standing memo for the driver-side ANN fit artifacts
-  // (quantizer codebooks, IVF centroids + probe radii) and the exact
-  // brute-force qrels the recall/sweep/grid queries measure against.
-  // The ANN surface runs the IDENTICAL portable fit several times per
-  // session — each a fit-sample collect job plus ~0.5-1 s of
-  // single-threaded driver Lloyd at the bench fit cap, and the qrels
-  // an extra corpus scan per consumer — with zero result difference
-  // (the r9 integer fits are deterministic). Same key discipline as
-  // PairFunnel's in-process layer: session identity + the input
-  // plans' semantic hashes + every fit parameter; entries from
-  // stopped sessions are swept on lookup; a per-key monitor keeps
-  // build-once under concurrent sessions (ConcurrentBench).
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, AnyRef)]()
-  private val memoLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private val memoBuilds = new java.util.concurrent.atomic.AtomicLong(0L)
+  // ANN fit memo (r16): the ANN surface runs the IDENTICAL portable
+  // fit (a fit-sample collect + driver Lloyd) and the exact qrels (a
+  // corpus scan) several times per session with zero result difference
+  // — the r9 integer fits are deterministic — so each is a
+  // [[SharedBuilds]] build, once per session and input.
 
   /** Number of memoized fit builds actually executed (not served from
     * the memo) since JVM start — the spec's "no second fit ran"
     * witness, mirroring [[PairFunnel.buildsExecuted]].
     */
-  def fitBuildsExecuted: Long = memoBuilds.get()
-  private def memoized[T <: AnyRef](spark: SparkSession, parts: Seq[Any])(
-      build: => T): T = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getValue._1.sparkContext.isStopped) {
-        it.remove(); memoLocks.remove(e.getKey); ()
-      }
-    }
-    val k = (System.identityHashCode(spark) +: parts).mkString("|")
-    val hit = memo.get(k)
-    if (hit != null) return hit._2.asInstanceOf[T]
-    val lock = memoLocks.computeIfAbsent(k, _ => new Object)
-    lock.synchronized {
-      val h2 = memo.get(k)
-      if (h2 != null) h2._2.asInstanceOf[T]
-      else {
-        memoBuilds.incrementAndGet()
-        graft.ops.BuildAttribution.recordBuild(
-          s"annfit_${parts.headOption.getOrElse("?")}")
-        val v = build; memo.put(k, (spark, v)); v
-      }
-    }
-  }
+  def fitBuildsExecuted: Long = SharedBuilds.Fit.executed
 
-  /** Test hook (mirrors [[PairFunnel.invalidateAll]]): specs that
-    * rewrite a dataset under an unchanged plan drop the fit memo.
+  private def memoized[T <: AnyRef](name: String, inputs: Seq[DataFrame],
+      params: Any*)(build: => T): T =
+    SharedBuilds.getOrBuild(SharedBuilds.Fit, s"annfit_$name", inputs,
+      params: _*) { b => b.record(); build }
+
+  /** Test hook (mirrors [[PairFunnel.invalidateAll]]; both clear the
+    * one [[SharedBuilds]] memo).
     */
-  def invalidateMemo(): Unit = { memo.clear(); memoLocks.clear() }
+  def invalidateMemo(): Unit = SharedBuilds.invalidate()
 
   def hyperplaneSignature(vec: Column, numPlanes: Int, dim: Int, seed: Long): Column =
     exprs.hyperplane_sig(vec, numPlanes, dim, seed)
@@ -109,10 +77,8 @@ object Similarity {
       corpus: DataFrame, corpusId: String, corpusVec: String,
       queries: DataFrame, queryId: String, queryVec: String,
       k: Int): DataFrame =
-    memoized(corpus.sparkSession, Seq("brute",
-        corpus.queryExecution.analyzed.semanticHash(),
-        queries.queryExecution.analyzed.semanticHash(),
-        corpusId, corpusVec, queryId, queryVec, k)) {
+    memoized("brute", Seq(corpus, queries),
+        corpusId, corpusVec, queryId, queryVec, k) {
       bruteForceTopK(corpus, corpusId, corpusVec, queries, queryId,
         queryVec, k).localCheckpoint(true)
     }
@@ -342,9 +308,8 @@ object Similarity {
     // per consumer. Deterministic integer fit, so sharing changes no
     // result bytes.
     val fitRes =
-      memoized[(Array[Array[Long]], Map[Int, Long])](corpus.sparkSession,
-        Seq("ivffit", vecs.queryExecution.analyzed.semanticHash(),
-          numCells, seed, fitFraction, fitMaxIter)) {
+      memoized[(Array[Array[Long]], Map[Int, Long])]("ivffit", Seq(vecs),
+          numCells, seed, fitFraction, fitMaxIter) {
     val sampled = capFitSample(
       md5FitDraw(vecs, "neighbor_id", fitFraction, "ivffit"), "neighbor_id")
     // portable order (md5, id-as-string): the md5 runs over the string
@@ -712,9 +677,8 @@ object Similarity {
       .withColumn("nq", exprs.quant_norm20(col("cv")))
     // memoized (r16): q_ann_pq and its recall query fit the identical
     // codebook — one sample collect + one driver Lloyd per session
-    val cb = memoized(corpus.sparkSession, Seq("pqcb",
-        vecs.queryExecution.analyzed.semanticHash(),
-        m, codebookSize, fitFraction, fitIters)) {
+    val cb = memoized("pqcb", Seq(vecs),
+        m, codebookSize, fitFraction, fitIters) {
       val sampled = capFitSample(
         md5FitDraw(vecs, "neighbor_id", fitFraction, "pqfit"), "neighbor_id")
       val fitRows = collectFitRowsQ(sampled, "neighbor_id", "nq", "pqinit")
@@ -801,9 +765,8 @@ object Similarity {
     // grid) fit the identical codebook PAIR — one sample collect + two
     // driver Lloyds per session instead of four of each
     val cbs =
-      memoized[(Array[Long], Array[Long])](corpus.sparkSession,
-        Seq("ivfpqcb", vecs.queryExecution.analyzed.semanticHash(),
-          numCells, m, codebookSize, fitFraction, fitIters)) {
+      memoized[(Array[Long], Array[Long])]("ivfpqcb", Seq(vecs),
+          numCells, m, codebookSize, fitFraction, fitIters) {
     val sampled = capFitSample(
       md5FitDraw(vecs, "neighbor_id", fitFraction, "ivfpqfit"), "neighbor_id")
     val fitRows = collectFitRowsQ(sampled, "neighbor_id", "nq", "ivfpqinit")
