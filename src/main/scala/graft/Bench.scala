@@ -103,7 +103,7 @@ object Bench {
     final case class R(name: String, sec: Double, err: Option[String],
         firstSec: Option[Double] = None,
         cpuS: Double = 0.0, runS: Double = 0.0, spillMb: Double = 0.0,
-        stealS: Double = 0.0)
+        stealS: Double = 0.0, compiles: Long = 0L)
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -155,9 +155,16 @@ object Bench {
       // readable as "rides the build <query X> paid" instead of
       // looking like a standalone cost. stdout line unchanged.
       graft.ops.BuildAttribution.setContext(name)
-      def once(): (Double, Option[String], Double, Double, Double, Double) = {
+      // generated-code compilations in the timed region: the count of
+      // Spark's codegen compile-time histogram (cache misses only). The
+      // histogram is JVM-wide, not per query: compiles of background
+      // builds (SharedBuilds.inBackground, the ANN prefetch) land on
+      // whichever query is timed while they run.
+      def compiles(): Long =
+        org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      def once(): (Double, Option[String], Double, Double, Double, Double, Long) = {
         val cpu0 = cpuNs.get(); val run0 = runMs.get(); val sp0 = spillB.get()
-        val st0 = stealJiffies()
+        val st0 = stealJiffies(); val cc0 = compiles()
         val t0 = System.nanoTime()
         val err =
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
@@ -165,6 +172,7 @@ object Bench {
             Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
           }
         val sec = (System.nanoTime() - t0) / 1e9
+        val cc = compiles() - cc0
         // several queries persist() intermediates; clearing between
         // queries (outside the timed region) keeps timings isolated.
         // localCheckpoint blocks are NOT cache entries — ContextCleaner
@@ -190,9 +198,9 @@ object Bench {
         (sec, err,
           (cpuNs.get() - cpu0) / 1e9, (runMs.get() - run0) / 1e3,
           (spillB.get() - sp0) / 1048576.0,
-          (stealJiffies() - st0) / 100.0)
+          (stealJiffies() - st0) / 100.0, cc)
       }
-      var (sec, err, cpuS, runS, spillMb, stealS) = once()
+      var (sec, err, cpuS, runS, spillMb, stealS, cc) = once()
       var firstSec: Option[Double] = None
       val wantsRetry = err.isEmpty &&
         base.get(name).exists { case (b, _) => sec > 1.5 * b && sec - b > 0.5 }
@@ -201,13 +209,13 @@ object Bench {
         retriesLeft -= 1
         nRetried += 1
         firstSec = Some(sec)
-        val (sec2, err2, cpu2, run2, sp2, st2) = once()
+        val (sec2, err2, cpu2, run2, sp2, st2, cc2) = once()
         if (err2.isEmpty && sec2 < sec) {
-          sec = sec2; cpuS = cpu2; runS = run2; spillMb = sp2; stealS = st2
+          sec = sec2; cpuS = cpu2; runS = run2; spillMb = sp2; stealS = st2; cc = cc2
         }
       }
       graft.ops.BuildAttribution.clearContext()
-      R(name, sec, err, firstSec, cpuS, runS, spillMb, stealS)
+      R(name, sec, err, firstSec, cpuS, runS, spillMb, stealS, cc)
     }
     val sharedBuilds = graft.ops.BuildAttribution.drain()
     val buildFailures = graft.ops.SharedBuilds.drainFailures()
@@ -220,7 +228,8 @@ object Bench {
     val qsFull = results.map { r =>
       val spill = if (r.spillMb > 0.05) s""","spill_mb":${fmt(r.spillMb)}""" else ""
       val steal = if (r.stealS > 0.05) s""","steal_s":${fmt(r.stealS)}""" else ""
-      val cpu = s""","cpu_s":${fmt(r.cpuS)},"run_s":${fmt(r.runS)}$spill$steal"""
+      val cpu = s""","cpu_s":${fmt(r.cpuS)},"run_s":${fmt(r.runS)}$spill$steal""" +
+        s""","codegen_compiles":${r.compiles}"""
       val v = (r.err, r.firstSec) match {
         case (Some(m), _) => s"""{"sec":${fmt(r.sec)},"err":${jstr(m)}}"""
         case (None, Some(f)) =>

@@ -98,6 +98,15 @@ object BucketRefine {
     when(heavy, array(blocks: _*)).otherwise(array(lit(-1L)))
   }
 
+  /** [[subkeys]] of a heavy bucket row on the driver: one key per
+    * ⌈n/2⌉ block, (block index, block bytes) packed exactly, so equal
+    * keys mean equal blocks. */
+  def blockKeys(dg: Array[Byte]): Seq[Long] =
+    (0 until (dg.length + 1) / 2).map { k =>
+      val lo = if (2 * k + 1 < dg.length) dg(2 * k + 1) & 0xff else 0
+      (k.toLong << 16) | ((dg(2 * k) & 0xff) << 8) | lo
+    }
+
   /** Expected fraction of TRUE τ-pairs dropped by width-`w` block
     * re-keying under the probabilistic full-digest anchor: each byte is
     * one MinHash value (agrees w.p. ≥ τ), blocks are byte-disjoint so

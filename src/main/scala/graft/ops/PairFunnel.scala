@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Session-standing near-dup pair funnel (r11 verdict item 4): the
   * verified MinHash pair set and its connected-component labels are
@@ -157,7 +159,16 @@ object PairFunnel {
           docs.sparkSession.read.parquet(dir.getPath)
         case None =>
           b.record()
-          build.localCheckpoint(true)
+          // a build that is already a checkpoint scan (minhashNearDupPairs'
+          // eager checkpoint) or a local relation (a driver-side build)
+          // survives clearCache as it is; checkpointing it again would
+          // only cost a job
+          val built = build
+          built.queryExecution.logical match {
+            case r: LogicalRDD if r.rdd.isCheckpointed => built
+            case _: LocalRelation => built
+            case _ => built.localCheckpoint(true)
+          }
       }
     }
   }

@@ -203,42 +203,6 @@ object Similarity {
     */
   private[graft] val MaxFitSample: Long = 100000L
 
-  /** Upper bound on a frame's row count derivable WITHOUT a job: when
-    * the plan is only row-preserving-or-filtering operators over
-    * parquet scans, the summed footer record counts bound the result.
-    * Conservative — any operator that could EXPAND rows (join,
-    * explode, union of unknowns) returns None and the caller falls
-    * back to a real count.
-    */
-  private def planRowBound(df: DataFrame): Option[Long] = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    def walk(p: LogicalPlan): Option[Long] = p match {
-      case Project(_, c) => walk(c)
-      case Filter(_, c) => walk(c)
-      case SubqueryAlias(_, c) => walk(c)
-      case l: LogicalRelation => l.relation match {
-        case fs: HadoopFsRelation =>
-          try {
-            val conf = df.sparkSession.sessionState.newHadoopConf()
-            var n = 0L
-            fs.location.inputFiles.foreach { f =>
-              if (f.endsWith(".parquet")) {
-                val in = org.apache.parquet.hadoop.util.HadoopInputFile
-                  .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-                val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-                try n += r.getRecordCount finally r.close()
-              }
-            }
-            Some(n)
-          } catch { case _: Throwable => None }
-        case _ => None
-      }
-      case _ => None
-    }
-    walk(df.queryExecution.optimizedPlan)
-  }
-
   private[graft] def capFitSample(
       sel: DataFrame, idCol: String,
       maxFit: Long = MaxFitSample): DataFrame = {
@@ -250,7 +214,7 @@ object Similarity {
     // job each fit previously paid. At scale the bound exceeds maxFit
     // and the exact count (which the portable md5 threshold folds
     // into the RESULT) still runs.
-    if (planRowBound(sel).exists(_ <= maxFit)) return sel
+    if (graft.sources.Tables.footerBound(sel).exists(_.rows <= maxFit)) return sel
     val cnt = sel.count()
     if (cnt <= maxFit) sel
     else {

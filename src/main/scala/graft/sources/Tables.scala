@@ -182,13 +182,54 @@ object Tables {
     // sampled frame replaces the footer shortcut only in that mode
     if (tblSample.contains(name)) return load(spark, dir, name).count()
     val (conf, files) = listing(spark, s"$dir/$name.parquet")
-    files.filter(_.getPath.getName.endsWith(".parquet"))
-      .map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(f, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
+    footerSums(files.filter(_.getPath.getName.endsWith(".parquet"))
+      .map(f => org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))).rows
+  }
+
+  /** What parquet footers prove about a frame without a job: at most
+    * `rows` rows, whose uncompressed row groups total `bytes`. */
+  final case class FooterBound(rows: Long, bytes: Long)
+
+  /** Summed record counts and uncompressed row-group sizes of `files`. */
+  private def footerSums(files: Seq[org.apache.parquet.io.InputFile]): FooterBound =
+    files.foldLeft(FooterBound(0L, 0L)) { (acc, in) =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try {
+        var bytes = 0L
+        r.getRowGroups.forEach(g => bytes += g.getTotalByteSize)
+        FooterBound(acc.rows + r.getRecordCount, acc.bytes + bytes)
+      } finally r.close()
+    }
+
+  /** Upper bound on a frame's rows (and their uncompressed bytes)
+    * derivable WITHOUT a job: when the plan is only
+    * row-preserving-or-filtering operators over one parquet scan, the
+    * summed footers of its files bound the result. Conservative — any
+    * operator that could EXPAND rows (join, explode, union) or any
+    * other source returns None, and the caller falls back to a real
+    * count or the distributed path.
+    */
+  def footerBound(df: DataFrame): Option[FooterBound] = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    def walk(p: LogicalPlan): Option[FooterBound] = p match {
+      case Project(_, c) => walk(c)
+      case Filter(_, c) => walk(c)
+      case SubqueryAlias(_, c) => walk(c)
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
+          try {
+            val conf = df.sparkSession.sessionState.newHadoopConf()
+            Some(footerSums(fs.location.inputFiles.toSeq.map(f =>
+              org.apache.parquet.hadoop.util.HadoopInputFile
+                .fromPath(new org.apache.hadoop.fs.Path(f), conf))))
+          } catch { case scala.util.control.NonFatal(_) => None }
+        case _ => None
+      }
+      case _ => None
+    }
+    walk(df.queryExecution.optimizedPlan)
   }
 
   /** Typed rows for the corpus tables — `Dataset[T]` with case-class

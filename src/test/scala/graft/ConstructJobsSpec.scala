@@ -28,4 +28,18 @@ class ConstructJobsSpec extends SparkSpecBase {
     val got = budget.map { case (q, _) => q -> constructJobs(q) }
     assert(got === budget)
   }
+
+  /** The curation pair in one session: the first builds the near-dup
+    * funnel and its labels, the second is a memo hit on them. */
+  private def curationJobs(): Seq[(String, Int)] = {
+    val s = spark.newSession()
+    try Seq("q_component_labels", "q_dedup_keep_best").map(q =>
+      q -> JobCount(s)(SparkEntry.queries(q)(s, Sf0001))._2)
+    finally s.catalog.clearCache()
+  }
+
+  test("warm construct jobs of the curation pair at sf0.001") {
+    curationJobs() // warm the loads
+    assert(curationJobs() === Seq("q_component_labels" -> 5, "q_dedup_keep_best" -> 0))
+  }
 }

@@ -86,7 +86,7 @@ class PairFunnelStagingSpec extends SparkSpecBase {
     PairFunnel.invalidateAll()
   }
 
-  test("staging off: pairs AND labels are eager checkpoints that survive clearCache") {
+  test("staging off: pairs are an eager checkpoint, labels a local relation, both survive clearCache") {
     PairFunnel.invalidateAll()
     val s = spark.newSession() // no funnelDir conf
     val docs = corpus(s)
@@ -94,15 +94,18 @@ class PairFunnelStagingSpec extends SparkSpecBase {
     val l = PairFunnel.componentLabels(docs, "text", "doc_id", "ckpt-spec")
     // an eager localCheckpoint's analyzed plan is a LogicalRDD over the
     // checkpointed RDD — not the funnel plan (which clearCache could
-    // force to recompute by dropping its internal persist)
-    def isCheckpointScan(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.analyzed.collectLeaves().forall(
-        _.getClass.getSimpleName == "LogicalRDD")
-    assert(isCheckpointScan(p), "pairs must be an eager checkpoint (r12 advisory)")
-    assert(isCheckpointScan(l), "labels must be an eager checkpoint")
+    // force to recompute by dropping its internal persist). The labels
+    // of a pair set under the local-finish bound are built on the
+    // driver: a local relation, which holds its rows in the plan.
+    def leavesAre(df: org.apache.spark.sql.DataFrame, leaf: String): Boolean =
+      df.queryExecution.analyzed.collectLeaves().forall(_.getClass.getSimpleName == leaf)
+    assert(leavesAre(p, "LogicalRDD"), "pairs must be an eager checkpoint (r12 advisory)")
+    assert(leavesAre(l, "LocalRelation"), "labels must be a local relation")
     val before = pairSet(p)
+    val labelsBefore = labelSet(l)
     s.catalog.clearCache()
     assert(pairSet(p) === before)
+    assert(labelSet(l) === labelsBefore)
     PairFunnel.invalidateAll()
   }
 
