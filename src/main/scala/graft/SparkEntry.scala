@@ -1630,8 +1630,9 @@ object SparkEntry {
     // the tiebreak), composing the closure labels with the quality
     // kernel. One max(struct) per component, no window.
     "q_dedup_keep_best" -> ((s, dir) => {
-      // spread: the quality kernel runs at the scan otherwise — one
-      // task on a single-row-group file. The funnel gets the UNSPREAD
+      // spread above Tables.SpreadMinBytes: the quality kernel runs at
+      // the scan otherwise — one task on a single-row-group file. Below
+      // it the scan's one task is no slower. The funnel gets the UNSPREAD
       // plan: minhashNearDupPairs spreads internally, and the funnel
       // cache key embeds the docs plan's semanticHash — passing the
       // spread frame here forked a second, byte-identical raw-corpus
@@ -1765,7 +1766,7 @@ object SparkEntry {
     // strings shuffled); the anti-join runs on distinct (source, gram)
     // rows, so cost is vocabulary-sized. Exact basis points.
     "q_novelty" -> ((s, dir) => {
-      val docs = Tables.spreadForKernel(Tables.documents(s, dir))
+      val docs = Tables.roundRobinSpread(Tables.documents(s, dir))
         .filter(length(col("text")) >= 12)
       val grams = (side: DataFrame) => side.select(col("source"),
         explode(array_distinct(
@@ -2259,7 +2260,7 @@ object SparkEntry {
     // misparsed offset anywhere in the walk hash-mismatches.
     "q_media_dims" -> ((s, dir) => {
       val media = Multimodal.mediaWithHeaders(
-        s, Tables.spreadForKernel(Tables.documents(s, dir)))
+        s, Tables.roundRobinSpread(Tables.documents(s, dir)))
       Multimodal.decodeMedia(s, media).toDF()
         .select(col("media_id"), col("fmt"), col("width"), col("height"),
           col("channels"), col("sample_rate"), col("n_samples"), col("n_bytes"))
@@ -2329,9 +2330,9 @@ object SparkEntry {
     // {-1, 0, +1} on exact integer counts, combined by the one-step
     // agreement-weighted label model (weights = micro-unit agreement
     // with the unweighted majority over each LF's coverage). One text
-    // scan for votes, a 2K-counter combinable agg broadcast back, one
-    // labeling pass — and every number is exact, so the whole label
-    // model carries a DuckDB oracle.
+    // scan for votes, a 2K-counter combinable agg collected as literal
+    // weights, one labeling pass — and every number is exact, so the
+    // whole label model carries a DuckDB oracle.
     "q_weak_labels" -> ((s, dir) =>
       graft.ops.WeakLabels.weakLabels(Tables.documents(s, dir))),
 
@@ -2997,8 +2998,8 @@ object SparkEntry {
     // per appended token) — and round 3 recomputed round 1's merge
     // because nothing was staged. Three fixes, result-identical:
     // (a) spread the token stream across the session's cores once
-    //     (spreadForKernel round-robin — a no-op on a multi-split
-    //     100 TB table) with only the text column in the exchange;
+    //     (roundRobinSpread — a no-op on a multi-split 100 TB table)
+    //     with only the text column in the exchange;
     // (b) the greedy merge is now linear: match positions → selected
     //     starts (a fold over the handful of MATCHES, not every token:
     //     a match is merged iff it is not immediately consumed by the
@@ -3045,7 +3046,7 @@ object SparkEntry {
             |    else array(element_at(ws, i)) end))
             |end""".stripMargin).as("ws"))
       val t1 = graft.ops.Staging.stageToDisk(
-        Tables.spreadForKernel(Tables.documents(s, dir).select(col("text")))
+        Tables.roundRobinSpread(Tables.documents(s, dir).select(col("text")))
           .select(split(col("text"), " ").as("ws")))
       val b1 = best(pairCounts(t1))
       val t2 = graft.ops.Staging.stageToDisk(merged(t1, b1))
@@ -3201,7 +3202,7 @@ object SparkEntry {
     // doc_id (the q_embed_neardup precedent) — the detector is
     // exercised on a mix where candidates ≠ valid.
     "q_pii_luhn" -> ((s, dir) => {
-      val planted = Tables.spreadForKernel(Tables.documents(s, dir))
+      val planted = Tables.roundRobinSpread(Tables.documents(s, dir))
         .withColumn("t2", concat(col("text"),
           when(col("doc_id") % 7 === 1, lit(" card 4532015112830366"))
             .when(col("doc_id") % 7 === 2, lit(" card 4532015112830367"))
@@ -3233,7 +3234,7 @@ object SparkEntry {
       val aggs = count(lit(1)).as("n_docs") +:
         ts.map(t => sum(when(col("qm") >= t, 1L).otherwise(0L)).as(s"k_$t"))
       val stacked = ts.map(t => s"${t}L, k_$t").mkString(", ")
-      Tables.spreadForKernel(Tables.documents(s, dir))
+      Tables.roundRobinSpread(Tables.documents(s, dir))
         .select(col("source"),
           round(TextAnalysis.qualityScore(col("text")) * 10000).cast("long").as("qm"))
         .groupBy(col("source"))
@@ -3687,8 +3688,8 @@ object SparkEntry {
       // exact verify decide per pair, so the order affects candidate
       // COUNT only, never results (see HeavyRankOrder's scaladoc; df
       // probe: vocab 131M, df≥64 tail 1.4M, max df 778 at 5M docs).
-      // The sample filter pushes below spreadForKernel's round-robin,
-      // so only the ~5% sample's text ever shuffles here.
+      // The sample filter pushes below roundRobinSpread's exchange, so
+      // only the ~5% sample's text ever shuffles here.
       // md5 sample, NOT pmod(xxhash64(doc_id), 20) (r14): the xxhash64
       // form ALIASED with this corpus — synthetic text whose word
       // choices derive from hash-mod arithmetic over the doc id makes
@@ -3705,7 +3706,7 @@ object SparkEntry {
       // calibration (rank >= 2 ~ df >= ~80).
       // sampled-path state is LAZY: under the exact-df flag neither the
       // sample aggregate nor the broadcast is ever built
-      lazy val heavySorted = Tables.spreadForKernel(srcDocs)
+      lazy val heavySorted = Tables.roundRobinSpread(srcDocs)
         .filter(substring(md5(concat(lit("rankmap:"),
           col("doc_id").cast("string"))), 1, 2) < lit("0d"))
         .select(explode(array_distinct(
@@ -3735,7 +3736,7 @@ object SparkEntry {
       // evaluated ONCE per row: toks is referenced by several
       // non-cheap consumers, which blocks CollapseProject from
       // inlining it per consumer.)
-      lazy val keyed = Tables.spreadForKernel(srcDocs)
+      lazy val keyed = Tables.roundRobinSpread(srcDocs)
           .select(col("doc_id"),
             graft.functions.BroadcastRank.heavyRankOrder(array_distinct(
                 graft.functions.exprs.gram_hashes64(col("text"), 12)),
@@ -3776,7 +3777,7 @@ object SparkEntry {
       // doc_id) — the linear cluster shape, now also disk-feasible
       // single-node.
       lazy val keyedE = {
-        val docMeta = Tables.spreadForKernel(srcDocs)
+        val docMeta = Tables.roundRobinSpread(srcDocs)
           .select(col("doc_id"), array_distinct(
             graft.functions.exprs.gram_hashes64(col("text"), 12)).as("tk"))
           .select(col("doc_id"), size(col("tk")).as("m"),
@@ -3785,7 +3786,7 @@ object SparkEntry {
           .select(col("doc_id"), col("m"), col("dg"),
             (col("m") - ceil(lit(tau) * col("m")).cast("int") + lit(1))
               .as("plen"))
-        val grams = Tables.spreadForKernel(srcDocs)
+        val grams = Tables.roundRobinSpread(srcDocs)
           .select(col("doc_id"), explode(array_distinct(
             graft.functions.exprs.gram_hashes64(col("text"), 12))).as("g"))
         val dfRanks = grams.groupBy(col("g")).agg(count(lit(1)).as("c"))
@@ -4402,7 +4403,7 @@ object SparkEntry {
       // staged frame is 4 thin columns (~40 B/row, no text), DISK_ONLY,
       // released by the harness's per-query cache hygiene.
       val d = graft.ops.Staging.stageToDisk(
-        Tables.spreadForKernel(Tables.documents(s, dir)).select(
+        Tables.roundRobinSpread(Tables.documents(s, dir)).select(
           col("doc_id"), col("source"),
           round(TextAnalysis.qualityScore(col("text")) * 10000).cast("long").as("qm"),
           TextAnalysis.tokenCountWs(col("text")).cast("long").as("tok")))
@@ -4784,7 +4785,7 @@ object SparkEntry {
   private def enrichedCorpus(s: SparkSession, dir: String) =
     graft.ops.PairFunnel.sharedBuild(Tables.documents(s, dir),
       "enrich", dir, "doc_id", "text", Seq("en", "q5000")) {
-      Tables.spreadForKernel(Tables.documents(s, dir)).select(
+      Tables.roundRobinSpread(Tables.documents(s, dir)).select(
           col("doc_id"), col("text"), col("source"),
           TextAnalysis.qualityScore(col("text")).as("quality"),
           TextAnalysis.tokenCountWs(col("text")).cast("long").as("n_tokens"))

@@ -170,7 +170,8 @@ object Dedup {
         localMinhashPairs(docs, textCol, idCol, p)
       else None
     if (local.isDefined) return local.get
-    // spread: the signature kernel must not serialize on a one-split scan.
+    // spread above Tables.SpreadMinBytes: the signature kernel must not
+    // serialize on a one-split scan of a larger corpus.
     // Bucket rows carry (id, band-hash, DIGEST) — the full 64-long
     // signature never leaves the map side. sig_digest keeps one byte per
     // hash position (64 B vs 520 B), so the banding exchange stays
@@ -699,7 +700,9 @@ object Dedup {
     }
     val meta = spark.createDataFrame(
       spark.sparkContext.parallelize(metaRows, 1), metaSchema)
-    graft.sources.Tables.spreadForKernel(corpus)
+    // ungated spread: each document's work grows with the eval suite,
+    // which the corpus footers do not bound (Tables.SpreadMinBytes)
+    graft.sources.Tables.roundRobinSpread(corpus)
       .select(col(idCol).as("corpus_id"),
         posexplode(exprs.containment_counts(col(textCol), shingleN, sets))
           .as(Seq("__pos", "n_common")))
@@ -719,7 +722,7 @@ object Dedup {
   def simhashNearDupPairs(
       docs: DataFrame, textCol: String, idCol: String,
       shingleN: Int = 3, maxHamming: Int = 3): DataFrame = {
-    val hashed = graft.sources.Tables.spreadForKernel(docs).select(
+    val hashed = graft.sources.Tables.roundRobinSpread(docs).select(
       col(idCol).as("id"), exprs.simhash64(col(textCol), shingleN).as("sh"))
 
     val chunkCols = (0 until 4).map { i =>
@@ -1035,7 +1038,7 @@ object Dedup {
     // est-filter below all read this frame; unstaged, each re-runs the
     // sig kernel over existing ∪ delta
     val sigs = Staging.stageToDiskChained(
-      graft.sources.Tables.spreadForKernel(all).select(
+      graft.sources.Tables.roundRobinSpread(all).select(
         col("id"), col("is_delta"),
         exprs.minhash_sig(col("t"), p.shingleN, p.numHashes, p.seed).as("sig")))
     val bandCols = (0 until p.bands).map { i =>

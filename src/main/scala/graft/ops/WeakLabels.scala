@@ -21,10 +21,11 @@ import graft.ops.TextAnalysis.stopwordCount
   * final score is an integer dot product — so the whole operator
   * replays in DuckDB (q_weak_labels' oracle).
   *
-  * Scale shape: one scan computes the votes, one combinable aggregation
-  * reduces them to 2K counters (a 1-row frame, broadcast back — the
-  * q_tfidf corpus-stats shape), one more scan emits the labels. No
-  * per-doc state beyond the row; LF count is a compile-time constant.
+  * Scale shape: one scan computes and stages the votes, one combinable
+  * aggregation reduces them to 2K counters, collected at construct as
+  * K weights that enter the score as literals, and one read of the
+  * staged votes emits the labels. No per-doc state beyond the row; LF
+  * count is a compile-time constant.
   */
 object WeakLabels {
 
@@ -64,14 +65,18 @@ object WeakLabels {
     // each downstream self-consumer (q_component_labels' majority
     // tally + join-back re-scanned it twice more, single-task on a
     // one-split corpus). Stage the thin vote frame (6 int64 columns,
-    // ~48 B/doc at any corpus size) once, kernel spread across cores;
-    // every consumer reads stored columnar blocks. Query-lifetime
-    // staging (the semDeDup convention — the session's per-query
-    // clearCache releases it; values are unchanged, so no result byte
-    // moves).
+    // ~48 B/doc at any corpus size) once, kernel spread across cores
+    // above the spread gate; every consumer reads stored columnar
+    // blocks. Query-lifetime staging (the semDeDup convention — the
+    // session's per-query clearCache releases it; values are unchanged,
+    // so no result byte moves). The weights are collected at construct,
+    // not broadcast back: that collect reads every partition of the
+    // staged votes, so it is the job that fills the stage (no staging
+    // count), and the four weights enter the score as literals, so no
+    // consumer re-evaluates the aggregate or joins it back.
     val v = votes(graft.sources.Tables.spreadForKernel(docs))
     val maj = signum(LfCols.map(col).reduce(_ + _)).cast("long")
-    val voted = Staging.stageToDisk(v.withColumn("m", maj))
+    val voted = Staging.stageToDiskChained(v.withColumn("m", maj))
     val aggCols: Seq[Column] = LfCols.flatMap { c =>
       Seq(
         sum(when(col(c) =!= 0L && col(c) === col("m"), 1L).otherwise(0L))
@@ -86,9 +91,12 @@ object WeakLabels {
         .otherwise(round(col(s"agree_$c").cast("double") * lit(1e6)
           / col(s"cover_$c").cast("double")).cast("long"))
         .as(s"w_$c")
-    }: _*)
-    val score = LfCols.map(c => col(c) * col(s"w_$c")).reduce(_ + _)
-    voted.crossJoin(broadcast(weights))
+    }: _*).head()
+    // a weight is null only over zero votes, where no row is scored
+    val score = LfCols.zipWithIndex.map { case (c, i) =>
+      col(c) * lit(if (weights.isNullAt(i)) 0L else weights.getLong(i))
+    }.reduce(_ + _)
+    voted
       .select(col("doc_id") +: LfCols.map(col) :+
         score.as("score_micro") :+
         signum(score).cast("long").as("label"): _*)

@@ -123,11 +123,60 @@ object Tables {
     * real multi-file table (the 100 TB case, thousands of natural
     * splits) the condition is false and this is a no-op — the spread
     * never adds a shuffle where the source already parallelizes.
+    *
+    * A frame whose parquet footers ([[footerBound]]) prove at most
+    * [[SpreadMinBytes]] uncompressed bytes is returned unchanged: below
+    * that size the kernel on the scan's one task is no slower than the
+    * round-robin exchange plus its extra tasks. Frames the footers
+    * cannot bound keep the spread. The spread exists for speed only:
+    * every caller's result is independent of its partition count.
+    *
+    * Only the kernels timed in [[SpreadMinBytes]]' table call this:
+    * MinHash signatures, winnow anchors, the weak-label votes and the
+    * quality score. Every other site calls [[roundRobinSpread]].
     */
   def spreadForKernel(df: DataFrame): DataFrame = {
+    val spread = roundRobinSpread(df)
+    // footers are read only for an under-split frame, never per file of
+    // a many-split table
+    if ((spread ne df) && footerBound(df).exists(_.bytes <= spreadMinBytes.value)) df
+    else spread
+  }
+
+  /** [[spreadForKernel]] without the size gate: spreads every
+    * under-split frame. For a kernel whose one-task crossover has not
+    * been measured, and for the containment scan, whose cost per
+    * document grows with the eval suite, which the corpus footers do
+    * not bound. */
+  def roundRobinSpread(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
+
+  /** Footer bytes up to which [[spreadForKernel]] leaves a frame on the
+    * scan's own task. Measured warm on a 4-core host: kernel wall to a
+    * noop sink (median of 15) on one task vs spread over 4, on
+    * single-file cuts of the sf0.1 documents:
+    * {{{
+    * rows  footer KB  minhash     anchors     votes       quality    (s, one/spread)
+    *  400     130     .087/.138   .055/.084   .082/.097   .077/.101
+    *  500     161     .055/.065   .048/.070   .071/.082   .077/.084
+    *  550     178     .061/.065   .054/.068   .080/.083   .086/.088
+    *  600     194     .061/.062   .054/.072   .090/.083   .085/.083
+    *  700     223     .062/.058   .048/.062   .085/.071   .095/.089
+    * 1600     500     .096/.082   .072/.075   .160/.109   .154/.110  (median of 9)
+    * }}}
+    * so these four kernels cross between 178 and 194 KB. The
+    * containment scan at q_contamination's 5% eval split is slower on
+    * one task already at 161 KB (.094 vs .083 s) and faster at 130 KB
+    * (.100 vs .121 s); it uses [[roundRobinSpread]], as do the kernels
+    * not in this table.
+    */
+  val SpreadMinBytes: Long = 176L << 10
+
+  /** Test hook: a negative value spreads every under-split frame, as
+    * before the size gate (the specs check the gate changes no row). */
+  private[graft] val spreadMinBytes = new scala.util.DynamicVariable[Long](SpreadMinBytes)
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")

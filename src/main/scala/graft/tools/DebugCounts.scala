@@ -126,7 +126,7 @@ object DebugCounts {
     spark.sparkContext.setLogLevel("ERROR")
     val tau = 0.8
     val docs = graft.sources.Tables.documents(spark, sfDir)
-    val keyed = graft.sources.Tables.spreadForKernel(docs)
+    val keyed = graft.sources.Tables.roundRobinSpread(docs)
       .select(col("doc_id"), array_distinct(
         graft.functions.exprs.gram_hashes64(col("text"), 12)).as("ga"))
       .select(col("doc_id"), explode(col("ga")).as("g"))
@@ -196,7 +196,7 @@ object DebugCounts {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = graft.sources.Tables.documents(spark, sfDir)
-    val hashed = graft.sources.Tables.spreadForKernel(docs).select(
+    val hashed = graft.sources.Tables.roundRobinSpread(docs).select(
       col("doc_id").as("id"),
       graft.functions.exprs.simhash64(col("text"), 3).as("sh")).persist()
     println(s"docs: ${hashed.count()}")

@@ -18,7 +18,7 @@ object GramDfProbe {
     spark.sparkContext.setLogLevel("WARN")
     for (dir <- args) {
       val docs = graft.sources.Tables.documents(spark, dir)
-      val grams = graft.sources.Tables.spreadForKernel(docs)
+      val grams = graft.sources.Tables.roundRobinSpread(docs)
         .select(col("doc_id"), explode(array_distinct(
           graft.functions.exprs.gram_hashes64(col("text"), 12))).as("g"))
       val freq = grams.groupBy(col("g")).agg(count(lit(1)).as("f"))

@@ -146,7 +146,7 @@ class LocalFunnelSpec extends SparkSpecBase {
     val s = spark; import s.implicits._
     val inMemory = Seq((1L, base), (2L, base)).toDF("doc_id", "text")
     assert(!isLocal(Dedup.minhashNearDupPairs(inMemory, "text", "doc_id")))
-    assert(!isLocal(Dedup.minhashNearDupPairs(Tables.spreadForKernel(docs), "text", "doc_id")))
+    assert(!isLocal(Dedup.minhashNearDupPairs(docs.repartition(4), "text", "doc_id")))
     assert(!isLocal(Dedup.minhashNearDupPairs(docs.withColumn("doc_id", col("doc_id").cast("string")),
       "text", "doc_id")))
   }

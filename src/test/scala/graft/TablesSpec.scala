@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{BinaryType, StringType}
 import graft.sources.Tables
@@ -185,6 +187,57 @@ class TablesSpec extends SparkSpecBase {
     val df = Tables.load(asString, dir, "t")
     assert(df.schema("b").dataType === StringType)
     assert(df.head().getString(0) === "hi")
+  }
+
+  /** Whether `df`'s physical plan has a round-robin exchange. */
+  private def spreads(df: DataFrame): Boolean =
+    df.queryExecution.sparkPlan.exists {
+      case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RoundRobinPartitioning]
+      case _ => false
+    }
+
+  test("spreadForKernel: a footer-small parquet frame comes back unchanged") {
+    val docs = Tables.documents(spark, Sf0001)
+    assert(Tables.footerBound(docs).exists(_.bytes <= Tables.SpreadMinBytes))
+    assert(Tables.spreadForKernel(docs) eq docs)
+    assert(!spreads(Tables.spreadForKernel(docs.select(col("text")))))
+  }
+
+  test("spreadForKernel: sf0.1 documents and an in-memory frame still spread") {
+    val sf01 = new java.io.File(new java.io.File(Sf001).getParentFile, "sf0.1").getPath
+    val docs = Tables.documents(spark, sf01)
+    assert(Tables.footerBound(docs).exists(_.bytes > Tables.SpreadMinBytes))
+    assert(spreads(Tables.spreadForKernel(docs)))
+    val s = spark; import s.implicits._
+    assert(spreads(Tables.spreadForKernel(Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text"))))
+  }
+
+  test("roundRobinSpread: the ungated sites still spread a footer-small scan") {
+    val docs = Tables.documents(spark, Sf0001)
+    assert(spreads(Tables.roundRobinSpread(docs)))
+    Seq("q_pii_luhn", "q_quality_calibration", "q_novelty").foreach { q =>
+      assert(spreads(SparkEntry.queries(q)(spark, Sf0001)), q)
+    }
+  }
+
+  test("the spread gate changes no row of the curation queries at sf0.001") {
+    def run(q: String): (Seq[String], Boolean) = {
+      graft.ops.PairFunnel.invalidateAll()
+      val s = spark.newSession()
+      try {
+        val df = SparkEntry.queries(q)(s, Sf0001)
+        (df.collect().map(_.toString).toSeq.sorted, spreads(df))
+      } finally s.catalog.clearCache()
+    }
+    Seq("q_weak_labels", "q_component_labels", "q_dedup_keep_best").foreach { q =>
+      val (gated, _) = run(q)
+      val (spread, _) = Tables.spreadMinBytes.withValue(-1L)(run(q))
+      assert(gated.nonEmpty)
+      assert(gated === spread, q)
+    }
+    // the forced-off gate does reach the queries' plans
+    assert(!run("q_dedup_keep_best")._2)
+    assert(Tables.spreadMinBytes.withValue(-1L)(run("q_dedup_keep_best"))._2)
   }
 
   test("entry (flagship) returns rows on sf0.001") {

@@ -56,6 +56,10 @@ class WeakLabelsSpec extends SparkSpecBase {
     } finally out.unpersist()
   }
 
+  test("an empty corpus labels no row (its weights are null)") {
+    assert(WeakLabels.weakLabels(Seq.empty[(Long, String)].toDF("doc_id", "text")).collect().isEmpty)
+  }
+
   test("componentMajorityLabel: override, tie-to-smallest-member, singleton identity") {
     // the vote mechanism on constructed components. (The LF family's
     // votes rarely diverge between true near-duplicates — measured
