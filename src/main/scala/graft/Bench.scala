@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, prints one compact JSON line with the headline
   * numbers and writes the FULL per-query detail to `bench_full.json`.
@@ -27,55 +25,17 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events parquet carries TIMESTAMP(NANOS); read as long + convert
-      // (see Tables.events) instead of failing the scan.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // WindowExec warns "No Partition Defined" on EVERY unpartitioned
-    // window — including the library's deliberately-bounded bucket/bin
-    // offset frames (one row per bucket, documented at each site,
-    // bucket counts fixed independent of corpus size). Those hundreds
-    // of identical lines drowned the bench tail the harness scrapes;
-    // scope that ONE logger to ERROR so real warnings stay visible.
-    // (A constant partition key does not silence it — Catalyst's
-    // EliminateWindowPartitions strips foldable keys.)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = Sessions.start()
     // contention telemetry (SURVEY §12 made the core-sharing
-    // attribution prose; this makes it mechanical): accumulate summed
-    // executor ON-CPU nanos and task run millis per query, published
-    // as cpu_s/run_s in bench_full.json. run ≫ cpu ⇒ descheduling /
-    // IO waits (ambient load), cpu ≈ run at higher sec ⇒ real work
-    // grew. Listener delivery is async; the snapshot is taken after
-    // clearCache(+gc) outside the timed region, which in practice
-    // drains the bus — residual lag misattributes only ms-scale tails.
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong
-    val runMs = new java.util.concurrent.atomic.AtomicLong
-    // spill telemetry (r10, for the constrained-memory proof): disk
-    // bytes actually spilled per query — the evidence that the spill
-    // paths ENGAGE (not just exist) when the heap is deliberately small
-    val spillB = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = sc.stageInfo.taskMetrics
-          if (m != null) {
-            cpuNs.addAndGet(m.executorCpuTime)
-            runMs.addAndGet(m.executorRunTime)
-            spillB.addAndGet(m.diskBytesSpilled)
-          }
-        }
-      })
+    // attribution prose; this makes it mechanical): summed executor
+    // ON-CPU nanos and task run millis per query, published as
+    // cpu_s/run_s in bench_full.json. run ≫ cpu ⇒ descheduling / IO
+    // waits (ambient load), cpu ≈ run at higher sec ⇒ real work grew.
+    // Spill (r10, for the constrained-memory proof): disk bytes actually
+    // spilled per query — the evidence that the spill paths ENGAGE (not
+    // just exist) when the heap is deliberately small. Each `take()`
+    // drains the listener bus first and runs outside the timed region.
+    val stages = StageCollector.attach(spark.sparkContext)
     // warmup: absorb codegen/classloading AND the noop-sink write path
     // (r2 warmed only count(), so the alphabetically-first query paid
     // ~3 s of datasource/commit-protocol init every round)
@@ -163,7 +123,7 @@ object Bench {
       def compiles(): Long =
         org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       def once(): (Double, Option[String], Double, Double, Double, Double, Long) = {
-        val cpu0 = cpuNs.get(); val run0 = runMs.get(); val sp0 = spillB.get()
+        stages.take() // drop what ran before this query
         val st0 = stealJiffies(); val cc0 = compiles()
         val t0 = System.nanoTime()
         val err =
@@ -195,9 +155,8 @@ object Bench {
           case _        => sec > 1.0 || gcBudget <= 0
         }
         if (gcNow) { System.gc(); gcBudget = 16 }
-        (sec, err,
-          (cpuNs.get() - cpu0) / 1e9, (runMs.get() - run0) / 1e3,
-          (spillB.get() - sp0) / 1048576.0,
+        val ran = stages.take()
+        (sec, err, ran.cpuNs / 1e9, ran.runMs / 1e3, ran.spillB / 1048576.0,
           (stealJiffies() - st0) / 100.0, cc)
       }
       var (sec, err, cpuS, runS, spillMb, stealS, cc) = once()

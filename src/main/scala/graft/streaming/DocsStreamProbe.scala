@@ -4,7 +4,6 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress, Trigger}
 
@@ -46,15 +45,7 @@ object DocsStreamProbe {
     val dir = args.headOption.getOrElse("/root/repo/sfgen/sf100docs")
     val out = args.lift(1).getOrElse("/tmp/docs_stream_probe.json")
     val maxFiles = sys.env.getOrElse("SPARK_GRAFT_STREAM_MAXFILES", "8").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.start()
     val plog = new ProgressLog
     spark.streams.addListener(plog)
 

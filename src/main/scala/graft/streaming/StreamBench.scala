@@ -135,7 +135,6 @@ object StreamBench {
     val rates = sys.env.getOrElse("SPARK_GRAFT_STREAM_RATES", "25000,100000")
       .split(",").map(_.trim.toLong).toSeq
     val secs = sys.env.getOrElse("SPARK_GRAFT_STREAM_SECS", "45").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val out = args.headOption.getOrElse("bench_baselines/r09_streaming.json")
     // r17 (verdict item 10): optional state-store provider override so
     // the throughput record can be refreshed under RocksDB —
@@ -148,15 +147,9 @@ object StreamBench {
       case Some(other) => Some(other)
       case None => None
     }
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = provider
-      .fold(b0)(p => b0.config("spark.sql.streaming.stateStore.providerClass", p))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val b0 = graft.Sessions.builder()
+    val spark = graft.Sessions.start(provider
+      .fold(b0)(p => b0.config("spark.sql.streaming.stateStore.providerClass", p)))
     val tmp = java.nio.file.Files.createTempDirectory("streambench").toString
     val recs = rates.map { r =>
       val rec = run(spark, r, secs, s"$tmp/rate_$r")

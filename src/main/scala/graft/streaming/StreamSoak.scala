@@ -4,7 +4,6 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress, Trigger}
 
@@ -104,19 +103,13 @@ object StreamSoak {
     val out = args.lift(2).getOrElse(s"/tmp/streamsoak_$phase.json")
     val rate = sys.env.getOrElse("SPARK_GRAFT_SOAK_RATE", "150000").toLong
     val secs = sys.env.getOrElse("SPARK_GRAFT_SOAK_SECS", "150").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = graft.Sessions.start(graft.Sessions.builder()
       // 8 shuffle partitions = 8 RocksDB instances: state-store count
       // scales native memtable memory, and a soak's bottleneck is keyed
       // state, not compute — fewer, bigger stores is the right shape
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
     val plog = new ProgressLog
     spark.streams.addListener(plog)
 

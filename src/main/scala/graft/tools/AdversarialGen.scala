@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** Adversarial-corpus generator (r10 verdict item 2): the sf0.001
@@ -105,13 +105,7 @@ object AdversarialGen {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.001")
     val dst = args.lift(1).getOrElse("/root/repo/sfgen/adversarial")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.start()
 
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),

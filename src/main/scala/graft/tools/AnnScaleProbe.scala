@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
@@ -22,15 +21,7 @@ object AnnScaleProbe {
     val reranks =
       if (args.length > 1) args.drop(1).map(_.toInt).toSeq
       else Seq(96, 128, 256, 512, 1024, 2048)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.start(logLevel = "ERROR")
 
     val e = Tables.embeddings(spark, sfDir).cache()
     val n = e.count()

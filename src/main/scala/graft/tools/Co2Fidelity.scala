@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** r16 real-data fidelity capstone (r15 verdict item 7): run the
@@ -29,12 +29,9 @@ object Co2Fidelity {
   def main(args: Array[String]): Unit = {
     val csvPath = args.headOption.getOrElse("/root/reference/co2-dataset-edited.csv")
     val out = if (args.length > 1) args(1) else "/tmp/co2_fidelity_engine.json"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // 4 cores, pinned: the seeded Spark-ML KMeans samples per
+    // partition, and the committed fidelity record must reproduce
+    val spark = graft.Sessions.start(graft.Sessions.builder(cpus = 4))
 
     // Tables: the reference's ingest options (project-co2.py:87)
     val raw = graft.sources.Tables.csv(spark, csvPath,

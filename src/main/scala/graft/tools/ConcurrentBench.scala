@@ -89,22 +89,10 @@ object ConcurrentBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/sfgen/sf1")
     val streams = args.lift(1).map(_.toInt).getOrElse(6)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val root = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val root = graft.Sessions.start(graft.Sessions.builder()
       // FAIR pools: FIFO starves late streams behind early ones' big
       // stages; fair sharing is what a multiplexing cluster runs.
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    root.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+      .config("spark.scheduler.mode", "FAIR"))
 
     val queries = SparkEntryAccess.queries
     // single-stream reference pass: expected fingerprint per query +

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for the one-off scale-validation run (SURVEY §7):
@@ -42,13 +42,7 @@ object ScaleGen {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/root/repo/sfgen/sf1")
     val k = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.start()
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     // file counts were tuned for k=10; scale them with k so sf10 keeps

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** documents/embeddings-only scale generator for the THIRD-decade
@@ -25,13 +25,7 @@ object ScaleGenDocs {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/root/repo/sfgen/sf100docs")
     val k = args.lift(2).map(_.toInt).getOrElse(1000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.start()
     import spark.implicits._
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** Template-storm corpus generator (r14 verdict stretch item 8): the
@@ -62,13 +62,7 @@ object TemplateStormGen {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.001")
     val dst = args.lift(1).getOrElse("/root/repo/sfgen/templatestorm")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.start()
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("text", StringType, nullable = false),

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Child-process entry for UpsertFaultSpec: apply ONE deterministic
   * micro-batch to the [[graft.streaming.EventStream.upsertBatch]] state
   * at `args(0)` and exit. When the spec sets `GRAFT_UPSERT_KILL_POINT`
@@ -25,13 +23,7 @@ object UpsertKillRunner {
   def main(args: Array[String]): Unit = {
     val state = args(0)
     val batchId = args(1).toLong
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.start(graft.Sessions.builder(cpus = 4), logLevel = "ERROR")
     import spark.implicits._
     val df = batchRows(batchId).toDF("k", "ts", "v")
     graft.streaming.EventStream.upsertBatch(state, "k", "ts")(df, batchId)

@@ -1,10 +1,10 @@
 package org.apache.spark
 
-/** Test access to the listener bus: listeners are called asynchronously,
-  * so a spec draining the bus before it reads a listener's count sees
+/** Listener-bus access: listeners are called asynchronously, so a
+  * caller draining the bus before it reads a listener's record sees
   * every event the jobs it ran have posted. `listenerBus` is
   * `private[spark]`, hence this package.
   */
-object GraftTestBus {
+object GraftBus {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
 }

@@ -23,7 +23,7 @@ object JobCount {
     sc.setLocalProperty(Key, tag)
     try {
       val out = body
-      org.apache.spark.GraftTestBus.drain(sc)
+      org.apache.spark.GraftBus.drain(sc)
       (out, n.get)
     } finally {
       sc.setLocalProperty(Key, null)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.col
   * fast; these specs pin the plan SHAPES so a config drift (e.g.
   * autoBroadcastJoinThreshold, a lost broadcast hint, an accidental
   * cross join) fails a test instead of silently regressing a 100 TB run.
-  * graft.Explain dumps the same plans for eyeballing; this is the
+  * `graft.tools.Inspect --plan` dumps the same plans for eyeballing; this is the
   * automated version the r2 verdict asked for.
   */
 class PlanAuditSpec extends SparkSpecBase {

@@ -32,15 +32,10 @@ class RetrySpec extends AnyFunSuite with BeforeAndAfterAll {
   override def beforeAll(): Unit = {
     val shared = SparkSpecBase.session
     if (!shared.sparkContext.isStopped) shared.stop()
-    retrySpark = SparkSession.builder()
+    retrySpark = Sessions.start(Sessions.builder(cpus = 4)
       .master("local[4, 4]") // 4 threads, maxFailures = 4 → retries live
-      .appName("graft-retry-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    retrySpark.sparkContext.setLogLevel("ERROR")
+      .appName("graft-retry-test"),
+      logLevel = "ERROR")
   }
 
   override def afterAll(): Unit =

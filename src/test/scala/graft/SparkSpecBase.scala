@@ -25,16 +25,12 @@ object SparkSpecBase {
   private var cached: SparkSession = _
   def session: SparkSession = synchronized {
     if (cached == null || cached.sparkContext.isStopped) {
-      cached = SparkSession.builder()
-        .master("local[4]")
+      // 4 cores whatever the host: ConstructJobsSpec pins job counts
+      // that depend on the partition count
+      cached = Sessions.start(Sessions.builder(cpus = 4)
         .appName("graft-test")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      cached.sparkContext.setLogLevel("ERROR")
+        .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse"),
+        logLevel = "ERROR")
     }
     cached
   }
