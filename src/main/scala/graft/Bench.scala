@@ -104,7 +104,6 @@ object Bench {
     // the record stopped adjudicating its own tail without saying so.
     // Count every trigger the exhausted budget denies and publish it.
     var nRetryDenied = 0
-    val gcMode = sys.env.getOrElse("SPARK_GRAFT_GC", "auto")
     var gcBudget = 16
     val results = selected.map { case (name, fn) =>
       // shared-build attribution (r16 verdict item 9): builds the
@@ -140,21 +139,14 @@ object Bench {
         // gc() the checkpoint-heavy queries' blocks pile up in storage
         // memory and slow every query that runs after them (measured:
         // q_dataset_card 1.5 s alone vs 6.6 s late in a 146-query run).
-        // The gc() is CONDITIONAL (SPARK_GRAFT_GC=auto, the default):
-        // only checkpoint-capable queries — those over 1 s, every
-        // stager/closure user at the bench sf — plus an every-16th
-        // backstop pay it; a full 8-48 g collection costs ~0.1-0.3 s and
-        // ~130 of the 184 queries create no checkpoint blocks at all.
-        // `always` restores the old per-query behavior, `never` is for
-        // overhead measurement only.
+        // The gc() is CONDITIONAL: only checkpoint-capable queries —
+        // those over 1 s, every closure user at the bench sf — plus an
+        // every-16th backstop pay it; a full 8-48 g collection costs
+        // ~0.1-0.3 s and ~130 of the 184 queries create no checkpoint
+        // blocks at all.
         spark.catalog.clearCache()
         gcBudget -= 1
-        val gcNow = gcMode match {
-          case "always" => true
-          case "never"  => false
-          case _        => sec > 1.0 || gcBudget <= 0
-        }
-        if (gcNow) { System.gc(); gcBudget = 16 }
+        if (sec > 1.0 || gcBudget <= 0) { System.gc(); gcBudget = 16 }
         val ran = stages.take()
         (sec, err, ran.cpuNs / 1e9, ran.runMs / 1e3, ran.spillB / 1048576.0,
           (stealJiffies() - st0) / 100.0, cc)

@@ -713,7 +713,7 @@ object SparkEntry {
       // copies — unstaged, the full events scan + distinct ran TWICE
       // (StageProfile: two identical 261 KB partial-distinct stages).
       // The staged frame is active-pairs-sized, far below events-sized.
-      val ud = graft.ops.Staging.stageToDisk(Tables.events(s, dir)
+      val ud = graft.ops.Staging.stage(Tables.events(s, dir)
         .select(to_date(col("ts")).as("day"), col("user_id")).distinct())
       val dau = ud.groupBy(col("day")).agg(count(lit(1)).as("dau"))
       val wau = ud
@@ -1042,7 +1042,7 @@ object SparkEntry {
     // double-free iteration — float rank vectors would drift with
     // Spark's aggregation order. Each iteration is one join + one
     // partial-aggregated shuffle; on a cluster, `edges` would be
-    // checkpointed and co-partitioned by src across iterations.
+    // co-partitioned by src across iterations.
     "q_pagerank" -> ((s, dir) => {
       // one ship-year of co-purchases: the graph stays meaningful and
       // the filter pushes to both scans of the self-join
@@ -1051,15 +1051,16 @@ object SparkEntry {
           col("l_shipdate") < lit("1999-01-01").cast("timestamp"))
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       val a = li.as("a"); val b = li.as("b")
-      val edges = a.join(b,
+      // staged: edges feeds 3 iterations + outdeg + nodes, and outdeg
+      // and nodes feed every iteration (distinct pairs and exact counts)
+      val edges = graft.ops.Staging.stage(a.join(b,
           col("a.ok") === col("b.ok") && col("a.pk") =!= col("b.pk"))
         .select(col("a.pk").as("src"), col("b.pk").as("dst"))
-        .distinct()
-        .localCheckpoint(eager = false) // reused by 3 iterations + outdeg
-      val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-        .localCheckpoint(eager = false)
-      val nodes = edges.select(col("src").as("node")).distinct()
-        .localCheckpoint(eager = false)
+        .distinct())
+      val outdeg = graft.ops.Staging.stage(
+        edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg")))
+      val nodes = graft.ops.Staging.stage(
+        edges.select(col("src").as("node")).distinct())
       var ranks = nodes.withColumn("rank", lit(1000000L))
       for (_ <- 1 to 3) {
         // per-src contribution is NODE-sized — joining it to the
@@ -1152,13 +1153,12 @@ object SparkEntry {
       // contingency cells are ≤ |status|·|priority| rows but feed FOUR
       // consumers (row totals, column totals, grand total, the term
       // join); unstaged, each consumer re-ran the full orders scan+agg
-      // (8 parquet scans in the r17 before-plan). Eager checkpoint of
-      // the tiny cell table = one orders pass (r17, same fix as Dsir's
-      // bucket counts). Exact integer counts — values unchanged.
-      val cells = Tables.orders(s, dir)
+      // (8 parquet scans in the r17 before-plan). Staging the tiny cell
+      // table = one orders pass (same fix as Dsir's bucket counts).
+      // Exact integer counts — values unchanged.
+      val cells = graft.ops.Staging.stage(Tables.orders(s, dir)
         .groupBy(col("o_orderstatus").as("st"), col("o_orderpriority").as("pr"))
-        .agg(count(lit(1)).as("obs"))
-        .localCheckpoint(true)
+        .agg(count(lit(1)).as("obs")))
       val rt = cells.groupBy(col("st")).agg(sum(col("obs")).as("rt"))
       val ct = cells.groupBy(col("pr")).agg(sum(col("obs")).as("ct"))
       val tot = cells.agg(sum(col("obs")).as("n"),
@@ -1322,12 +1322,11 @@ object SparkEntry {
       // part-keyed rows, two consumers (threshold + filter) — each
       // re-ran the lineitem scan + join + agg when unstaged (r17, the
       // dsir fan-out fix). Exact integer cents — values unchanged.
-      val vals = Tables.lineitem(s, dir)
+      val vals = graft.ops.Staging.stage(Tables.lineitem(s, dir)
         .select(col("l_suppkey"), col("l_partkey"),
           round(col("l_extendedprice") * 100).cast("long").as("cents"))
         .join(broadcast(n3sup), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("l_partkey")).agg(sum(col("cents")).as("value_cents"))
-        .localCheckpoint(true)
+        .groupBy(col("l_partkey")).agg(sum(col("cents")).as("value_cents")))
       val thr = vals.agg((sum(col("value_cents")) / 1000.0).as("thr"))
       vals.crossJoin(broadcast(thr))
         .filter(col("value_cents").cast("double") > col("thr"))
@@ -1353,17 +1352,16 @@ object SparkEntry {
     // spec's HAVING total = max(total)) with no window sort. Revenue in
     // exact 10^-4-dollar units; only the final display division is float.
     "q_tpch_q15" -> ((s, dir) => {
-      val rev = Tables.lineitem(s, dir)
+      // supplier-keyed rows, two consumers (max + join) — each re-ran
+      // the filtered lineitem scan+agg when unstaged (r17). Exact
+      // integer units — values unchanged.
+      val rev = graft.ops.Staging.stage(Tables.lineitem(s, dir)
         .filter(col("l_shipdate") >= lit("1998-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1998-04-01").cast("timestamp"))
         .select(col("l_suppkey"),
           (round(col("l_extendedprice") * 100).cast("long") *
             (lit(100L) - round(col("l_discount") * 100).cast("long"))).as("u"))
-        .groupBy(col("l_suppkey")).agg(sum(col("u")).as("rev_u"))
-        // supplier-keyed rows, two consumers (max + join) — each re-ran
-        // the filtered lineitem scan+agg when unstaged (r17). Exact
-        // integer units — values unchanged.
-        .localCheckpoint(true)
+        .groupBy(col("l_suppkey")).agg(sum(col("u")).as("rev_u")))
       val mx = rev.agg(max(col("rev_u")).as("mx"))
       Tables.supplier(s, dir)
         .join(rev, col("s_suppkey") === col("l_suppkey"))
@@ -1507,15 +1505,13 @@ object SparkEntry {
       // v and c are user-keyed aggregates (16 B/user) consumed twice
       // each (next stage's join + the count row); unstaged, every
       // consumer re-ran its whole upstream chain — 6 events scans in
-      // the r17 before-plan, 3 after. Eager checkpoints pin each stage
-      // once; min() aggregates are exact — values unchanged.
-      val v = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("ms")).as("v_ms"))
-        .localCheckpoint(true)
-      val c = ev.filter(col("event_type") === "click")
+      // the r17 before-plan, 3 after. Staging computes each once; min()
+      // aggregates are exact — values unchanged.
+      val v = graft.ops.Staging.stage(ev.filter(col("event_type") === "view")
+        .groupBy(col("user_id")).agg(min(col("ms")).as("v_ms")))
+      val c = graft.ops.Staging.stage(ev.filter(col("event_type") === "click")
         .join(v, "user_id").filter(col("ms") > col("v_ms"))
-        .groupBy(col("user_id")).agg(min(col("ms")).as("c_ms"))
-        .localCheckpoint(true)
+        .groupBy(col("user_id")).agg(min(col("ms")).as("c_ms")))
       val p = ev.filter(col("event_type") === "purchase")
         .join(c, "user_id").filter(col("ms") > col("c_ms"))
         .groupBy(col("user_id")).agg(min(col("ms")).as("p_ms"))
@@ -2830,14 +2826,13 @@ object SparkEntry {
     "q_mix_temperature" -> ((s, dir) => {
       // O(sources) rows, but two consumers (denominator + final select)
       // each re-ran the corpus scan + token-count kernel when unstaged
-      // (4 parquet scans in the r17 before-plan). Eager checkpoint =
-      // one corpus pass (r17). Exact long sums — values unchanged.
-      val bySource = Tables.documents(s, dir)
+      // (4 parquet scans in the r17 before-plan). Staged = one corpus
+      // pass. Exact long sums — values unchanged.
+      val bySource = graft.ops.Staging.stage(Tables.documents(s, dir)
         .select(col("source"), TextAnalysis.tokenCountWs(col("text"))
           .cast("long").as("t"))
         .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("t")).as("tokens"))
-        .localCheckpoint(true)
+        .agg(count(lit(1)).as("n_docs"), sum(col("t")).as("tokens")))
       val denom = bySource
         .agg(sort_array(collect_list(struct(col("source"),
             sqrt(col("tokens").cast("double")).as("w")))).as("a"),
@@ -3045,11 +3040,11 @@ object SparkEntry {
             |      then cast(array() as array<string>)
             |    else array(element_at(ws, i)) end))
             |end""".stripMargin).as("ws"))
-      val t1 = graft.ops.Staging.stageToDisk(
+      val t1 = graft.ops.Staging.stage(
         Tables.roundRobinSpread(Tables.documents(s, dir).select(col("text")))
           .select(split(col("text"), " ").as("ws")))
       val b1 = best(pairCounts(t1))
-      val t2 = graft.ops.Staging.stageToDisk(merged(t1, b1))
+      val t2 = graft.ops.Staging.stage(merged(t1, b1))
       val b2 = best(pairCounts(t2))
       val t3 = merged(t2, b2)
       val b3 = best(pairCounts(t3))
@@ -3484,9 +3479,9 @@ object SparkEntry {
       // (mids, h2's probe, the reach union, direct) — unstaged, each
       // re-ran the seed-filtered lineitem self-join (10 lineitem scans
       // in the r17 before-plan; the consumers' differing column
-      // pruning defeats exchange reuse). Eager checkpoint = one edge
-      // pass (r17). Distinct pairs either way — values unchanged.
-      val h1 = seeds.select(col("src"), col("dst")).localCheckpoint(true)
+      // pruning defeats exchange reuse). Staged = one edge pass.
+      // Distinct pairs either way — values unchanged.
+      val h1 = graft.ops.Staging.stage(seeds.select(col("src"), col("dst")))
       val mids = h1.select(col("dst").as("mid")).distinct()
       val e2 = a.join(broadcast(mids), col("src") === col("mid"), "left_semi")
         .join(bSide, col("ok") === col("ok2") && col("src") =!= col("dst"))
@@ -3516,9 +3511,8 @@ object SparkEntry {
       // vocab×sources rows, two consumers (totals + the p join) — each
       // re-ran the full token explode+count pass when unstaged (r17,
       // same class as the dsir fix). Exact integer counts.
-      val ct = tokens.groupBy(col("source"), col("term"))
-        .agg(count(lit(1)).as("ct"))
-        .localCheckpoint(true)
+      val ct = graft.ops.Staging.stage(tokens.groupBy(col("source"), col("term"))
+        .agg(count(lit(1)).as("ct")))
       val tot = ct.groupBy(col("source"))
         .agg(sum(col("ct")).as("n"), count(lit(1)).as("vocab"))
       ct.join(broadcast(tot), "source")
@@ -3946,7 +3940,7 @@ object SparkEntry {
       // frame is prefix-sized (≈44 B/row columnar: ids, m, rn, pg, sk
       // and the 16-byte digest slice — ~7 GB at the 5M-doc probe,
       // nowhere near the ~40 GB full-toks staging that ENOSPC'd r11)
-      // and is released the moment the candidate pairs are staged.
+      // and lives until the query ends, like every stage.
       // The sub-key in the build-side hash map's key is what stops
       // heavy-bucket probes from walking the whole bucket.
       // the prefix stream with a per-element heavy flag: sampled mode
@@ -3978,7 +3972,7 @@ object SparkEntry {
               (col("pos") + 1).as("rn"),
               col("z.lo").bitwiseXOR(lit(Long.MinValue)).as("pg"),
               (shiftrightunsigned(col("z.hi"), 56) >= 6).as("hv"))
-      val refined = graft.ops.Staging.stageToDisk(prefixRows
+      val refined = graft.ops.Staging.stage(prefixRows
         .select(col("doc_id"), col("m"), substring(col("dg"), 1, 16).as("dg16"),
           col("rn"), col("pg"),
           explode(graft.ops.BucketRefine.subkeysWide(col("dg"), 64, 3,
@@ -3994,8 +3988,7 @@ object SparkEntry {
           >= est16Cut)
         .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
         .distinct()
-      val candF = graft.ops.Staging.stageToDisk(cand)
-      graft.ops.Staging.release(refined)
+      val candF = graft.ops.Staging.stage(cand)
       // verify via the sorted-merge Jaccard kernel (zero allocation per
       // pair) instead of array_intersect (hash set per pair). Full gram
       // sets are re-derived from the SOURCE for docs that actually
@@ -4402,7 +4395,7 @@ object SparkEntry {
       // 170 s with the tokenize scan dominating, twice-paid. The
       // staged frame is 4 thin columns (~40 B/row, no text), DISK_ONLY,
       // released by the harness's per-query cache hygiene.
-      val d = graft.ops.Staging.stageToDisk(
+      val d = graft.ops.Staging.stage(
         Tables.roundRobinSpread(Tables.documents(s, dir)).select(
           col("doc_id"), col("source"),
           round(TextAnalysis.qualityScore(col("text")) * 10000).cast("long").as("qm"),

@@ -25,8 +25,9 @@ final class StageCollector private (sc: SparkContext) extends SparkListener {
       val wall = (for { s <- si.submissionTime; c <- si.completionTime } yield c - s)
         .getOrElse(-1L)
       stages.add(Stage(si.stageId, si.name, si.numTasks, wall, m.executorRunTime,
-        m.executorCpuTime, m.shuffleReadMetrics.totalBytesRead,
-        m.shuffleWriteMetrics.bytesWritten, m.diskBytesSpilled))
+        m.executorCpuTime, m.inputMetrics.bytesRead,
+        m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
+        m.diskBytesSpilled))
     }
   }
 
@@ -43,13 +44,15 @@ final class StageCollector private (sc: SparkContext) extends SparkListener {
 object StageCollector {
   /** One completed stage. `runMs` sums task wall (cache-lock and IO
     * waits included); `cpuNs` sums on-cpu time, the contention-relevant
-    * number. */
+    * number; `inputB` counts bytes read from files and from stored
+    * (persisted or checkpointed) blocks. */
   final case class Stage(id: Int, name: String, tasks: Int, wallMs: Long, runMs: Long,
-      cpuNs: Long, shuffleReadB: Long, shuffleWriteB: Long, spillB: Long) {
+      cpuNs: Long, inputB: Long, shuffleReadB: Long, shuffleWriteB: Long, spillB: Long) {
     def line: String =
       f"stage=$id%4d wall=$wallMs%6dms run=$runMs%7dms cpu=${cpuNs / 1000000}%7dms " +
-        f"shufR=${shuffleReadB / 1024}%8dKB shufW=${shuffleWriteB / 1024}%8dKB " +
-        f"spill=${spillB / 1024}%6dKB tasks=$tasks%3d  ${name.take(60)}"
+        f"in=${inputB / 1024}%8dKB shufR=${shuffleReadB / 1024}%8dKB " +
+        f"shufW=${shuffleWriteB / 1024}%8dKB spill=${spillB / 1024}%6dKB " +
+        f"tasks=$tasks%3d  ${name.take(60)}"
   }
 
   final case class Phase(jobs: Int, stages: Seq[Stage]) {

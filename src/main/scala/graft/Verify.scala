@@ -25,7 +25,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // release query-lifetime staged frames (Staging.stageToDisk)
+      // release the query's staged frames (Staging.stage)
       spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -136,8 +136,8 @@ object Clustering {
       df: DataFrame, idCol: String, featCols: Seq[Column],
       k: Int, iters: Int, tag: String = "km"): DataFrame = {
     import graft.functions.exprs
-    // chained: the init collect is the first consumer and materializes it
-    val staged = graft.ops.Staging.stageToDiskChained(df.select(
+    // the init collect is the first consumer and fills the stage
+    val staged = graft.ops.Staging.stage(df.select(
       col(idCol).as("id"), array(featCols.map(_.cast("long")): _*).as("qv")))
     val initRows = staged
       .withColumn("h", md5(concat(lit(tag + ":"), col("id").cast("string"))))

@@ -132,8 +132,8 @@ object Dedup {
     * signature- and funnel-sized frames are staged.
     *
     * Staging: the filtered candidate pairs and candidate shingle sets
-    * are [[Staging]]-materialized (each feeds two+ consumer branches)
-    * and released before return (the signature frame needs no staging —
+    * are staged ([[Staging]]; each feeds two+ consumer branches) and
+    * released before return (the signature frame needs no staging —
     * the banding self-join reuses one exchange, so the kernel runs once
     * per doc with no second consumer); the verified
     * pair set — the small funnel output downstream closure loops and
@@ -286,7 +286,7 @@ object Dedup {
     spark.conf.set(ckConf, "false")
     // candidates (the PLAUSIBLE set) feeds the shingle join-back and
     // the final verify — staged so the banding self-join runs once.
-    val candidates = Staging.stageToDiskChained(a.hint("shuffle_hash").join(b,
+    val candidates = Staging.stage(a.hint("shuffle_hash").join(b,
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
           col("a.sk") === col("b.sk") && col("a.id") < col("b.id"))
       .filter(exprs.digest_agree(col("a.dg"), col("b.dg")) >= estCut)
@@ -303,7 +303,7 @@ object Dedup {
     // leave the staged frames registered in the session cache (library
     // callers outside Bench/Verify get no clearCache backstop)
     try {
-      val candDocs = Staging.stageToDisk(docs
+      val candDocs = Staging.stage(docs
         .join(candIds, col(idCol) === candIds("id"))
         .select(col("id"), exprs.shingle_set(col(textCol), p.shingleN).as("sh")))
       try {
@@ -313,9 +313,10 @@ object Dedup {
           .withColumn("jaccard", exprs.jaccard_sorted(col("sh_a"), col("sh_b")))
           .filter(col("jaccard") >= p.jaccardThreshold)
           .select(col("id_a"), col("id_b"), col("jaccard"))
-        // the small funnel output is materialized eagerly, after which the
-        // staged intermediates are released — nothing the operator persisted
-        // outlives this call (asserted in DedupSpec's hygiene test)
+        // localCheckpoint: the operator's output, materialized (filling
+        // both stages) before the staged intermediates are released —
+        // nothing the operator persisted outlives this call (asserted in
+        // DedupSpec's hygiene tests)
         verified.localCheckpoint(eager = true)
       } finally Staging.release(candDocs)
     } finally {
@@ -552,6 +553,7 @@ object Dedup {
       }
     }
 
+    // localCheckpoint here and per round: cuts the loop's lineage
     var dir = canonical.localCheckpoint()
 
     // large-star: for every node u, connect each strictly-LARGER
@@ -989,27 +991,20 @@ object Dedup {
     // at the 4M-vector probe, past this host's disk). Staging the
     // repartitioned frame DISK_ONLY materializes it ONCE; both join
     // sides read stored columnar blocks with the (t, sig, ext)
-    // HashPartitioning intact, so the join itself needs NO exchange,
-    // and the frame is released as soon as the (tiny) survivor set is
-    // staged. On a cluster this is the standard staging-table move.
+    // HashPartitioning intact, so the join itself needs NO exchange.
+    // The stage lives until the caller's query ends (see Staging).
     val raw = embeddingBuckets(embs, vecCol, idCol, planesPerTable,
       seed, dim, numPartitions, splitOcc, splitTarget)
-    val buckets = if (stageBuckets) Staging.stageToDisk(raw) else raw
+    val buckets = if (stageBuckets) Staging.stage(raw) else raw
     val a = buckets.as("a")
     val b = buckets.as("b")
-    val pairs = a.hint("shuffle_hash").join(b,
+    a.hint("shuffle_hash").join(b,
         col("a.t") === col("b.t") && col("a.sig") === col("b.sig") &&
           col("a.ext") === col("b.ext") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         exprs.cosine_f(col("a.v"), col("b.v")).as("cosine"))
       .filter(col("cosine") >= threshold)
       .distinct()
-    if (!stageBuckets) pairs
-    else {
-      val out = Staging.stageToDisk(pairs)
-      Staging.release(buckets)
-      out
-    }
   }
 
   // ---------------------------------------------- incremental (delta) dedup
@@ -1037,7 +1032,7 @@ object Dedup {
     // staged like minhashNearDupPairs' sigs: probe, index, and the
     // est-filter below all read this frame; unstaged, each re-runs the
     // sig kernel over existing ∪ delta
-    val sigs = Staging.stageToDiskChained(
+    val sigs = Staging.stage(
       graft.sources.Tables.roundRobinSpread(all).select(
         col("id"), col("is_delta"),
         exprs.minhash_sig(col("t"), p.shingleN, p.numHashes, p.seed).as("sig")))
@@ -1062,10 +1057,9 @@ object Dedup {
     // pre-verify est-filter on signature agreement — same cut and
     // rationale as minhashNearDupPairs; the exact verify still decides
     val estCut = math.max(0.0, p.jaccardThreshold - 2.0 / math.sqrt(p.numHashes.toDouble))
-    // staged (feeds two consumer branches — see Staging); chained:
-    // candDocs' materialization fills this cache too; released with
-    // sigs after the per-delta summary materializes below
-    val candidates = Staging.stageToDiskChained(rawCandidates
+    // staged (feeds two consumer branches — see Staging); released
+    // with sigs after the per-delta summary materializes below
+    val candidates = Staging.stage(rawCandidates
       .join(sigs.select(col("id").as("id_d"), col("sig").as("sig_d")), "id_d")
       .join(sigs.select(col("id").as("id_o"), col("sig").as("sig_o")), "id_o")
       .filter(exprs.sig_agree(col("sig_d"), col("sig_o")) >= estCut)
@@ -1074,7 +1068,7 @@ object Dedup {
       .union(candidates.select(col("id_o").as("id"))).distinct()
     // staged frames released in finally — see minhashNearDupPairs
     val perDelta = try {
-      val candDocs = Staging.stageToDisk(all
+      val candDocs = Staging.stage(all
         .join(candIds, "id")
         .select(col("id"), exprs.shingle_set(col("t"), p.shingleN).as("sh")))
       try {
@@ -1083,8 +1077,9 @@ object Dedup {
           .join(candDocs.select(col("id").as("id_o"), col("sh").as("sh_o")), "id_o")
           .withColumn("jaccard", exprs.jaccard_sorted(col("sh_d"), col("sh_o")))
           .filter(col("jaccard") >= p.jaccardThreshold)
-        // the per-delta summary is delta-sized — eagerly materialized so
-        // the staged candidate frames can be released before this returns
+        // localCheckpoint: the operator's output — delta-sized, and
+        // materialized (filling the stages) so the staged frames can be
+        // released before this returns
         verified.groupBy(col("id_d"))
           .agg(
             max(when(!col("o_is_delta"), 1L).otherwise(0L)).as("dup_ex"),
@@ -1345,10 +1340,10 @@ object Dedup {
     val keyed = embs.select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("qv", graft.functions.exprs.quantize20_q(col("v")))
       .select(col("id"), col("qv"))
-    // QUERY-LIFETIME staging (the q_corpus_pipeline convention — the
-    // session's per-query clearCache releases it): consumed by the init
-    // draw, every Lloyd round, the final labeling, and the pair join.
-    val staged = Staging.stageToDisk(keyed)
+    // staged: consumed by the init draw (which fills it — it reads
+    // every partition), every Lloyd round, the final labeling, and the
+    // pair join.
+    val staged = Staging.stage(keyed)
     val initRows = staged
       .withColumn("h", md5(concat(lit("sd:"), col("id").cast("string"))))
       .orderBy(col("h"), col("id")).limit(k)
@@ -1359,7 +1354,7 @@ object Dedup {
     for (_ <- 1 to maxIter) cents = Lloyd.round(staged, cents)
     // final LEVEL-1 assignment — staged: consumed by the k₂ counts, the
     // level-2 init window, every level-2 round, and the final labeling
-    val lvl1 = Staging.stageToDisk(staged.withColumn("cell",
+    val lvl1 = Staging.stage(staged.withColumn("cell",
       exprs.argmin_cell(col("qv"), cents.flatten, cents.length, dim)))
 
     // ---- LEVEL 2: per-cell subcell counts k₂(c) = ⌈|c|/target⌉ ≤ 1024.
@@ -1379,7 +1374,7 @@ object Dedup {
       .filter(col("rn") <= col("k2"))
       .select(col("cell"), (col("rn") - 1).cast("int").as("sub"),
         col("qv").as("cent"))
-      .localCheckpoint(true)
+      .localCheckpoint(true) // cuts lineage: each round below reads the last
     for (_ <- 1 to maxIter) {
       // fan-out join: each row meets its own cell's ~k₂ subcentroids,
       // collapsed map-side by the per-id argmin (ties → smallest sub,
@@ -1407,7 +1402,7 @@ object Dedup {
         .groupBy(col("cell"), col("sub"))
         .agg(expr("transform(array_sort(collect_list(struct(i, c))), x -> x.c)")
           .as("cent"))
-        .localCheckpoint(true)
+        .localCheckpoint(true) // cuts lineage: round i reads round i-1
     }
     // final level-2 assignment + cent_sim against the level-2 centroid;
     // cluster = cell·1024 + sub (both < 1024)
@@ -1417,7 +1412,7 @@ object Dedup {
           col("sub").as("sub")).as("w"))
       .groupBy(col("id")).agg(min(col("w")).as("w"))
       .select(col("id"), col("w.sub").as("sub"))
-    val assigned = Staging.stageToDisk(
+    val assigned = Staging.stage(
       lvl1.join(asgF, "id")
         .join(cent2, Seq("cell", "sub"))
         .select(col("id"),
@@ -1430,10 +1425,10 @@ object Dedup {
     // stage profile showed the within-cluster self-join + cosine pass
     // (the query's most expensive stage pair, ~2× 3.5 cpu-s at sf0.1)
     // running once PER consumer. The output is funnel-sized at any
-    // corpus size; query-lifetime staging like the other semDeDup
-    // frames (values unchanged — no result byte moves).
+    // corpus size; staged like the other semDeDup frames (values
+    // unchanged — no result byte moves).
     val a = assigned.select(col("cluster"), col("id"), col("qv"))
-    val pairs = Staging.stageToDisk(a.as("a").join(a.as("b"),
+    val pairs = Staging.stage(a.as("a").join(a.as("b"),
         col("a.cluster") === col("b.cluster") && col("a.id") < col("b.id"))
       .filter(exprs.cosine_q(col("a.qv"), col("b.qv")) >= tau)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b")))
@@ -1479,7 +1474,7 @@ object Dedup {
       shingleN: Int = 5, numHashes: Int = 64, seed: Long = 42L): DataFrame = {
     require(1000000L % numHashes == 0,
       "numHashes must divide 1e6 for exact micro-unit output")
-    val sigs = Staging.stageToDisk(
+    val sigs = Staging.stage(
       docs.select(col(srcCol).as("source"),
           exprs.minhash_sig(col(textCol), shingleN, numHashes, seed).as("sig"))
         .select(col("source"), posexplode(col("sig")).as(Seq("p", "v")))

@@ -71,7 +71,7 @@ object Dsir {
       .filter(length(col("w")) > 0)
       .select(col("id"), col("tgt"), bucket(col("w"), numBuckets).as("b"))
     // bucket counts for both models in ONE pass over the tokens.
-    // Eagerly checkpointed (r17): counts is only B rows, but COMPUTING
+    // Staged (r17): counts is only B rows, but COMPUTING
     // it is a full token pass, and it feeds two consumers (`totals` and
     // `ld`) — unstaged, Spark re-ran the split+md5+agg pass once per
     // consumer (the sf10 stage profile showed THREE token passes for
@@ -79,11 +79,10 @@ object Dsir {
     // the per-doc scoring pass). Pinning the B-row result costs nothing
     // at any scale and brings the operator to exactly the two corpus
     // passes the scaladoc promises (fit + scoring). Values unchanged —
-    // the checkpoint stores the same deterministic integer counts.
-    val counts = toks.groupBy(col("b"))
+    // the stage stores the same deterministic integer counts.
+    val counts = Staging.stage(toks.groupBy(col("b"))
       .agg(count(lit(1)).as("rc"),
-        sum(when(col("tgt"), 1L).otherwise(0L)).as("tc"))
-      .localCheckpoint(true)
+        sum(when(col("tgt"), 1L).otherwise(0L)).as("tc")))
     val totals = counts.agg(
       sum(col("rc")).as("rTot"), sum(col("tc")).as("tTot"))
       // ld = round(1e6 · ln p̂_t/p̂_r); add-half smoothing doubled into
@@ -98,9 +97,12 @@ object Dsir {
           ((col("rTot") * 2 + numBuckets).cast("double") /
             (col("rc") * 2 + 1))))
           .cast("long").as("ld"))
-    val perDoc = toks.join(broadcast(ld), "b")
+    // staged: the corpus-mean total and the output both read it, and
+    // AQE does not reuse an exchange whose input is a staged scan, so
+    // unstaged the scoring pass would run once per consumer
+    val perDoc = Staging.stage(toks.join(broadcast(ld), "b")
       .groupBy(col("id"))
-      .agg(count(lit(1)).as("n_tokens"), sum(col("ld")).as("logw_micro"))
+      .agg(count(lit(1)).as("n_tokens"), sum(col("ld")).as("logw_micro")))
       // selection = above the CORPUS-MEAN per-token weight. Absolute
       // `logw > 0` is the paper's resampling pivot but degenerates on a
       // corpus whose target slice is weakly separated (smoothing drift

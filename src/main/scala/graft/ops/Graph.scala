@@ -35,13 +35,13 @@ object Graph {
     val deg = sym.groupBy(col("u").as("n")).agg(count(lit(1)).as("d"))
     // orient src → dst where (deg, id) of dst is larger; carry dst's
     // degree so wedge generation can order endpoints without re-joining
-    val oriented = sym
+    // staged: both wedge sides and the closer read it
+    val oriented = Staging.stage(sym
       .join(deg.select(col("n").as("u"), col("d").as("du")), "u")
       .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
       .filter(col("du") < col("dv") ||
         (col("du") === col("dv") && col("u") < col("v")))
-      .select(col("u").as("src"), col("v").as("dst"), col("dv").as("ddeg"))
-      .localCheckpoint(eager = false) // reused: both wedge sides + closer
+      .select(col("u").as("src"), col("v").as("dst"), col("dv").as("ddeg")))
     val e1 = oriented.select(col("src"), col("dst").as("x"), col("ddeg").as("dx"))
     val e2 = oriented.select(col("src"), col("dst").as("y"), col("ddeg").as("dy"))
     e1.join(e2, Seq("src"))

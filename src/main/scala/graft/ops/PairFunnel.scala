@@ -167,6 +167,7 @@ object PairFunnel {
           built.queryExecution.logical match {
             case r: LogicalRDD if r.rdd.isCheckpointed => built
             case _: LocalRelation => built
+            // localCheckpoint: backs a build that outlives the query
             case _ => built.localCheckpoint(true)
           }
       }

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * Plan shape at scale: bigrams are enumerated PER ROW with array ops
   * (the q_bpe_pairs / q_boilerplate_ngrams discipline — no exploded-
   * word self-join, no window); unigram counts are computed once and
-  * STAGED (Staging.stageToDisk) because three consumers need them
+  * STAGED (Staging.stage) because three consumers need them
   * (c_a join, c_b join, the N total) — vocabulary-sized, sublinear in
   * the corpus, so the staging write is tiny while saving two corpus
   * re-scans. Both count joins are equi-joins on a word key.
@@ -41,7 +41,7 @@ object Phrases {
   def collocations(docs: DataFrame, textCol: String,
       discount: Int = 5, tau: Int = 1, topK: Int = 30): DataFrame = {
     val ws = docs.select(split(col(textCol), " ").as("ws"))
-    val uni = Staging.stageToDisk(
+    val uni = Staging.stage(
       ws.select(explode(col("ws")).as("t"))
         .groupBy(col("t")).agg(count(lit(1)).as("c")))
     val n = uni.agg(sum(col("c")).as("n_tokens"))

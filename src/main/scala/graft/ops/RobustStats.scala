@@ -48,24 +48,25 @@ object RobustStats {
   /** Per-group median + MAD + 3·MAD outlier counts, collection-free:
     * median by sort-selection, deviations joined against the broadcast
     * medians, MAD by a second sort-selection over the deviations, and
-    * the outlier count from one more pass over the (checkpointed)
+    * the outlier count from one more pass over the (staged)
     * deviation frame — never a value buffer anywhere.
     */
   def madOutliersByGroup(
       df: DataFrame, groupCol: String, valCol: String): DataFrame = {
-    val med = percentilesByGroup(df, groupCol, valCol, Seq(("med", 0.5)))
-      .select(col(groupCol), col("n"), col("med"))
-      .localCheckpoint(eager = true)
+    // staged: the deviation join and the final join read the medians
+    val med = Staging.stage(percentilesByGroup(df, groupCol, valCol, Seq(("med", 0.5)))
+      .select(col(groupCol), col("n"), col("med")))
     // the deviation frame feeds the MAD selection (twice: count + sort)
-    // and the outlier count — checkpoint so the corpus scan + broadcast
-    // join run once, and downstream passes read local blocks
-    val devs = df
+    // and the outlier count — staged so the corpus scan + broadcast
+    // join run once, and downstream passes read stored blocks
+    val devs = Staging.stage(df
       .join(broadcast(med.select(col(groupCol), col("med"))), groupCol)
       .select(col(groupCol),
-        abs(col(valCol).cast("double") - col("med")).as("__d"))
-      .localCheckpoint(eager = true)
-    val mad = percentilesByGroup(devs, groupCol, "__d", Seq(("mad", 0.5)))
-      .select(col(groupCol), col("mad"))
+        abs(col(valCol).cast("double") - col("med")).as("__d")))
+    // staged too: the outlier count and the final join both read it,
+    // and AQE does not reuse an exchange whose input is a staged scan
+    val mad = Staging.stage(percentilesByGroup(devs, groupCol, "__d", Seq(("mad", 0.5)))
+      .select(col(groupCol), col("mad")))
     val outliers = devs.join(broadcast(mad), groupCol)
       .groupBy(col(groupCol))
       .agg(sum(when(col("__d") > lit(3.0) * col("mad"), 1L).otherwise(0L))

@@ -79,6 +79,7 @@ object Similarity {
       k: Int): DataFrame =
     memoized("brute", Seq(corpus, queries),
         corpusId, corpusVec, queryId, queryVec, k) {
+      // localCheckpoint: backs a build that outlives the query
       bruteForceTopK(corpus, corpusId, corpusVec, queries, queryId,
         queryVec, k).localCheckpoint(true)
     }
@@ -996,9 +997,9 @@ object Similarity {
       numCells: Int = 16, nProbe: Int = 4, m: Int = 8,
       codebookSize: Int = 16, rerank: Int = 64): DataFrame = {
     require(rerank >= k, "re-rank shortlist must be at least k")
-    val probes = ivfPqProbes(queries, queryId, queryVec, coarseCb, pqCb,
-      numCells, nProbe, m, codebookSize)
-      .localCheckpoint(eager = true) // reused: cell collect + ADC join
+    // staged: the cell collect (which fills it) and the ADC join read it
+    val probes = Staging.stage(ivfPqProbes(queries, queryId, queryVec, coarseCb, pqCb,
+      numCells, nProbe, m, codebookSize))
     val cells = probes.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).sorted // ≤ numCells values — driver-safe
     val pruned = index.filter(col("cell").isin(cells.map(_.asInstanceOf[Any]): _*))
@@ -1106,10 +1107,9 @@ object Similarity {
     // brute-force corpus scan — and the anti-join consumer's
     // column-pruned copy canonicalizes differently, so exchange reuse
     // never fires (8 embeddings scans in the r17 before-plan, 4 after).
-    // Eager checkpoint of the tiny block = one exact-top-k pass (r17).
-    val top = bruteForceTopK(corpus, corpusId, corpusVec,
-      queries, queryId, queryVec, k = 1 + kHard)
-      .localCheckpoint(true)
+    // Staging the tiny block = one exact-top-k pass.
+    val top = Staging.stage(bruteForceTopK(corpus, corpusId, corpusVec,
+      queries, queryId, queryVec, k = 1 + kHard))
     val labeled = top.select(col("query_id"),
       when(col("rank") === 1, lit("positive")).otherwise(lit("hard_neg")).as("role"),
       col("rank").cast("long").as("rank"), col("neighbor_id"),
@@ -1125,7 +1125,7 @@ object Similarity {
     val outside = corpus.select(col(corpusId).as("neighbor_id"))
       .crossJoin(broadcast(queries.select(col(queryId).as("query_id"))))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .join(top.select("query_id", "neighbor_id"),
+      .join(broadcast(top.select("query_id", "neighbor_id")),
         Seq("query_id", "neighbor_id"), "left_anti")
       .select(col("query_id"), col("neighbor_id"), rndScore.as("cosine"))
     val rand = topKPerQuery(outside, nRandom)

@@ -3,73 +3,51 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Deterministic staging-table lifecycle for multi-consumer
-  * intermediates — the library's one sanctioned way to materialize a
-  * frame that several downstream branches read.
+/** The one way to materialize a frame that several branches of a query
+  * read: [[stage]] it. It persists `DISK_ONLY` and runs no job; the
+  * first consumer that executes fills the stored blocks, and every later
+  * or concurrent consumer reads them. Cache population goes through the
+  * BlockManager's get-or-compute block lock (one task computes a
+  * partition, concurrent readers wait for it and then read it), so the
+  * staged plan runs once however many consumer stages launch together
+  * (StagingSpec). Under AQE each scan of a staged frame is its own
+  * table-cache query stage with its own (cheap, reading) job, and AQE
+  * never reuses an exchange above one: when two branches would share
+  * an exchange over a staged frame, stage that shared frame too.
   *
-  * Why not a lazy `localCheckpoint`: a lazily-checkpointed frame is
-  * materialized by whichever consumer stage computes it first, and when
-  * two consumer stages launch CONCURRENTLY (AQE schedules independent
-  * query stages in parallel) each recomputes the full staged plan
-  * before any blocks are published — the regex/shingle scans these
-  * stages exist to run ONCE run 2-4×, and the race gets more likely the
-  * busier the machine is (slower stages overlap longer). The r5 driver
-  * bench showed exactly that signature: the four heaviest
-  * shingle/closure queries 4-7× over their committed times on a loaded
-  * host, `Block rdd_N already exists` warnings in the tail, everything
-  * else at ambient ~1.3×.
+  * Lazy `localCheckpoint`s were seen to race: consumer stages that ran
+  * together each recomputed the whole plan (the r5 bench signature: the
+  * shingle/closure queries 4-7× slow on a loaded host, `Block rdd_N
+  * already exists` in the log). Their blocks also outlive `clearCache`.
+  * DISK_ONLY keeps no staged rows on the heap between uses and behaves
+  * the same under memory pressure.
   *
-  * Why not an eager `localCheckpoint`: eager kills the race, but its
-  * MEMORY_AND_DISK blocks hold the staged rows ON-HEAP for the life of
-  * the query, stacking GC pressure under exactly the allocation-heavy
-  * kernels that needed staging in the first place, and the blocks are
-  * freed only when the GC collects the RDD (ContextCleaner), not when
-  * the query is done with them.
+  * A staged frame lives until the query's runner calls
+  * `catalog.clearCache()`; Bench, Verify, Inspect and the perfbench
+  * harness do so after every query. Do not [[release]] a frame that a
+  * lazy consumer has yet to read: that consumer would recompute it,
+  * once per join side.
   *
-  * `stageToDisk` instead persists DISK_ONLY and materializes NOW with
-  * one count job: every consumer — concurrent or not — reads stored
-  * blocks (compressed columnar batches, zero heap residency between
-  * uses, page-cache-fast re-reads), and `release` returns the blocks
-  * deterministically the moment the last consumer has materialized. On
-  * a real cluster this is the standard staging-table move; DISK_ONLY is
-  * also the one storage level whose behavior does not change under
-  * memory pressure.
+  * `localCheckpoint(eager = true)` is left for three cases only, each
+  * commented at its site:
+  *  - it cuts lineage in a loop (the contraction rounds of
+  *    `componentMinLabels`, semDeDup's level-2 centroids);
+  *  - it backs a build that outlives the query (`PairFunnel.shared`,
+  *    `Similarity.bruteForceTopKShared`): its blocks survive
+  *    `clearCache`;
+  *  - it is an operator's output, materialized before the operator
+  *    releases its staged intermediates (`minhashNearDupPairs`,
+  *    `incrementalNearDups`), so nothing it persisted outlives the call.
   */
 object Staging {
 
-  /** Persist to executor-local disk and materialize immediately.
-    * Returns the SAME frame (persist mutates cache registration) so the
-    * caller can both consume and later [[release]] it.
-    */
-  def stageToDisk(df: DataFrame): DataFrame = {
-    df.persist(StorageLevel.DISK_ONLY)
-    df.count() // one job; all consumers read stored blocks from here on
-    df
-  }
+  /** Persist to executor-local disk, with no job. Returns the same
+    * frame (persist mutates cache registration). */
+  def stage(df: DataFrame): DataFrame = df.persist(StorageLevel.DISK_ONLY)
 
-  /** Persist WITHOUT a materialization job. The right call whenever
-    * the caller's own next action reads every partition of the frame:
-    * a consumer that is itself staged eagerly, or a driver-side collect
-    * over all rows (portableFitAssign's init draw, an order+limit).
-    * That action computes this subtree and populates the cache along
-    * the way, saving the count job [[stageToDisk]] would run. Use
-    * [[stageToDisk]] instead when the first read touches only some
-    * partitions or is left to an arbitrary downstream consumer.
-    * Safe even if the consumer's plan scans this frame from several
-    * branches: cache population goes through the BlockManager's
-    * get-or-compute block locking (one task computes a partition,
-    * concurrent readers block then read), unlike a lazy localCheckpoint
-    * whose racing stages each recompute the whole plan.
-    */
-  def stageToDiskChained(df: DataFrame): DataFrame = {
-    df.persist(StorageLevel.DISK_ONLY)
-    df
-  }
-
-  /** Unpersist staged frames once their consumers have materialized.
-    * Deterministic (CacheManager entry removed synchronously; block
-    * deletion async) — nothing outlives the operator that staged it.
-    */
+  /** Unpersist staged frames once every consumer has materialized.
+    * The CacheManager entry goes synchronously; block deletion is
+    * asynchronous. */
   def release(dfs: DataFrame*): Unit =
     dfs.foreach(_.unpersist(blocking = false))
 }

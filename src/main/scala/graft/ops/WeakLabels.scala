@@ -76,7 +76,7 @@ object WeakLabels {
     // consumer re-evaluates the aggregate or joins it back.
     val v = votes(graft.sources.Tables.spreadForKernel(docs))
     val maj = signum(LfCols.map(col).reduce(_ + _)).cast("long")
-    val voted = Staging.stageToDiskChained(v.withColumn("m", maj))
+    val voted = Staging.stage(v.withColumn("m", maj))
     val aggCols: Seq[Column] = LfCols.flatMap { c =>
       Seq(
         sum(when(col(c) =!= 0L && col(c) === col("m"), 1L).otherwise(0L))

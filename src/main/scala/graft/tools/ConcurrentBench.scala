@@ -5,17 +5,17 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Concurrent-session throughput + isolation check (r10 verdict item
   * 7): the per-round bench runs one query at a time, but a real cluster
   * multiplexes sessions over one shared context — concurrent stages
   * contend for cores, the CacheManager serves several sessions at once,
-  * and the staged frames ([[graft.ops.Staging.stageToDisk]]'s
-  * persist+materialize protocol) see concurrent writers/readers of
-  * identical plans from DIFFERENT sessions, a path the single-stream
-  * bench never exercises.
+  * and the staged frames ([[graft.ops.Staging.stage]], filled by their
+  * first consumer) see concurrent writers/readers of identical plans
+  * from DIFFERENT sessions, a path the single-stream bench never
+  * exercises.
   *
   * Shape: TPC-H-style throughput run. `streams` worker threads each own
   * a `SparkSession.newSession()` (isolated SQLConf/temp views, shared
@@ -94,7 +94,7 @@ object ConcurrentBench {
       // stages; fair sharing is what a multiplexing cluster runs.
       .config("spark.scheduler.mode", "FAIR"))
 
-    val queries = SparkEntryAccess.queries
+    val queries = graft.SparkEntry.queries
     // single-stream reference pass: expected fingerprint per query +
     // the serial wall for the throughput_x denominator
     val t0 = System.nanoTime()
@@ -145,12 +145,4 @@ object ConcurrentBench {
         s""""sf":"$sfDir"}""")
     root.stop()
   }
-}
-
-/** Thin indirection so this tool compiles in the tools package without
-  * importing graft.* wholesale.
-  */
-private object SparkEntryAccess {
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.SparkEntry.queries
 }

@@ -22,9 +22,9 @@ import graft.{Sessions, SparkEntry, StageCollector}
   *  - `--plan` (default): the formatted physical plan before execution.
   *  - `--final`: the plan that ran, taken from the `noop` write's own
   *    execution, so adaptive plans show `isFinalPlan=true`.
-  *  - `--stages`: per-stage wall/run/cpu/shuffle/spill lines, each marked
-  *    `construct` (ran while the DataFrame was built) or `execute` (ran
-  *    in the `noop` write). With `reps` > 1 the query runs that many
+  *  - `--stages`: per-stage wall/run/cpu/input/shuffle/spill lines, each
+  *    marked `construct` (ran while the DataFrame was built) or `execute`
+  *    (ran in the `noop` write). With `reps` > 1 the query runs that many
   *    times from cleared caches and memos, and the last (JIT-warm) run
   *    is printed. Stages of background builds land in whichever phase
   *    they complete in.
@@ -79,7 +79,7 @@ object Inspect {
 
   /** `df.queryExecution` is not the execution a write runs: the write
     * plans its own, so only that one's adaptive plan is finalized. */
-  private def finalPlan(df: DataFrame): String = {
+  private[graft] def finalPlan(df: DataFrame): String = {
     val spark = df.sparkSession
     val ran = new ConcurrentLinkedQueue[QueryExecution]
     val listener = new QueryExecutionListener {
