@@ -24,7 +24,7 @@ package graft
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Sessions.sfDir
     val spark = Sessions.start()
     // contention telemetry (SURVEY §12 made the core-sharing
     // attribution prose; this makes it mechanical): summed executor
@@ -64,10 +64,8 @@ object Bench {
         firstSec: Option[Double] = None,
         cpuS: Double = 0.0, runS: Double = 0.0, spillMb: Double = 0.0,
         stealS: Double = 0.0, compiles: Long = 0L)
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+      .filter { case (n, _) => Sessions.queries.forall(_.contains(n)) }
     // committed per-query baseline (also feeds the vs_prev gate below):
     // loaded up front so the blip-retry policy can consult it per query
     // default baseline bumped r15 -> r17 (r16 verdict item 2): the

@@ -17,6 +17,14 @@ object Sessions {
   def cpusFrom(env: Option[String]): Int =
     env.fold(Runtime.getRuntime.availableProcessors)(_.trim.toInt)
 
+  /** The runners' sf table directory: `SPARK_GRAFT_SF_DIR`, else sf0.1. */
+  lazy val sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** `SPARK_GRAFT_QUERIES` (comma-separated names), which restricts a
+    * Bench or Verify run for local iteration; `None` runs every query. */
+  lazy val queries: Option[Set[String]] =
+    sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).toSet)
+
   /** `local[cpus]` with as many shuffle partitions, UTC, no UI. Pass
     * `cpus` only where a result or a pinned count depends on it. */
   def builder(cpus: Int = Sessions.cpus): SparkSession.Builder =

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * relational formulation (joins + partial aggregates) rather than a
   * vertex-program runtime: every step is a hash shuffle Catalyst can
   * plan, AQE can rebalance, and the oracle can recompute.
-  * PageRank (iterative mass flow) lives in SparkEntry.q_pagerank;
+  * PageRank (iterative mass flow) lives in GraphQueries' q_pagerank;
   * triangle counting (the local-clustering primitive) lives here.
   */
 object Graph {

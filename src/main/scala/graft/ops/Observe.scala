@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Zero-extra-scan data-quality monitoring.
   *
-  * [[graft.SparkEntry q_profile]] is the offline profiler (its own
+  * q_profile ([[graft.queries.RelationalQueries]]) is the offline profiler (its own
   * scan); this is the ONLINE variant: `observe` piggybacks the metric
   * aggregates onto whatever job the caller runs next, so the same tasks
   * that produce the query result also emit row counts / null counts /

@@ -198,7 +198,7 @@ object Similarity {
     * md5("fitcap:"+id) fall below thr = max(1, (MaxFitSample·2^32) //
     * cnt) formatted %08x (truncating int64 division, cnt = the draw's
     * count) — so any engine that can count the same draw can replay the
-    * cap exactly; the SparkEntry fit CTEs emit this predicate verbatim
+    * cap exactly; AnnQueries' fit CTEs emit this predicate verbatim
     * and the bit-for-bit replay contract now holds PAST the cap (the
     * r9 xxhash64 cut broke it exactly where the cap engaged, sf10+).
     */
@@ -243,8 +243,8 @@ object Similarity {
     // assignment, radius statistic, probe ranking — moved to PORTABLE
     // integer arithmetic (the semDeDup discipline) so q_ann_ivf /
     // q_ann_ivf_recall / q_ann_ivf_sweep carry full DuckDB oracles
-    // instead of rows+spec. Contract, mirrored in SparkEntry's
-    // AnnIvfCte:
+    // instead of rows+spec. Contract, mirrored in AnnQueries'
+    // AnnIvfCandidateCte:
     //  - components quantized floor(v·2^20 + 0.5) (quantize20);
     //  - fit draw = rows whose md5("ivffit:"+id) hex prefix is below
     //    round(fitFraction·256) as two hex digits (1/256 granularity —
@@ -474,7 +474,7 @@ object Similarity {
     * the semDeDup/IVF portability discipline, so every code, ADC score
     * and shortlist the codebook produces can be replayed bit-for-bit
     * by another engine (the q_ann_pq / q_ann_ivfpq DuckDB oracles do).
-    * Contract, mirrored in SparkEntry's AnnPq… and AnnIvfPq… CTEs:
+    * Contract, mirrored in AnnQueries' AnnPq… and AnnIvfPq… CTEs:
     *  - components are quantNorm20 integers (raw fits) or exact
     *    integer residuals of them (IVF+PQ residual fits);
     *  - `rows` arrive SORTED by (md5(initTag+":"+id), id) — the

@@ -32,15 +32,14 @@ import graft.{Sessions, SparkEntry, StageCollector}
   *    plan (AQE off, on a new session). A table scanned 3+ times hints
   *    at a shared subtree each consumer re-derives.
   *
-  * `sfDir` defaults to `SPARK_GRAFT_SF_DIR`, else sf0.1, as in Bench.
+  * `sfDir` defaults to [[graft.Sessions.sfDir]], as in Bench.
   */
 object Inspect {
   def main(args: Array[String]): Unit = {
     val (flags, rest) = args.toSeq.partition(_.startsWith("--"))
     require(rest.nonEmpty && flags.size <= 1,
       "usage: Inspect <query|all> [--show|--plan|--final|--stages|--scans] [sfDir] [reps]")
-    val sfDir = rest.lift(1)
-      .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    val sfDir = rest.lift(1).getOrElse(Sessions.sfDir)
     val spark = Sessions.start(logLevel = "ERROR")
     try run(spark, rest.head, flags.headOption.getOrElse("--plan"), sfDir,
       rest.lift(2).fold(1)(_.toInt))

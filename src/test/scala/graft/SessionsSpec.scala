@@ -34,6 +34,13 @@ class SessionsSpec extends SparkSpecBase {
     assert(sites.map(_._1) === Seq("Sessions.scala"), sites)
   }
 
+  test("SPARK_GRAFT_QUERIES and SPARK_GRAFT_SF_DIR are read once, beside the cores") {
+    for (name <- Seq("QUERIES", "SF_DIR")) {
+      val sites = codeSites("\"SPARK_GRAFT_" + name + "\"")
+      assert(sites.map(_._1) === Seq("Sessions.scala"), sites)
+    }
+  }
+
   test("a factory session carries UTC, nanosAsLong, no UI, and one shuffle partition per core") {
     val conf = spark.conf
     assert(conf.get("spark.sql.session.timeZone") === "UTC")
