@@ -377,23 +377,11 @@ object HashKernels extends Serializable {
     best
   }
 
-  /** Agreeing-position fraction of two equal-length MinHash signatures
-    * (the MinHash Jaccard estimator; see [[SigAgree]]).
-    */
-  def sigAgree(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
-    if (n == 0) return 0.0
-    var eq = 0
-    var i = 0
-    while (i < n) { if (a.getLong(i) == b.getLong(i)) eq += 1; i += 1 }
-    eq.toDouble / n
-  }
-
   /** Low-byte digest of a MinHash signature: one byte per hash position
     * (the values are 31-bit universal-hash outputs, so the low byte is
     * uniform). Equality of signature values implies equality of digest
-    * bytes, so [[digestAgree]] over digests is always ≥ [[sigAgree]]
-    * over the full signatures — a digest-based estimate cut is strictly
+    * bytes, so [[digestAgree]] over digests is always ≥ the agreement
+    * of the full signatures — a digest-based estimate cut is strictly
     * MORE permissive (false byte-collisions inflate agreement by at
     * most (1−est)/256 in expectation), never lossier. The point is
     * shuffle bytes: 64 B per row on the banding exchange vs 520 B for
@@ -1018,28 +1006,6 @@ case class LongestCommonRun(first: Expression, second: Expression,
     copy(first = f, second = s, third = t)
 }
 
-/** `sig_agree(sig_a, sig_b)`: fraction of agreeing MinHash signature
-  * positions — the unbiased MinHash estimate of Jaccard similarity.
-  * The pre-verify candidate filter: banding recalls far below the
-  * verify threshold (a band needs only rowsPerBand consecutive
-  * agreements), so on boilerplate-heavy corpora the raw candidate set
-  * is dominated by ~0.2-Jaccard pairs the exact verify exists to
-  * reject; this estimate, computed from signatures the pipeline
-  * already holds, separates them at 64-compare cost per pair instead
-  * of a shingle-set build + sorted-merge per pair.
-  */
-case class SigAgree(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "sig_agree"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.sigAgree(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.HashKernels.sigAgree($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SigAgree =
-    copy(left = l, right = r)
-}
-
 /** `sig_digest(sig)`: low-byte digest of a MinHash signature (binary,
   * one byte per position — see [[HashKernels.sigDigest]]).
   */
@@ -1054,7 +1020,11 @@ case class SigDigest(child: Expression) extends UnaryExpression {
 }
 
 /** `digest_agree(a, b)`: agreeing-byte fraction of two sig_digest
-  * digests (the shuffle-compact MinHash agreement estimator).
+  * digests (the shuffle-compact MinHash agreement estimator) — the
+  * near-dup funnel's pre-verify cut: banding recalls far below the
+  * verify threshold, so the raw candidates of a boilerplate-heavy
+  * corpus are mostly ~0.2-Jaccard pairs, and 64 byte compares per pair
+  * drop them before any shingle set is built.
   */
 case class DigestAgree(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = DoubleType
@@ -1419,8 +1389,6 @@ object exprs {
     ColumnBridge.column(ShingleSet(expr(c), n))
   def jaccard_sorted(a: Column, b: Column): Column =
     ColumnBridge.column(JaccardSorted(expr(a), expr(b)))
-  def sig_agree(a: Column, b: Column): Column =
-    ColumnBridge.column(SigAgree(expr(a), expr(b)))
   def sig_digest(a: Column): Column =
     ColumnBridge.column(SigDigest(expr(a)))
   def digest_agree(a: Column, b: Column): Column =

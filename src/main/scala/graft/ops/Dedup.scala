@@ -161,13 +161,25 @@ object Dedup {
   def minhashNearDupPairs(
       docs: DataFrame, textCol: String, idCol: String,
       p: MinhashParams = MinhashParams(),
-      localMaxRows: Long = LocalFunnelMaxRows): DataFrame = {
+      localMaxRows: Long = LocalFunnelMaxRows): DataFrame =
+    minhashNearDupPairs(docs, textCol, idCol, p, localMaxRows, probe = None)
+
+  /** The funnel itself. With a `probe` (a non-null Boolean column of
+    * `docs`), a pair is emitted only when at least one of its rows has
+    * it set: the check sits in the driver pass's emit and in the banding
+    * self-join's condition, ahead of the estimate cut, the verify and
+    * the distinct ([[incrementalNearDups]]'s delta-vs-corpus pairs).
+    * With none, every pair is a candidate.
+    */
+  private def minhashNearDupPairs(
+      docs: DataFrame, textCol: String, idCol: String, p: MinhashParams,
+      localMaxRows: Long, probe: Option[String]): DataFrame = {
     val local =
       if (localMaxRows > 0 && integralType(docs.schema(idCol).dataType) &&
           docs.schema(textCol).dataType == StringType &&
           graft.sources.Tables.footerBound(docs)
             .exists(b => b.rows <= localMaxRows && b.bytes <= LocalFunnelMaxBytes))
-        localMinhashPairs(docs, textCol, idCol, p)
+        localMinhashPairs(docs, textCol, idCol, p, probe)
       else None
     if (local.isDefined) return local.get
     // spread above Tables.SpreadMinBytes: the signature kernel must not
@@ -177,17 +189,19 @@ object Dedup {
     // hash position (64 B vs 520 B), so the banding exchange stays
     // corpus-linear at ~90 B/row · bands; the self-join reuses that ONE
     // exchange for both sides, so the signature kernel runs once per doc.
+    // The probe flag, if any, rides along with the id as `pf`.
+    val keyCols = col("id") +: probe.map(_ => col("pf")).toSeq
     val sigged = graft.sources.Tables.spreadForKernel(docs).select(
-      col(idCol).as("id"),
-      exprs.minhash_sig(col(textCol), p.shingleN, p.numHashes, p.seed).as("sig"))
+      (col(idCol).as("id") +: probe.map(c => col(c).as("pf")).toSeq) :+
+        exprs.minhash_sig(col(textCol), p.shingleN, p.numHashes, p.seed).as("sig"): _*)
     val bandCols = (0 until p.bands).map { i =>
       struct(lit(i).as("band"),
         xxhash64(slice(col("sig"), i * p.rowsPerBand + 1, p.rowsPerBand)).as("bh"))
     }
     val buckets = sigged
-      .select(col("id"), exprs.sig_digest(col("sig")).as("dg"),
-        explode(array(bandCols: _*)).as("b"))
-      .select(col("id"), col("dg"), col("b.band").as("band"), col("b.bh").as("bh"))
+      .select(keyCols ++ Seq(exprs.sig_digest(col("sig")).as("dg"),
+        explode(array(bandCols: _*)).as("b")): _*)
+      .select(keyCols ++ Seq(col("dg"), col("b.band").as("band"), col("b.bh").as("bh")): _*)
 
     // PRE-VERIFY est-filter — the step that keeps the funnel "rare by
     // construction" honest on boilerplate-heavy corpora. Banding's
@@ -268,12 +282,14 @@ object Dedup {
           .filter(col("hn") > p.heavyBucketCap)
           .select(col("band"), col("bh"), lit(true).as("hv"))
         bucketsP.join(broadcast(heavyKeys), Seq("band", "bh"), "left")
-          .select(col("id"), col("dg"), col("band"), col("bh"),
+          .select(keyCols ++ Seq(col("dg"), col("band"), col("bh"),
             explode(BucketRefine.subkeys(col("dg"), p.numHashes,
-              col("hv").isNotNull)).as("sk"))
+              col("hv").isNotNull)).as("sk")): _*)
       }
     val a = joinSide.as("a")
     val b = joinSide.as("b")
+    val banded = col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
+      col("a.sk") === col("b.sk") && col("a.id") < col("b.id")
     // scoped subset-co-partitioning relaxation (see the joinSide note
     // above). Set BEFORE the candidates persist below: persist()
     // finalizes the cached physical plan at registration time, so the
@@ -287,8 +303,7 @@ object Dedup {
     // candidates (the PLAUSIBLE set) feeds the shingle join-back and
     // the final verify — staged so the banding self-join runs once.
     val candidates = Staging.stage(a.hint("shuffle_hash").join(b,
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.sk") === col("b.sk") && col("a.id") < col("b.id"))
+        probe.fold(banded)(_ => banded && (col("a.pf") || col("b.pf"))))
       .filter(exprs.digest_agree(col("a.dg"), col("b.dg")) >= estCut)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct())
@@ -359,14 +374,17 @@ object Dedup {
     * [[LocalFunnelMaxPairs]].
     */
   private def localMinhashPairs(docs: DataFrame, textCol: String, idCol: String,
-      p: MinhashParams): Option[DataFrame] = {
+      p: MinhashParams, probe: Option[String]): Option[DataFrame] = {
     val idType = docs.schema(idCol).dataType
     // text as its raw bytes: a String round trip would re-encode
     // invalid UTF-8 and change the hashes
-    val rows = docs.select(col(idCol).cast(LongType), col(textCol).cast(BinaryType))
+    val rows = docs.select(Seq(col(idCol).cast(LongType), col(textCol).cast(BinaryType)) ++
+        probe.map(col): _*)
       .collect().filter(r => !r.isNullAt(0) && !r.isNullAt(1))
     val ids = rows.map(_.getLong(0))
     val texts = rows.map(r => UTF8String.fromBytes(r.getAs[Array[Byte]](1)))
+    // without a probe every row may start a pair
+    val probed = rows.map(r => probe.isEmpty || r.getBoolean(2))
     val n = rows.length
     val digests = new Array[Array[Byte]](n)
     val keys = Array.ofDim[Long](p.bands, n)
@@ -389,7 +407,7 @@ object Dedup {
         var y = x + 1
         while (y < m.length && bounded) {
           val (a, b) = (ids(m(x)), ids(m(y)))
-          if (a != b) {
+          if (a != b && (probed(m(x)) || probed(m(y)))) {
             val pair = if (a < b) (a, b) else (b, a)
             if (!candidates.contains(pair) &&
                 HashKernels.digestAgree(digests(m(x)), digests(m(y))) >= estCut)
@@ -761,33 +779,6 @@ object Dedup {
 
   // -------------------------------------------- embedding-cosine near-dup
 
-  /** Embedding near-dup pairs: random-hyperplane LSH buckets (sign bits
-    * of `numPlanes` fixed projections), cosine-verified. Same
-    * bucket-then-verify shape as MinHash — no O(n²).
-    *
-    * `numTables` independent hash tables (fresh plane sets per table)
-    * OR-amplify recall: a pair is a candidate if it collides in ANY
-    * table, so the miss probability decays exponentially in the table
-    * count — the LSH analog of MinHash banding. Pairs that collide in
-    * several tables are verified in each table's bucket join (the
-    * cosine is deterministic, so the duplicates are identical rows)
-    * and deduplicated after the threshold filter.
-    */
-  /** @param numPartitions when > 0, the bucket self-join's explicit
-    *   (t, sig) partition count — the r15 embed-probe fix: the join
-    *   shuffles on exactly these keys, so a user repartition pins the
-    *   build-side size per task with NO extra exchange
-    *   (EnsureRequirements sees the keys already clustered; both join
-    *   sides reuse the one exchange). At 4M self-join vectors the
-    *   default 32 partitions handed each shuffled-hash task a ~1.25M-row
-    *   (~350 MB) build and the join-consume stage ran 96.7% of query
-    *   cpu at 1.45× the per-pair cost of the 400k run (probe record
-    *   r15_embed_neardup_probe.json); callers that know the corpus size
-    *   from parquet footers (q_embed_neardup) size this like the
-    *   simjoin prefix join — ~250k bucket rows per task, capped under
-    *   the sort-bypass boundary. 0 (the default) keeps the session's
-    *   shuffle partitioning untouched for small corpora.
-    */
   /** Shuffle-partition sizing for the bucket/prefix SELF-JOINS (the
     * r14 simjoin fix, generalized in r15/r16): one partition per
     * ~`rowsPerTask` shuffled rows bounds the per-task shuffled-hash
@@ -870,6 +861,19 @@ object Dedup {
     (0 until t).map(i => if (i < nHi) kHi else kLo)
   }
 
+  /** Embedding near-dup pairs: random-hyperplane LSH buckets (sign bits
+    * of `numPlanes` fixed projections), cosine-verified. Same
+    * bucket-then-verify shape as MinHash — no O(n²).
+    *
+    * `numTables` independent hash tables (fresh plane sets per table)
+    * OR-amplify recall: a pair is a candidate if it collides in ANY
+    * table, so the miss probability decays exponentially in the table
+    * count — the LSH analog of MinHash banding. Pairs that collide in
+    * several tables are verified in each table's bucket join (the
+    * cosine is deterministic, so the duplicates are identical rows)
+    * and deduplicated after the threshold filter. `numPartitions`: see
+    * the per-table overload.
+    */
   def embeddingNearDupPairs(
       embs: DataFrame, vecCol: String, idCol: String,
       numPlanes: Int = 12, threshold: Double = 0.95, seed: Long = 42L,
@@ -961,6 +965,22 @@ object Dedup {
     * identical to the uniform form (a pair is a candidate if it
     * collides in ANY table; cosine verify decides membership), plus
     * the optional [[embeddingBuckets]] occupancy cap.
+    *
+    * @param numPartitions when > 0, the bucket self-join's explicit
+    *   (t, sig) partition count — the r15 embed-probe fix: the join
+    *   shuffles on exactly these keys, so a user repartition pins the
+    *   build-side size per task with NO extra exchange
+    *   (EnsureRequirements sees the keys already clustered; both join
+    *   sides reuse the one exchange). At 4M self-join vectors the
+    *   default 32 partitions handed each shuffled-hash task a ~1.25M-row
+    *   (~350 MB) build and the join-consume stage ran 96.7% of query
+    *   cpu at 1.45× the per-pair cost of the 400k run (probe record
+    *   r15_embed_neardup_probe.json); callers that know the corpus size
+    *   from parquet footers (q_embed_neardup) size this like the
+    *   simjoin prefix join — ~250k bucket rows per task, capped under
+    *   the sort-bypass boundary. 0 (the uniform overload's default)
+    *   keeps the session's shuffle partitioning untouched for small
+    *   corpora.
     */
   def embeddingNearDupPairs(
       embs: DataFrame, vecCol: String, idCol: String,
@@ -1010,87 +1030,40 @@ object Dedup {
   // ---------------------------------------------- incremental (delta) dedup
 
   /** Incremental near-dup audit of a DELTA batch against an EXISTING
-    * corpus — the production shape of MinHash dedup: the corpus's band
-    * table is a standing INDEX (computed once, reused every ingest);
-    * each new batch signs only its own documents and PROBES the index.
-    * Nothing existing×existing is ever recomputed — the candidate join
-    * is delta-bands × (existing ∪ delta)-bands, so the per-ingest cost
-    * scales with |delta| · bands, not with the corpus.
+    * corpus. Returns one row per delta doc: `dup_of_existing` (has a
+    * verified near-dup already in the corpus — the REJECT signal) and
+    * `n_delta_dups` (distinct verified near-dup partners inside the same
+    * batch — feed these to [[componentMinLabels]] for within-batch
+    * keep-one).
     *
-    * Returns one row per delta doc: `dup_of_existing` (has a verified
-    * near-dup already in the corpus — the REJECT signal) and
-    * `n_delta_dups` (verified near-dup partners inside the same batch —
-    * feed these to [[componentMinLabels]] for within-batch keep-one).
-    * Both sides verified with exact n-gram Jaccard, candidates-only,
-    * same funnel as [[minhashNearDupPairs]].
+    * One call of the [[minhashNearDupPairs]] funnel over existing ∪
+    * delta, restricted to pairs with a delta side, so no
+    * existing×existing pair is formed; the same banding, estimate cut,
+    * heavy-bucket sub-keying and exact verify, on the driver when the
+    * footers bound both inputs. The corpus side is signed and banded
+    * again on every call: no standing index of it is kept.
     */
   def incrementalNearDups(
       existing: DataFrame, delta: DataFrame, textCol: String, idCol: String,
       p: MinhashParams = MinhashParams()): DataFrame = {
-    val all = existing.select(col(idCol).as("id"), col(textCol).as("t"), lit(false).as("is_delta"))
-      .union(delta.select(col(idCol).as("id"), col(textCol).as("t"), lit(true).as("is_delta")))
-    // staged like minhashNearDupPairs' sigs: probe, index, and the
-    // est-filter below all read this frame; unstaged, each re-runs the
-    // sig kernel over existing ∪ delta
-    val sigs = Staging.stage(
-      graft.sources.Tables.roundRobinSpread(all).select(
-        col("id"), col("is_delta"),
-        exprs.minhash_sig(col("t"), p.shingleN, p.numHashes, p.seed).as("sig")))
-    val bandCols = (0 until p.bands).map { i =>
-      struct(lit(i).as("band"),
-        xxhash64(slice(col("sig"), i * p.rowsPerBand + 1, p.rowsPerBand)).as("bh"))
-    }
-    val buckets = sigs
-      .select(col("id"), col("is_delta"), explode(array(bandCols: _*)).as("b"))
-      .select(col("id"), col("is_delta"), col("b.band").as("band"), col("b.bh").as("bh"))
-    // probe side = delta only; index side = everything. At 100 TB the
-    // index side is a persisted table, not recomputed — recomputing here
-    // only because the test fixture derives both sides from one frame.
-    val probe = buckets.filter(col("is_delta")).as("a")
-    val index = buckets.as("b")
-    val rawCandidates = probe.join(index,
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.id") =!= col("b.id"))
-      .select(col("a.id").as("id_d"), col("b.id").as("id_o"),
-        col("b.is_delta").as("o_is_delta"))
-      .distinct()
-    // pre-verify est-filter on signature agreement — same cut and
-    // rationale as minhashNearDupPairs; the exact verify still decides
-    val estCut = math.max(0.0, p.jaccardThreshold - 2.0 / math.sqrt(p.numHashes.toDouble))
-    // staged (feeds two consumer branches — see Staging); released
-    // with sigs after the per-delta summary materializes below
-    val candidates = Staging.stage(rawCandidates
-      .join(sigs.select(col("id").as("id_d"), col("sig").as("sig_d")), "id_d")
-      .join(sigs.select(col("id").as("id_o"), col("sig").as("sig_o")), "id_o")
-      .filter(exprs.sig_agree(col("sig_d"), col("sig_o")) >= estCut)
-      .select(col("id_d"), col("id_o"), col("o_is_delta")))
-    val candIds = candidates.select(col("id_d").as("id"))
-      .union(candidates.select(col("id_o").as("id"))).distinct()
-    // staged frames released in finally — see minhashNearDupPairs
-    val perDelta = try {
-      val candDocs = Staging.stage(all
-        .join(candIds, "id")
-        .select(col("id"), exprs.shingle_set(col("t"), p.shingleN).as("sh")))
-      try {
-        val verified = candidates
-          .join(candDocs.select(col("id").as("id_d"), col("sh").as("sh_d")), "id_d")
-          .join(candDocs.select(col("id").as("id_o"), col("sh").as("sh_o")), "id_o")
-          .withColumn("jaccard", exprs.jaccard_sorted(col("sh_d"), col("sh_o")))
-          .filter(col("jaccard") >= p.jaccardThreshold)
-        // localCheckpoint: the operator's output — delta-sized, and
-        // materialized (filling the stages) so the staged frames can be
-        // released before this returns
-        verified.groupBy(col("id_d"))
-          .agg(
-            max(when(!col("o_is_delta"), 1L).otherwise(0L)).as("dup_ex"),
-            sum(when(col("o_is_delta"), 1L).otherwise(0L)).as("n_delta_dups"))
-          .localCheckpoint(eager = true)
-      } finally Staging.release(candDocs)
-    } finally Staging.release(candidates, sigs)
+    // fixed names: the funnel's own columns (id, sig, ...) cannot clash
+    val all = existing.select(col(idCol).as("doc_id"), col(textCol).as("text"),
+        lit(false).as("is_delta"))
+      .union(delta.select(col(idCol).as("doc_id"), col(textCol).as("text"),
+        lit(true).as("is_delta")))
+    val pairs = minhashNearDupPairs(all, "text", "doc_id", p, LocalFunnelMaxRows,
+      probe = Some("is_delta"))
+    // each verified pair seen from both of its docs, with the partner's side
+    val partners = pairs.select(col("id_a").as("id_d"), col("id_b").as("id_o"))
+      .union(pairs.select(col("id_b").as("id_d"), col("id_a").as("id_o")))
+      .join(all.select(col("doc_id").as("id_o"), col("is_delta").as("o_is_delta")), "id_o")
+    val perDelta = partners.groupBy(col("id_d")).agg(
+      max(!col("o_is_delta")).as("dup_of_existing"),
+      countDistinct(when(col("o_is_delta"), col("id_o"))).as("n_delta_dups"))
     delta.select(col(idCol).as("id_d"))
       .join(perDelta, Seq("id_d"), "left")
       .select(col("id_d").as(idCol),
-        (coalesce(col("dup_ex"), lit(0L)) === 1L).as("dup_of_existing"),
+        coalesce(col("dup_of_existing"), lit(false)).as("dup_of_existing"),
         coalesce(col("n_delta_dups"), lit(0L)).as("n_delta_dups"))
   }
 

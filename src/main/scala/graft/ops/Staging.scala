@@ -36,8 +36,9 @@ import org.apache.spark.storage.StorageLevel
   *    `Similarity.bruteForceTopKShared`): its blocks survive
   *    `clearCache`;
   *  - it is an operator's output, materialized before the operator
-  *    releases its staged intermediates (`minhashNearDupPairs`,
-  *    `incrementalNearDups`), so nothing it persisted outlives the call.
+  *    releases its staged intermediates (`minhashNearDupPairs`'
+  *    distributed funnel, the one [[release]] site), so nothing it
+  *    persisted outlives the call.
   */
 object Staging {
 

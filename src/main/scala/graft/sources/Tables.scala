@@ -253,10 +253,11 @@ object Tables {
   /** Upper bound on a frame's rows (and their uncompressed bytes)
     * derivable WITHOUT a job: when the plan is only
     * row-preserving-or-filtering operators over one parquet scan, the
-    * summed footers of its files bound the result. Conservative — any
-    * operator that could EXPAND rows (join, explode, union) or any
-    * other source returns None, and the caller falls back to a real
-    * count or the distributed path.
+    * summed footers of its files bound the result; a union is bounded
+    * by the sum of its children's bounds. Conservative — any operator
+    * that could EXPAND rows (join, explode), a union with an unbounded
+    * child, or any other source returns None, and the caller falls back
+    * to a real count or the distributed path.
     */
   def footerBound(df: DataFrame): Option[FooterBound] = {
     import org.apache.spark.sql.catalyst.plans.logical._
@@ -266,6 +267,10 @@ object Tables {
       case Project(_, c) => walk(c)
       case Filter(_, c) => walk(c)
       case SubqueryAlias(_, c) => walk(c)
+      case u: Union =>
+        u.children.foldLeft(Option(FooterBound(0L, 0L))) { (acc, c) =>
+          for (sum <- acc; b <- walk(c)) yield FooterBound(sum.rows + b.rows, sum.bytes + b.bytes)
+        }
       case l: LogicalRelation => l.relation match {
         case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
           try {

@@ -26,7 +26,9 @@ class ConstructJobsSpec extends SparkSpecBase {
     "q_token_budget" -> 0,
     "q_bpe_merges" -> 0,
     "q_active_users" -> 0,
-    "q_chi_square" -> 0)
+    "q_chi_square" -> 0,
+    // the near-dup funnel's driver pass over existing ∪ delta: one collect
+    "q_dedup_incremental" -> 1)
 
   test("warm construct jobs per query at sf0.001") {
     budget.foreach { case (q, _) => constructJobs(q) } // warm the loads

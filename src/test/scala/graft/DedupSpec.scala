@@ -180,13 +180,22 @@ class DedupSpec extends SparkSpecBase {
       "planted near-dups should straddle naive per-doc split buckets")
   }
 
+  /** The two MinHash entry points over `d` (in memory, so the
+    * distributed funnel): the pairs, and the audit of d's odd ids as a
+    * delta against its even ones. */
+  private def funnels(d: org.apache.spark.sql.DataFrame,
+      p: Dedup.MinhashParams = Dedup.MinhashParams()) = Seq(
+    () => Dedup.minhashNearDupPairs(d, "text", "doc_id", p),
+    () => Dedup.incrementalNearDups(d.filter(col("doc_id") % 2 === 0),
+      d.filter(col("doc_id") % 2 === 1), "text", "doc_id", p))
+
   test("minhashNearDupPairs releases its internal cache (library hygiene)") {
-    spark.catalog.clearCache()
-    val out = Dedup.minhashNearDupPairs(docs, "text", "doc_id",
-      Dedup.MinhashParams(jaccardThreshold = 0.7))
-    assert(out.count() >= 1)
-    assert(org.apache.spark.sql.graft.CacheBridge.noCachedPlans(spark),
-      "the keyed signatures+shingles frame must be unpersisted once pairs materialize")
+    funnels(docs, Dedup.MinhashParams(jaccardThreshold = 0.7)).foreach { run =>
+      spark.catalog.clearCache()
+      assert(run().count() >= 1)
+      assert(org.apache.spark.sql.graft.CacheBridge.noCachedPlans(spark),
+        "the keyed signatures+shingles frame must be unpersisted once pairs materialize")
+    }
   }
 
   test("minhashNearDupPairs releases staged frames even when a downstream job FAILS") {
@@ -195,17 +204,15 @@ class DedupSpec extends SparkSpecBase {
     // library callers with no clearCache backstop — the release now
     // rides try/finally. Force a mid-pipeline failure with a poisoned
     // id column (cast blows up inside the staged subtree's consumer).
-    spark.catalog.clearCache()
     val poisoned = docs.withColumn("bad_id",
       when(col("doc_id") === 0L, lit("boom")).otherwise(col("doc_id").cast("string")))
-    intercept[Exception] {
+    funnels(poisoned.select(expr("CAST(bad_id AS BIGINT) AS doc_id"), col("text"))).foreach { run =>
+      spark.catalog.clearCache()
       // ANSI cast of "boom" fails inside the verify chain's jobs
-      Dedup.minhashNearDupPairs(
-        poisoned.select(expr("CAST(bad_id AS BIGINT) AS doc_id"), col("text")),
-        "text", "doc_id").count()
+      intercept[Exception](run().count())
+      assert(org.apache.spark.sql.graft.CacheBridge.noCachedPlans(spark),
+        "staged frames must be unpersisted on the failure path too")
     }
-    assert(org.apache.spark.sql.graft.CacheBridge.noCachedPlans(spark),
-      "staged frames must be unpersisted on the failure path too")
   }
 
   test("sharedSubstringSpans: longest embedded shared block, exactly") {

@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.functions.exprs
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.{HashKernels, exprs}
 import graft.ops.{Dedup, PairFunnel}
 import graft.sources.Tables
 
@@ -116,6 +117,88 @@ class LocalFunnelSpec extends SparkSpecBase {
     val local = Dedup.minhashNearDupPairs(docs, "text", "doc_id")
     assert(local.schema("id_a").dataType === IntegerType)
     assert(Dedup.componentMinLabels(local).schema("root").dataType === IntegerType)
+  }
+
+  /** [[Dedup.incrementalNearDups]] over `docs` split at doc_id % 5 = 4,
+    * on the parquet rows (driver pass) and on the same rows in memory
+    * (distributed funnel). Both must equal the per-delta summary of the
+    * unrestricted funnel's pairs over existing ∪ delta. Returns the rows
+    * (doc_id|dup_of_existing|n_delta_dups). */
+  private def assertIncrementalSame(docs: DataFrame,
+      p: Dedup.MinhashParams = Dedup.MinhashParams()): Seq[String] = {
+    val isDelta = col("doc_id") % 5 === 4
+    def audit(d: DataFrame): DataFrame =
+      Dedup.incrementalNearDups(d.filter(!isDelta), d.filter(isDelta), "text", "doc_id", p)
+    val plain = docs.select("doc_id", "text")
+    val local = audit(plain)
+    val dist = audit(spark.createDataFrame(
+      java.util.Arrays.asList(plain.collect(): _*), plain.schema))
+    def has(df: DataFrame, node: Class[_]): Boolean =
+      df.queryExecution.logical.exists(node.isInstance)
+    assert(has(local, classOf[LocalRelation]) && !has(local, classOf[LogicalRDD]),
+      "a footer-bounded existing ∪ delta runs the driver pass")
+    assert(has(dist, classOf[LogicalRDD]), "an in-memory input runs the distributed funnel")
+    assert(local.schema === dist.schema)
+    val got = rows(local)
+    assert(got === rows(dist))
+    val delta = plain.filter(isDelta).collect().map(_.getLong(0))
+    val partners = Dedup.minhashNearDupPairs(plain, "text", "doc_id", p).collect()
+      .flatMap(r => Seq(r.getLong(0) -> r.getLong(1), r.getLong(1) -> r.getLong(0)))
+      .groupMap(_._1)(_._2)
+    val want = delta.toSeq.map { d =>
+      val of = partners.getOrElse(d, Array.empty[Long]).toSet
+      s"$d|${of.exists(o => !delta.contains(o))}|${of.count(delta.contains)}"
+    }.sorted
+    assert(got === want)
+    got
+  }
+
+  test("incrementalNearDups: driver pass, distributed funnel and the unrestricted pairs agree") {
+    val got = assertIncrementalSame(Tables.documents(spark, Sf0001))
+    assert(got.exists(_.contains("|true|")) && got.exists(!_.endsWith("|0")),
+      s"the split must cut through planted dup families: $got")
+    // heavy buckets sub-keyed, and a family straddling the split
+    val boiler = ("lorem ipsum dolor sit amet consectetur adipiscing elit " +
+      "sed do eiusmod tempor incididunt ut labore et dolore magna aliqua ") * 3
+    val rnd = new scala.util.Random(7)
+    def tail = Seq.fill(30)(rnd.alphanumeric.take(8).mkString).mkString(" ")
+    val t = tail
+    val texts = (0 until 200).map(i => (i.toLong, s"$boiler $tail")) ++
+      (1000L to 1004L).map(i => (i, s"$boiler $t"))
+    val s = spark; import s.implicits._
+    val fam = assertIncrementalSame(parquetDocs(texts.toDF("doc_id", "text")),
+      Dedup.MinhashParams(heavyBucketCap = 8))
+    assert(fam.contains("1004|true|0"))
+  }
+
+  test("incrementalNearDups honours estFilterSigmas: a verified pair the estimate cut drops stays out") {
+    // the first few-word edit of `base` that still clears a 0.8 exact
+    // Jaccard and shares a band with it, but whose MinHash estimate
+    // falls below 0.8: a 0-sigma cut must drop it before the verify
+    val p = Dedup.MinhashParams()
+    def sigOf(t: String) = HashKernels.minhashSig(UTF8String.fromString(t),
+      p.shingleN, p.numHashes, p.seed)
+    val words = (base + " " + base.reverse).split(" ")
+    val orig = words.mkString(" ")
+    val edit = Iterator.from(1).map { seed =>
+      val rnd = new scala.util.Random(seed)
+      words.updated(rnd.nextInt(words.length), "zq" + seed)
+        .updated(rnd.nextInt(words.length), "xv" + seed).mkString(" ")
+    }.find { e =>
+      val (sa, sb) = (sigOf(orig), sigOf(e))
+      val exact = HashKernels.jaccardSorted(
+        HashKernels.shingleSet(UTF8String.fromString(orig), p.shingleN),
+        HashKernels.shingleSet(UTF8String.fromString(e), p.shingleN))
+      val est = HashKernels.digestAgree(HashKernels.sigDigest(sa), HashKernels.sigDigest(sb))
+      exact >= p.jaccardThreshold && est < p.jaccardThreshold &&
+        (0 until p.bands).exists(b =>
+          Dedup.bandKey(sa, b, p.rowsPerBand) == Dedup.bandKey(sb, b, p.rowsPerBand))
+    }.get
+    val s = spark; import s.implicits._
+    val docs = parquetDocs(Seq((0L, orig), (4L, edit), (9L,
+      "completely different content about spark query engines")).toDF("doc_id", "text"))
+    assert(assertIncrementalSame(docs).contains("4|true|0"), "the default cut admits it")
+    assert(assertIncrementalSame(docs, p.copy(estFilterSigmas = 0.0)).contains("4|false|0"))
   }
 
   test("band keys are Spark's xxhash64 over each signature slice") {

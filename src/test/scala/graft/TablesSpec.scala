@@ -196,6 +196,18 @@ class TablesSpec extends SparkSpecBase {
       case _ => false
     }
 
+  test("footerBound: a union sums its children's bounds, and an unbounded child unbounds it") {
+    val docs = Tables.documents(spark, Sf0001).select("doc_id", "text")
+    val isDelta = col("doc_id") % 5 === 4
+    val one = Tables.footerBound(docs.filter(isDelta)).get
+    assert(Tables.footerBound(docs.filter(!isDelta).union(docs.filter(isDelta))) ===
+      Some(Tables.FooterBound(2 * one.rows, 2 * one.bytes)))
+    val s = spark; import s.implicits._
+    val inMemory = Seq((1L, "a")).toDF("doc_id", "text")
+    assert(Tables.footerBound(docs.union(inMemory)).isEmpty)
+    assert(Tables.footerBound(inMemory.union(docs)).isEmpty)
+  }
+
   test("spreadForKernel: a footer-small parquet frame comes back unchanged") {
     val docs = Tables.documents(spark, Sf0001)
     assert(Tables.footerBound(docs).exists(_.bytes <= Tables.SpreadMinBytes))
