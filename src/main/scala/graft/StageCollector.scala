@@ -1,22 +1,33 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.{GraftBus, SparkContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
-/** The one stage listener: Bench sums a query's stages into its
-  * cpu/run/spill figures, `Inspect --stages` prints them one per line.
-  * It sees every job of the context, background builds' included.
+/** The one stage listener, attached by [[Runner]] for one query. Each
+  * job is put in the phase named by its `graft.phase` local property,
+  * and each of its stages with it: jobs carry the submitting thread's
+  * properties, AQE stage jobs and broadcasts included, so the split
+  * needs no bus drain between the phases. A job with no phase (a
+  * background build's thread clears it) is `background`.
   */
 final class StageCollector private (sc: SparkContext) extends SparkListener {
   import StageCollector._
 
-  private val stages = new ConcurrentLinkedQueue[Stage]
-  private val jobs = new AtomicInteger
+  private val phaseOfStage = new ConcurrentHashMap[Int, String]
+  private val jobs = new ConcurrentLinkedQueue[String]
+  private val stages = new ConcurrentLinkedQueue[(String, Stage)]
 
-  override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+  override def onJobStart(e: SparkListenerJobStart): Unit = {
+    val phase = Option(e.properties).flatMap(p => Option(p.getProperty(PhaseKey)))
+      .getOrElse(Background)
+    jobs.add(phase)
+    // a shared shuffle stage belongs to the job that submitted it first
+    e.stageIds.foreach(phaseOfStage.putIfAbsent(_, phase))
+  }
 
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
     val si = e.stageInfo
@@ -24,24 +35,35 @@ final class StageCollector private (sc: SparkContext) extends SparkListener {
     if (m != null) {
       val wall = (for { s <- si.submissionTime; c <- si.completionTime } yield c - s)
         .getOrElse(-1L)
-      stages.add(Stage(si.stageId, si.name, si.numTasks, wall, m.executorRunTime,
-        m.executorCpuTime, m.inputMetrics.bytesRead,
-        m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
-        m.diskBytesSpilled))
+      stages.add(phaseOfStage.getOrDefault(si.stageId, Background) ->
+        Stage(si.stageId, si.name, si.numTasks, wall, m.executorRunTime,
+          m.executorCpuTime, m.inputMetrics.bytesRead,
+          m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
+          m.diskBytesSpilled))
     }
   }
 
-  /** Drains the listener bus, then takes every job started and stage
-    * completed since the previous call. */
-  def take(): Phase = {
+  /** Drains the listener bus, then returns the jobs started and the
+    * stages completed since attach, by phase. */
+  def take(): Map[String, Phase] = {
     GraftBus.drain(sc)
-    Phase(jobs.getAndSet(0), Iterator.continually(stages.poll()).takeWhile(_ != null).toSeq)
+    val js = jobs.asScala
+    val ss = stages.asScala.toSeq
+    Seq(Construct, Execute, Background).map { p =>
+      p -> Phase(js.count(_ == p), ss.collect { case (`p`, s) => s })
+    }.toMap
   }
 
   def stop(): Unit = sc.removeSparkListener(this)
 }
 
 object StageCollector {
+  /** The thread-local property that names the phase a job runs in. */
+  val PhaseKey = "graft.phase"
+  val Construct = "construct"
+  val Execute = "execute"
+  val Background = "background"
+
   /** One completed stage. `runMs` sums task wall (cache-lock and IO
     * waits included); `cpuNs` sums on-cpu time, the contention-relevant
     * number; `inputB` counts bytes read from files and from stored
@@ -55,11 +77,7 @@ object StageCollector {
         f"tasks=$tasks%3d  ${name.take(60)}"
   }
 
-  final case class Phase(jobs: Int, stages: Seq[Stage]) {
-    def cpuNs: Long = stages.map(_.cpuNs).sum
-    def runMs: Long = stages.map(_.runMs).sum
-    def spillB: Long = stages.map(_.spillB).sum
-  }
+  final case class Phase(jobs: Int, stages: Seq[Stage])
 
   def attach(sc: SparkContext): StageCollector = {
     val c = new StageCollector(sc)

@@ -26,25 +26,18 @@ object Verify {
   def dump(spark: SparkSession, defs: Seq[QueryDef], sfDir: String,
       outDir: String): Seq[String] = {
     new java.io.File(outDir).mkdirs()
-    val failed = defs.filterNot { d =>
-      // repartition(1), NOT coalesce(1): both give the single-file dump
-      // the compare reads, but coalesce FUSES the whole upstream
-      // computation into the one write task when no shuffle intervenes
-      // — a map-only kernel query then runs on one core (measured: the
-      // contamination kernel at a 10× scale-up, 20+ executor-minutes
-      // serialized). The explicit exchange keeps compute at full
-      // parallelism and ships only RESULT rows to the writer.
-      val ok = try {
-        d.build(spark, sfDir).repartition(1).write.mode("overwrite")
-          .parquet(s"$outDir/${d.name}")
-        true
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] ${d.name} failed: ${e.getMessage}")
-        false
-      }
-      // release the query's staged frames (Staging.stage)
-      spark.catalog.clearCache()
-      ok
+    // repartition(1), NOT coalesce(1): both give the single-file dump
+    // the compare reads, but coalesce FUSES the whole upstream
+    // computation into the one write task when no shuffle intervenes
+    // — a map-only kernel query then runs on one core (measured: the
+    // contamination kernel at a 10× scale-up, 20+ executor-minutes
+    // serialized). The explicit exchange keeps compute at full
+    // parallelism and ships only RESULT rows to the writer.
+    val failed = defs.filter { d =>
+      val run = Runner.run(spark, d, sfDir,
+        _.repartition(1).write.mode("overwrite").parquet(s"$outDir/${d.name}"))
+      run.err.foreach(e => System.err.println(s"[verify] ${d.name} failed: ${e.getMessage}"))
+      run.err.isDefined
     }.map(_.name)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -499,41 +499,6 @@ object HashKernels extends Serializable {
     if (na == 0.0 || nb == 0.0) 0.0 else dotF(a, b) / (na * nb)
   }
 
-  /** Fixed Gaussian hyperplanes for sign-LSH, memoized per
-    * (numPlanes, dim, seed). Flat row-major array for cache-friendliness.
-    */
-  private val planeCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Long), Array[Double]]()
-  private def planes(numPlanes: Int, dim: Int, seed: Long): Array[Double] =
-    planeCache.computeIfAbsent((numPlanes, dim, seed), { key =>
-      val rnd = new java.util.Random(key._3)
-      Array.fill(key._1 * key._2)(rnd.nextGaussian())
-    })
-
-  /** Johnson-Lindenstrauss random-projection sketch: the vector's dot
-    * products with `sketchDim` fixed Gaussian planes (same memoized
-    * planes as the sign-LSH). Angles are approximately preserved, so
-    * the sketches' cosine is a cheap PRE-SCORE for the full cosine —
-    * the coarse-score half of an IVF re-rank (the role PQ asymmetric
-    * distance plays in a Faiss-style layout), at sketchDim/dim the
-    * multiply-adds of the exact similarity.
-    */
-  def randProjSketch(v: ArrayData, sketchDim: Int, dim: Int, seed: Long): ArrayData = {
-    val ps = planes(sketchDim, dim, seed)
-    val n = math.min(v.numElements(), dim)
-    val out = new Array[Float](sketchDim)
-    var p = 0
-    while (p < sketchDim) {
-      var acc = 0.0
-      val off = p * dim
-      var i = 0
-      while (i < n) { acc += v.getFloat(i).toDouble * ps(off + i); i += 1 }
-      out(p) = acc.toFloat
-      p += 1
-    }
-    new GenericArrayData(out)
-  }
-
   /** Sign-bit signature of `numPlanes` random projections: vectors with
     * high cosine similarity agree on most sign bits, so equal signatures
     * are near-neighbor candidates (random-hyperplane LSH, Charikar 2002).
@@ -672,8 +637,8 @@ object HashKernels extends Serializable {
     d
   }
 
-  /** Integer Rademacher projection sketch: the PORTABLE variant of
-    * [[randProjSketch]]. sketch[p] = Σᵢ sign(p,i)·qᵢ with the SAME
+  /** Integer Rademacher projection sketch, the Johnson-Lindenstrauss
+    * pre-score of an IVF re-rank. sketch[p] = Σᵢ sign(p,i)·qᵢ with the SAME
     * md5-derived ±1 family as [[hyperplaneSig]] ("hp:<seed>:<p>:<blk>",
     * MSB-first bits, {1→+1, 0→−1}) and components quantized
     * floor(vᵢ·2^16 + 0.5) — a coarser scale than the signature's 2^24
@@ -1167,21 +1132,6 @@ case class RadSketchQ(child: Expression, sketchDim: Int, dim: Int, seed: Long)
   override protected def withNewChildInternal(c: Expression): RadSketchQ = copy(child = c)
 }
 
-/** `rand_proj_sketch(vec, sketchDim, dim, seed)`: JL projection sketch
-  * (float array) for coarse pre-scoring before an exact re-rank.
-  */
-case class RandProjSketch(child: Expression, sketchDim: Int, dim: Int, seed: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def prettyName: String = "rand_proj_sketch"
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.randProjSketch(v.asInstanceOf[ArrayData], sketchDim, dim, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HashKernels.randProjSketch($c, $sketchDim, $dim, ${seed}L)")
-  override protected def withNewChildInternal(c: Expression): RandProjSketch = copy(child = c)
-}
-
 /** `hyperplane_sig(vec, numPlanes, dim, seed)`: sign-LSH bucket key. */
 case class HyperplaneSig(child: Expression, numPlanes: Int, dim: Int, seed: Long)
     extends UnaryExpression {
@@ -1405,8 +1355,6 @@ object exprs {
     ColumnBridge.column(DotF(expr(a), expr(b)))
   def hyperplane_sig(c: Column, numPlanes: Int, dim: Int, seed: Long): Column =
     ColumnBridge.column(HyperplaneSig(expr(c), numPlanes, dim, seed))
-  def rand_proj_sketch(c: Column, sketchDim: Int, dim: Int, seed: Long): Column =
-    ColumnBridge.column(RandProjSketch(expr(c), sketchDim, dim, seed))
   def rad_sketch_q(c: Column, sketchDim: Int, dim: Int, seed: Long): Column =
     ColumnBridge.column(RadSketchQ(expr(c), sketchDim, dim, seed))
   def dist2_q(a: Column, b: Column): Column =

@@ -129,8 +129,8 @@ object Clustering {
     *
     * Returns (id, qv, cluster), `qv` the features as array<bigint>. The
     * features stay staged for the life of the caller's query (the
-    * semDeDup convention): the result reads them, so the caller's
-    * `catalog.clearCache()` after the query releases them.
+    * semDeDup convention): the result reads them, so the cache clear
+    * of the query's runner ([[graft.Runner]]) releases them.
     */
   def portableFitAssign(
       df: DataFrame, idCol: String, featCols: Seq[Column],

@@ -8,13 +8,14 @@ import java.util.concurrent.atomic.AtomicReference
   * later consumers read a first consumer's materialization,
   * so per-query bench seconds are NOT standalone costs — q_provenance's
   * 0.3 s is real only because q_corpus_pipeline paid the enrich+funnel
-  * build. Bench sets the current query name around each timed run;
-  * every shared-build execution records (build name, paying query) and
-  * Bench publishes the drained map as an ADDITIVE `shared_builds` field
-  * in bench_full.json — the one-line stdout contract does not grow.
+  * build. [[graft.Runner]] sets the current query name around each
+  * run; every shared-build execution records (build name, paying
+  * query) and Bench publishes the drained map as an ADDITIVE
+  * `shared_builds` field in bench_full.json — the one-line stdout
+  * contract does not grow.
   *
   * Telemetry only: no query logic reads this, and with no context set
-  * (library callers, Verify, specs) recording is a no-op.
+  * (library callers, specs) recording is a no-op.
   */
 object BuildAttribution {
   private val current = new AtomicReference[String](null)

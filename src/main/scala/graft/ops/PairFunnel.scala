@@ -32,8 +32,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * '''In-process cache''': one build per (session, snapshot) even with
   * no staging dir. Cached frames are funnel-sized and — with staging
   * off — eagerly `localCheckpoint`ed MEMORY_AND_DISK blocks for BOTH
-  * pairs and labels, so they survive the per-query
-  * `catalog.clearCache()` hygiene of Bench/Verify (RDD-level persist is
+  * pairs and labels, so they survive the cache clear that
+  * [[graft.Runner]] runs after every query (RDD-level persist is
   * not CacheManager state; the pairs frame previously relied on an
   * internal Staging persist that clearCache DID drop — r12 advisory).
   * With staging on, the cached frame is a plain parquet scan, which no

@@ -99,11 +99,17 @@ object SharedBuilds {
     if (got != null) got else once(key, build)
   }
 
-  /** Runs `body` on a daemon thread; a throw is recorded, not lost. */
+  /** Runs `body` on a daemon thread; a throw is recorded, not lost.
+    * The thread inherits its creator's local properties; it drops
+    * `graft.phase`, so its jobs count as background, not as a phase of
+    * the query that started it. */
   def inBackground(name: String)(body: => Unit): Thread = {
     val t = new Thread(() =>
-      try body
-      catch { case e: Throwable =>
+      try {
+        SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+          .foreach(_.sparkContext.setLocalProperty(graft.StageCollector.PhaseKey, null))
+        body
+      } catch { case e: Throwable =>
         failures.add((name, s"${e.getClass.getName}: ${e.getMessage}".take(200))); ()
       }, s"shared-build-$name")
     t.setDaemon(true)

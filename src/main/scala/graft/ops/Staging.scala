@@ -22,11 +22,11 @@ import org.apache.spark.storage.StorageLevel
   * DISK_ONLY keeps no staged rows on the heap between uses and behaves
   * the same under memory pressure.
   *
-  * A staged frame lives until the query's runner calls
-  * `catalog.clearCache()`; Bench, Verify, Inspect and the perfbench
-  * harness do so after every query. Do not [[release]] a frame that a
-  * lazy consumer has yet to read: that consumer would recompute it,
-  * once per join side.
+  * A staged frame lives until its query ends: [[graft.Runner]], which
+  * runs every Bench, Verify and Inspect query, clears the cache after
+  * each, and so does the perfbench harness. Do not [[release]] a frame
+  * that a lazy consumer has yet to read: that consumer would recompute
+  * it, once per join side.
   *
   * `localCheckpoint(eager = true)` is left for three cases only, each
   * commented at its site:

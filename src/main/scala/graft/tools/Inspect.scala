@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, QueryExe
 import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.{Sessions, SparkEntry, StageCollector}
+import graft.{Runner, Sessions, SparkEntry}
 
 /** One query's result, plans, stages or scans, on the session Bench and
   * Verify run:
@@ -23,11 +23,11 @@ import graft.{Sessions, SparkEntry, StageCollector}
   *  - `--final`: the plan that ran, taken from the `noop` write's own
   *    execution, so adaptive plans show `isFinalPlan=true`.
   *  - `--stages`: per-stage wall/run/cpu/input/shuffle/spill lines, each
-  *    marked `construct` (ran while the DataFrame was built) or `execute`
-  *    (ran in the `noop` write). With `reps` > 1 the query runs that many
-  *    times from cleared caches and memos, and the last (JIT-warm) run
-  *    is printed. Stages of background builds land in whichever phase
-  *    they complete in.
+  *    marked `construct` (ran while the DataFrame was built), `execute`
+  *    (ran in the `noop` write) or `background` (a background build's),
+  *    from one [[graft.Runner]] run. With `reps` > 1 the query runs that
+  *    many times from cleared caches and memos, and the last (JIT-warm)
+  *    run is printed.
   *  - `--scans`: parquet scans per input table in the static physical
   *    plan (AQE off, on a new session). A table scanned 3+ times hints
   *    at a shared subtree each consumer re-derives.
@@ -51,30 +51,46 @@ object Inspect {
   def run(spark: SparkSession, query: String, mode: String, sfDir: String,
       reps: Int = 1, out: PrintStream = System.out): Unit = {
     require(Modes.contains(mode), s"unknown mode $mode; one of ${Modes.mkString(" ")}")
-    val names = if (query == "all") SparkEntry.queries.keys.toSeq.sorted else Seq(query)
+    val names = if (query == "all") SparkEntry.defs.map(_.name).sorted else Seq(query)
     for (name <- names) {
-      val build = SparkEntry.queries(name)
+      val d = SparkEntry.defs.find(_.name == name)
+        .getOrElse(throw new NoSuchElementException(s"no query $name"))
+      // the modes that execute the query run it through the runner
+      def runWith(sink: DataFrame => Unit): Runner.Run = {
+        val r = Runner.run(spark, d, sfDir, sink)
+        r.err.foreach(e => throw e)
+        r
+      }
       out.println(s"======== $name $mode ========")
       try mode match {
-        case "--show" => Console.withOut(out)(build(spark, sfDir).show(200, false))
+        case "--show" => runWith(df => Console.withOut(out)(df.show(200, false)))
         case "--plan" =>
-          out.println(build(spark, sfDir).queryExecution
+          out.println(d.build(spark, sfDir).queryExecution
             .explainString(ExplainMode.fromString("formatted")))
-        case "--final" => out.println(finalPlan(build(spark, sfDir)))
-        case "--stages" => stages(spark, name, build(spark, _), sfDir, reps, out)
+        case "--final" => runWith(df => out.println(finalPlan(df)))
+        case "--stages" =>
+          val last = (1 to reps).map { rep =>
+            graft.ops.SharedBuilds.invalidate()
+            val r = runWith(Runner.noop)
+            out.println(f"RUN $rep $name: construct ${r.constructSec}%.2f s " +
+              f"(${r.construct.jobs} jobs, ${r.construct.stages.size} stages), execute " +
+              f"${r.executeSec}%.2f s (${r.execute.jobs} jobs, ${r.execute.stages.size} stages)")
+            r
+          }.last
+          for ((phase, p) <- Seq("construct" -> last.construct, "execute" -> last.execute,
+              "background" -> last.background); s <- p.stages.sortBy(_.id))
+            out.println(f"$phase%-9s ${s.line}")
         case "--scans" =>
           // the static plan: AdaptiveSparkPlanExec hides its tree from
           // collect(). Off on a new session, not on the caller's.
           val static = spark.newSession()
           static.conf.set("spark.sql.adaptive.enabled", "false")
-          out.println(scans(build(static, sfDir)))
+          out.println(scans(d.build(static, sfDir)))
       } catch {
         case e: Exception => out.println(s"ERROR ${e.getClass.getName}: ${e.getMessage}")
       }
     }
   }
-
-  private def write(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
   /** `df.queryExecution` is not the execution a write runs: the write
     * plans its own, so only that one's adaptive plan is finalized. */
@@ -88,35 +104,10 @@ object Inspect {
     }
     spark.listenerManager.register(listener)
     try {
-      write(df)
+      Runner.noop(df)
       GraftBus.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     ran.asScala.lastOption.fold("(the write reported no execution)")(_.executedPlan.toString)
-  }
-
-  private def stages(spark: SparkSession, name: String, build: String => DataFrame,
-      sfDir: String, reps: Int, out: PrintStream): Unit = {
-    val collector = StageCollector.attach(spark.sparkContext)
-    try {
-      var last = Seq.empty[(String, StageCollector.Phase)]
-      for (rep <- 1 to reps) {
-        spark.catalog.clearCache()
-        graft.ops.SharedBuilds.invalidate()
-        collector.take()
-        val t0 = System.nanoTime()
-        val df = build(sfDir)
-        val construct = collector.take()
-        val t1 = System.nanoTime()
-        write(df)
-        val execute = collector.take()
-        val t2 = System.nanoTime()
-        out.println(f"RUN $rep $name: construct ${(t1 - t0) / 1e9}%.2f s " +
-          f"(${construct.jobs} jobs, ${construct.stages.size} stages), execute " +
-          f"${(t2 - t1) / 1e9}%.2f s (${execute.jobs} jobs, ${execute.stages.size} stages)")
-        last = Seq("construct" -> construct, "execute" -> execute)
-      }
-      for ((phase, p) <- last; s <- p.stages.sortBy(_.id)) out.println(f"$phase%-9s ${s.line}")
-    } finally collector.stop()
   }
 
   private def scans(df: DataFrame): String = {

@@ -62,4 +62,18 @@ class ConstructJobsSpec extends SparkSpecBase {
     assert(warmCuration.map(j => j._1 -> j._3) ===
       Seq("q_component_labels" -> 5, "q_dedup_keep_best" -> 3))
   }
+
+  /** The runner splits the phases by the thread's `graft.phase`
+    * property, not by a per-call tag, and releases each query's stages:
+    * its counts of the same warm pair must be the ones pinned above. */
+  test("Runner.run's construct and execute jobs of the curation pair equal JobCount's") {
+    val pinned = warmCuration
+    val s = spark.newSession()
+    val got = Seq("q_component_labels", "q_dedup_keep_best").map { q =>
+      val r = Runner.run(s, SparkEntry.defs.find(_.name == q).get, Sf0001, Runner.noop)
+      assert(r.err.isEmpty, s"$q failed: ${r.err}")
+      (q, r.construct.jobs, r.execute.jobs)
+    }
+    assert(got === pinned)
+  }
 }
