@@ -36,6 +36,10 @@ import graft.queries.QueryDef
   * `bench_baselines/<name>_<sf dir name>.txt` (`vs_prev`); with no name,
   * or no such file, there is no comparison. Compare only with a baseline
   * taken on the same host: its `# host` lines say where it was taken.
+  *
+  * `gc_ms` sums the GarbageCollectorMXBeans' collection time. On JDK 17
+  * G1's beans count only young and full pauses, not remark or cleanup,
+  * so it is a floor, not the JVM's whole GC time.
   */
 object Bench {
 

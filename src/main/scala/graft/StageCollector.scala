@@ -1,41 +1,50 @@
 package graft
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.{GraftBus, SparkContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
-/** The one stage listener, attached by [[Runner]] for one query. Each
-  * job is put in the phase named by its `graft.phase` local property,
-  * and each of its stages with it: jobs carry the submitting thread's
+/** The one stage listener, attached by [[Runner]] for one run. It counts
+  * only the jobs whose `graft.run` local property is that run's id, so
+  * jobs another thread submits meanwhile (a concurrent session's run, a
+  * previous run's late background build) stay out. Each counted job is
+  * put in the phase named by its `graft.phase` local property, and each
+  * of its stages with it: jobs carry the submitting thread's
   * properties, AQE stage jobs and broadcasts included, so the split
-  * needs no bus drain between the phases. A job with no phase (a
-  * background build's thread clears it) is `background`.
+  * needs no bus drain between the phases. A job of the run with no
+  * phase (a background build's thread inherits the run id and clears
+  * the phase) is `background`.
   */
 final class StageCollector private (sc: SparkContext) extends SparkListener {
   import StageCollector._
+
+  /** The `graft.run` id of the run this collector counts. */
+  val runId: String = s"run-${runs.incrementAndGet()}"
 
   private val phaseOfStage = new ConcurrentHashMap[Int, String]
   private val jobs = new ConcurrentLinkedQueue[String]
   private val stages = new ConcurrentLinkedQueue[(String, Stage)]
 
-  override def onJobStart(e: SparkListenerJobStart): Unit = {
-    val phase = Option(e.properties).flatMap(p => Option(p.getProperty(PhaseKey)))
-      .getOrElse(Background)
-    jobs.add(phase)
-    // a shared shuffle stage belongs to the job that submitted it first
-    e.stageIds.foreach(phaseOfStage.putIfAbsent(_, phase))
-  }
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    Option(e.properties).filter(_.getProperty(RunKey) == runId).foreach { p =>
+      val phase = Option(p.getProperty(PhaseKey)).getOrElse(Background)
+      jobs.add(phase)
+      // a shared shuffle stage belongs to the job that submitted it first
+      e.stageIds.foreach(phaseOfStage.putIfAbsent(_, phase))
+    }
 
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
     val si = e.stageInfo
     val m = si.taskMetrics
-    if (m != null) {
+    val phase = phaseOfStage.get(si.stageId)
+    if (m != null && phase != null) {
       val wall = (for { s <- si.submissionTime; c <- si.completionTime } yield c - s)
         .getOrElse(-1L)
-      stages.add(phaseOfStage.getOrDefault(si.stageId, Background) ->
+      stages.add(phase ->
         Stage(si.stageId, si.name, si.numTasks, wall, m.executorRunTime,
           m.executorCpuTime, m.inputMetrics.bytesRead,
           m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
@@ -60,6 +69,8 @@ final class StageCollector private (sc: SparkContext) extends SparkListener {
 object StageCollector {
   /** The thread-local property that names the phase a job runs in. */
   val PhaseKey = "graft.phase"
+  /** The thread-local property that names the run a job belongs to. */
+  val RunKey = "graft.run"
   val Construct = "construct"
   val Execute = "execute"
   val Background = "background"
@@ -78,6 +89,8 @@ object StageCollector {
   }
 
   final case class Phase(jobs: Int, stages: Seq[Stage])
+
+  private val runs = new AtomicLong
 
   def attach(sc: SparkContext): StageCollector = {
     val c = new StageCollector(sc)

@@ -6,6 +6,8 @@ import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Staging
+
 /** KMeans clustering of the change analysis, as the reference does it.
   *
   * Reference: project-co2.py:34-76 — VectorAssembler over
@@ -42,14 +44,16 @@ object Clustering {
   def kSweep(
       assembled: DataFrame, ks: Range, sampleFraction: Double = 0.1,
       seed: Long = 42L): Seq[(Int, Double)] = {
-    val sample = assembled.sample(withReplacement = false, sampleFraction, seed).cache()
-    try ks.map { k =>
-      val model = new KMeans().setK(k).setSeed(1L).setFeaturesCol("features").fit(sample)
-      // computeCost is gone post-3.0; the reference's own comment
-      // (project-co2.py:49) points at ClusteringEvaluator as replacement.
-      val preds = model.transform(assembled)
-      k -> new ClusteringEvaluator().setPredictionCol("prediction").evaluate(preds)
-    } finally sample.unpersist()
+    Staging.scoped {
+      val sample = Staging.stage(assembled.sample(withReplacement = false, sampleFraction, seed))
+      ks.map { k =>
+        val model = new KMeans().setK(k).setSeed(1L).setFeaturesCol("features").fit(sample)
+        // computeCost is gone post-3.0; the reference's own comment
+        // (project-co2.py:49) points at ClusteringEvaluator as replacement.
+        val preds = model.transform(assembled)
+        k -> new ClusteringEvaluator().setPredictionCol("prediction").evaluate(preds)
+      }
+    }
   }
 
   /** Final KMeans fit + predictions + centres + silhouette.
@@ -70,31 +74,33 @@ object Clustering {
   def fitPredict(
       df: DataFrame, featureCols: Seq[String], k: Int = 5,
       seed: Long = 1L): Fitted = {
-    // Cache the assembled features: fit iterates over them per KMeans
+    // Stage the assembled features: fit iterates over them per KMeans
     // round, transform reads them again, and the silhouette is a third
-    // pass — without the cache each pass re-runs the whole upstream
-    // plan (scan + pivot aggregation), a 3×+ rescan at any scale.
+    // pass — unstaged, each pass re-runs the whole upstream plan (scan
+    // + pivot aggregation), a 3×+ rescan at any scale. They live in
+    // this call's scope; the predictions the caller reads live in the
+    // caller's, staged while the features are still there to read.
     // Then right-size partitions: each Lloyd iteration is one job over
     // the features, so near-empty partitions make the fit pure
     // scheduler overhead (32 × 300-row tasks × ~25 jobs). Target ~500k
     // rows per partition — feature rows are a handful of doubles.
-    val cached = assemble(df, featureCols).cache()
-    val n = cached.count()
-    val targetParts = math.max(1L, math.min(
-      cached.rdd.getNumPartitions.toLong, n / 500000L + 1L)).toInt
-    val assembled =
-      if (targetParts < cached.rdd.getNumPartitions) cached.coalesce(targetParts)
-      else cached
-    try {
+    Staging.scoped {
+      val staged = Staging.stage(assemble(df, featureCols))
+      val n = staged.count()
+      val targetParts = math.max(1L, math.min(
+        staged.rdd.getNumPartitions.toLong, n / 500000L + 1L)).toInt
+      val assembled =
+        if (targetParts < staged.rdd.getNumPartitions) staged.coalesce(targetParts)
+        else staged
       val model = new KMeans()
         .setK(k).setSeed(seed)
         .setFeaturesCol("features").setPredictionCol("cluster")
         .fit(assembled)
-      val preds = model.transform(assembled).cache()
+      val preds = Staging.inEnclosingScope(Staging.stage(model.transform(assembled)))
       val silhouette = new ClusteringEvaluator()
         .setPredictionCol("cluster").evaluate(preds)
       Fitted(preds, model, model.clusterCenters.map(_.toArray), silhouette)
-    } finally cached.unpersist()
+    }
   }
 
   /** Per-cluster summary with the reference's "min - max" range label
@@ -128,16 +134,16 @@ object Clustering {
     * component sums that overflow int64 fail the fit.
     *
     * Returns (id, qv, cluster), `qv` the features as array<bigint>. The
-    * features stay staged for the life of the caller's query (the
-    * semDeDup convention): the result reads them, so the cache clear
-    * of the query's runner ([[graft.Runner]]) releases them.
+    * features stay staged in the caller's scope (the semDeDup
+    * convention): the result reads them, so they live until the query
+    * that reads it ends ([[graft.Runner]]).
     */
   def portableFitAssign(
       df: DataFrame, idCol: String, featCols: Seq[Column],
       k: Int, iters: Int, tag: String = "km"): DataFrame = {
     import graft.functions.exprs
     // the init collect is the first consumer and fills the stage
-    val staged = graft.ops.Staging.stage(df.select(
+    val staged = Staging.stage(df.select(
       col(idCol).as("id"), array(featCols.map(_.cast("long")): _*).as("qv")))
     val initRows = staged
       .withColumn("h", md5(concat(lit(tag + ":"), col("id").cast("string"))))

@@ -132,10 +132,11 @@ object Dedup {
     * signature- and funnel-sized frames are staged.
     *
     * Staging: the filtered candidate pairs and candidate shingle sets
-    * are staged ([[Staging]]; each feeds two+ consumer branches) and
-    * released before return (the signature frame needs no staging —
-    * the banding self-join reuses one exchange, so the kernel runs once
-    * per doc with no second consumer); the verified
+    * are staged ([[Staging]]; each feeds two+ consumer branches) in the
+    * operator's own [[Staging.scoped]] scope, which releases them before
+    * return (the signature frame needs no staging — the banding
+    * self-join reuses one exchange, so the kernel runs once per doc
+    * with no second consumer); the verified
     * pair set — the small funnel output downstream closure loops and
     * anti-joins reuse — is an eager localCheckpoint, so nothing this
     * operator persists stays registered in the session cache after it
@@ -212,12 +213,10 @@ object Dedup {
     // are true ≥0.8 pairs). Filtering on the MinHash Jaccard ESTIMATE
     // (digest agreement — 64 byte-compares, computed IN the banding
     // join's projection) collapses the funnel before any pair-level
-    // shuffle: the r10 shape joined the full signatures onto the raw
-    // candidate set AFTER the distinct, which pushed candidates×520 B
-    // through two exchanges — ~130 GB at the 5M-doc probe (243M raw
-    // pairs), the stage that filled the probe host's disk. Est-filtering
-    // in the join leaves only survivors for the distinct, and no
-    // pair-count-scaled shuffle exists anywhere in the funnel.
+    // shuffle: only survivors reach the distinct, and no
+    // pair-count-scaled shuffle exists anywhere in the funnel (joining
+    // full signatures onto the raw candidates would push
+    // candidates×520 B through two exchanges, ~130 GB at 5M docs).
     // Cut = threshold − estFilterSigmas·σ with σ ≤ 1/(2√k) (default
     // 4σ): a true threshold pair falls below it w.p. ~3e-5 PER PAIR, so
     // the output is banding ∘ est-filter ∘ exact-verify — NOT exactly
@@ -234,45 +233,25 @@ object Dedup {
     // ~bands·corpus row stream twice for buckets a hash map walks —
     // the same call as the span family's anchor join.
     val estCut = p.estCut
-    // HEAVY-BUCKET SUB-REFINEMENT (r12, [[BucketRefine]]): buckets whose
+    // HEAVY-BUCKET SUB-REFINEMENT ([[BucketRefine]]): buckets whose
     // size exceeds the cap are re-keyed per 2-byte digest block, so the
     // corpus-growing collision buckets of replicated/boilerplate corpora
-    // (the r11 k=1000 probe's 20× CPU tail) emit ~n·32 sub-key rows
-    // instead of C(n,2) pairs — lossless w.r.t. the est-filter because
-    // its cut > 1/2 forces every surviving pair to agree on ≥ one full
-    // block. Plan shape: the (band, bh)-keyed exchange feeds the
-    // heavy-key aggregate (same key — no second shuffle) and the
-    // broadcast flag join, and a second repartition on EXACTLY the join
-    // keys (band, bh, sk) AFTER the explode gives the self-join one
-    // exchange both sides reuse — Spark 4 requires ALL cluster keys for
-    // co-partitioned joins, so a subset-keyed child would get a fresh
-    // corpus-scale exchange inserted per side (the shape that ENOSPC'd
-    // the prefix join's first r12 cut at 5M docs). The signature kernel
-    // still runs once per doc, and the sub-key in the build-side hash
-    // map's key is what keeps a heavy bucket's probes from walking the
-    // whole bucket.
+    // emit ~n·32 sub-key rows instead of C(n,2) pairs — lossless w.r.t.
+    // the est-filter because its cut > 1/2 forces every surviving pair
+    // to agree on ≥ one full block. Plan shape: ONE (band, bh)-keyed
+    // exchange feeds the heavy-key aggregate (same key), the broadcast
+    // flag join and both sides of the self-join on (band, bh, sk).
+    // Hash partitioning on the (band, bh) subset already co-locates
+    // every (band, bh, sk) match, and bh is a near-unique 8-byte hash,
+    // so the subset keys carry no extra skew; Spark 4 by default
+    // demands children partitioned on ALL join keys and would add a
+    // second corpus×bands exchange, so the funnel's own actions run
+    // with spark.sql.requireAllClusterKeysForCoPartition=false
+    // (SPARK-35703; set and restored below), while the returned frame
+    // is a checkpoint scan whose consumers plan under the caller's
+    // conf. The per-partition hash build stays keyed on the FULL join
+    // key, so heavy-bucket probes never walk a whole bucket.
     val refine = p.refinesHeavyBuckets
-    // r17 (§2.4 — remove a shuffle outright): through r16 the refine
-    // path paid TWO full corpus×bands exchanges of the ~90 B bucket
-    // rows — repartition(band, bh) so the heavy-key aggregate and the
-    // flag join reuse one exchange, then a SECOND repartition on
-    // (band, bh, sk) after the explode because Spark 4's
-    // EnsureRequirements by default demands children be partitioned on
-    // ALL join keys. But hash partitioning on the (band, bh) SUBSET
-    // already co-locates every (band, bh, sk) match — the relaxation
-    // is exactly what spark.sql.requireAllClusterKeysForCoPartition=
-    // false permits (SPARK-35703) — and bh is a near-unique 8-byte
-    // hash, so the subset keys carry no extra skew. The self-join's
-    // two sides now read the ONE (band, bh) exchange (ReuseExchange
-    // canonical-matches the identical subtrees; the flag join + sk
-    // explode re-run per side, cheap map work), and the per-partition
-    // hash build stays keyed on the FULL join key, so heavy-bucket
-    // probes still never walk a whole bucket. The conf is scoped to
-    // the funnel build's own actions below (set/restore in finally):
-    // every action this operator runs — the staging counts and the
-    // final eager checkpoint — plans under it, while the returned
-    // frame is a checkpoint scan whose consumers plan under the
-    // caller's conf.
     val joinSide =
       if (!refine) buckets.withColumn("sk", lit(-1L))
       else {
@@ -294,50 +273,45 @@ object Dedup {
     // above). Set BEFORE the candidates persist below: persist()
     // finalizes the cached physical plan at registration time, so the
     // conf must be in force here, not merely before the first action.
-    // Restored in the outer finally; the cached plan keeps the
-    // exchange-free join for every later consumer.
+    // Restored in the finally; the cached plan keeps the exchange-free
+    // join for every later consumer.
     val ckConf = "spark.sql.requireAllClusterKeysForCoPartition"
     val spark = docs.sparkSession
     val ckPrev = spark.conf.get(ckConf, "true")
     spark.conf.set(ckConf, "false")
-    // candidates (the PLAUSIBLE set) feeds the shingle join-back and
-    // the final verify — staged so the banding self-join runs once.
-    val candidates = Staging.stage(a.hint("shuffle_hash").join(b,
-        probe.fold(banded)(_ => banded && (col("a.pf") || col("b.pf"))))
-      .filter(exprs.digest_agree(col("a.dg"), col("b.dg")) >= estCut)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct())
+    // the operator's own scope: a failure in the consume jobs below must
+    // not leave its staged frames registered in the session cache, and
+    // a caller's scope must not hold them past this call
+    try Staging.scoped {
+      // candidates (the PLAUSIBLE set) feeds the shingle join-back and
+      // the final verify — staged so the banding self-join runs once.
+      val candidates = Staging.stage(a.hint("shuffle_hash").join(b,
+          probe.fold(banded)(_ => banded && (col("a.pf") || col("b.pf"))))
+        .filter(exprs.digest_agree(col("a.dg"), col("b.dg")) >= estCut)
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+        .distinct())
 
-    // Shingle only the docs that appear in some candidate pair. The id
-    // set and the shingled candidate docs are both tiny; stage the
-    // latter so the a-side and b-side joins don't each re-scan.
-    val candIds = candidates.select(col("id_a").as("id"))
-      .union(candidates.select(col("id_b").as("id")))
-      .distinct()
-    // release in finally: a failure in the consume jobs below must not
-    // leave the staged frames registered in the session cache (library
-    // callers outside Bench/Verify get no clearCache backstop)
-    try {
+      // Shingle only the docs that appear in some candidate pair. The id
+      // set and the shingled candidate docs are both tiny; stage the
+      // latter so the a-side and b-side joins don't each re-scan.
+      val candIds = candidates.select(col("id_a").as("id"))
+        .union(candidates.select(col("id_b").as("id")))
+        .distinct()
       val candDocs = Staging.stage(docs
         .join(candIds, col(idCol) === candIds("id"))
         .select(col("id"), exprs.shingle_set(col(textCol), p.shingleN).as("sh")))
-      try {
-        val verified = candidates
-          .join(candDocs.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-          .join(candDocs.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-          .withColumn("jaccard", exprs.jaccard_sorted(col("sh_a"), col("sh_b")))
-          .filter(col("jaccard") >= p.jaccardThreshold)
-          .select(col("id_a"), col("id_b"), col("jaccard"))
-        // localCheckpoint: the operator's output, materialized (filling
-        // both stages) before the staged intermediates are released —
-        // nothing the operator persisted outlives this call (asserted in
-        // DedupSpec's hygiene tests)
-        verified.localCheckpoint(eager = true)
-      } finally Staging.release(candDocs)
-    } finally {
-      spark.conf.set(ckConf, ckPrev)
-      Staging.release(candidates)
-    }
+      val verified = candidates
+        .join(candDocs.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
+        .join(candDocs.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
+        .withColumn("jaccard", exprs.jaccard_sorted(col("sh_a"), col("sh_b")))
+        .filter(col("jaccard") >= p.jaccardThreshold)
+        .select(col("id_a"), col("id_b"), col("jaccard"))
+      // localCheckpoint: the operator's output, materialized (filling
+      // both stages) before the scope releases them — nothing the
+      // operator persisted outlives this call (asserted in DedupSpec's
+      // hygiene tests)
+      verified.localCheckpoint(eager = true)
+    } finally spark.conf.set(ckConf, ckPrev)
   }
 
   private def integralType(t: DataType): Boolean = t match {

@@ -30,14 +30,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   * (PairFunnelStagingSpec pins this).
   *
   * '''In-process cache''': one build per (session, snapshot) even with
-  * no staging dir. Cached frames are funnel-sized and — with staging
-  * off — eagerly `localCheckpoint`ed MEMORY_AND_DISK blocks for BOTH
-  * pairs and labels, so they survive the cache clear that
-  * [[graft.Runner]] runs after every query (RDD-level persist is
-  * not CacheManager state; the pairs frame previously relied on an
-  * internal Staging persist that clearCache DID drop — r12 advisory).
-  * With staging on, the cached frame is a plain parquet scan, which no
-  * cache hygiene can invalidate.
+  * no staging dir. With staging off, BOTH pairs and labels are eager
+  * `localCheckpoint`s (MEMORY_AND_DISK RDD blocks, not CacheManager
+  * state), so they survive the close of the query scope that built
+  * them ([[Staging.scoped]]) and any cache clear; with staging on, the
+  * cached frame is a plain parquet scan.
   *
   * The in-process layer is [[SharedBuilds]] (family
   * [[SharedBuilds.Funnel]]); its key also covers the input plans and
@@ -161,8 +158,8 @@ object PairFunnel {
           b.record()
           // a build that is already a checkpoint scan (minhashNearDupPairs'
           // eager checkpoint) or a local relation (a driver-side build)
-          // survives clearCache as it is; checkpointing it again would
-          // only cost a job
+          // outlives the building query's scope as it is; checkpointing
+          // it again would only cost a job
           val built = build
           built.queryExecution.logical match {
             case r: LogicalRDD if r.rdd.isCheckpointed => built

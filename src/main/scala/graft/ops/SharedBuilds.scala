@@ -100,9 +100,10 @@ object SharedBuilds {
   }
 
   /** Runs `body` on a daemon thread; a throw is recorded, not lost.
-    * The thread inherits its creator's local properties; it drops
-    * `graft.phase`, so its jobs count as background, not as a phase of
-    * the query that started it. */
+    * The thread inherits its creator's local properties, so its jobs
+    * carry the starting run's `graft.run` id, and drops `graft.phase`,
+    * so they count as that run's background, not as one of its phases.
+    * It also inherits the creator's [[Staging.scoped]] scope. */
   def inBackground(name: String)(body: => Unit): Thread = {
     val t = new Thread(() =>
       try {

@@ -70,7 +70,8 @@ object Similarity {
     * recall/sweep/grid queries measure against the IDENTICAL exact
     * top-k qrels, each previously paying its own corpus scan. The
     * result is queries×k rows, eagerly checkpointed so it survives the
-    * harness's per-query cache hygiene; the core function stays lazy
+    * close of the scope that built it (and any caller's unpersist or
+    * cache clear); the core function stays lazy
     * for single consumers and plan-shape assertions.
     */
   def bruteForceTopKShared(

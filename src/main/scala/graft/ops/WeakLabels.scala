@@ -68,7 +68,7 @@ object WeakLabels {
     // ~48 B/doc at any corpus size) once, kernel spread across cores
     // above the spread gate; every consumer reads stored columnar
     // blocks. Query-lifetime staging (the semDeDup convention — the
-    // session's per-query clearCache releases it; values are unchanged,
+    // query's scope releases it; values are unchanged,
     // so no result byte moves). The weights are collected at construct,
     // not broadcast back: that collect reads every partition of the
     // staged votes, so it is the job that fills the stage (no staging

@@ -302,7 +302,7 @@ object MixingQueries {
       // quality+token kernel over the corpus: the k1000 probe measured
       // 170 s with the tokenize scan dominating, twice-paid. The
       // staged frame is 4 thin columns (~40 B/row, no text), DISK_ONLY,
-      // released by the harness's per-query cache hygiene.
+      // released when the query's scope closes.
       val d = graft.ops.Staging.stage(
         Tables.roundRobinSpread(Tables.documents(s, dir)).select(
           col("doc_id"), col("source"),

@@ -5,49 +5,50 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CacheBridge
 
-/** Concurrent-session throughput + isolation check (r10 verdict item
-  * 7): the per-round bench runs one query at a time, but a real cluster
-  * multiplexes sessions over one shared context — concurrent stages
-  * contend for cores, the CacheManager serves several sessions at once,
-  * and the staged frames ([[graft.ops.Staging.stage]], filled by their
-  * first consumer) see concurrent writers/readers of identical plans
-  * from DIFFERENT sessions, a path the single-stream bench never
+import graft.queries.QueryDef
+
+/** Concurrent-session throughput + isolation check: Bench runs one
+  * query at a time, but a real cluster multiplexes sessions over one
+  * shared context — concurrent stages contend for cores, and staged
+  * frames ([[graft.ops.Staging]]) see concurrent writers/readers of
+  * identical plans from DIFFERENT sessions, which one stream never
   * exercises.
   *
   * Shape: TPC-H-style throughput run. `streams` worker threads each own
   * a `SparkSession.newSession()` (isolated SQLConf/temp views, shared
-  * SparkContext — Spark's intended multi-tenant shape) and run the same
-  * query list in a stream-specific rotation, so at any instant the mix
-  * of in-flight operators differs per stream while every query still
-  * runs `streams` times total.
+  * SparkContext) and run the query list in a stream-specific rotation,
+  * so the mix of in-flight operators differs per stream while every
+  * query still runs `streams` times. Every run, the single-stream
+  * reference pass's too, goes through [[graft.Runner]] with the
+  * fingerprint as its sink, so it releases its own stages and no other
+  * stream's.
   *
   * Isolation check: every result is reduced to an ORDER-INDEPENDENT
   * fingerprint — sum + bit_xor of xxhash64 over the canonicalized row
   * (doubles rounded to 9 places first: concurrent plans may aggregate
   * in different partition orders, and the library's own oracle contract
-  * rounds every published double) plus the row count. A single-stream
-  * reference pass computes the expected fingerprint per query; any
-  * concurrent result that diverges is a cross-session corruption.
+  * rounds every published double) plus the row count. Any concurrent
+  * result that diverges from the reference pass's is a cross-session
+  * corruption.
   *
-  * Prints one JSON line:
+  * `ConcurrentBench [sfDir] [streams]` (defaults [[graft.Sessions.sfDir]],
+  * [[graft.Sessions.cpus]]) prints one JSON line:
   * `{"streams":N,"n_queries":Q,"wall_s":…,"stream_seconds":[…],
-  *   "single_stream_s":…,"throughput_x":…,"n_mismatch":0,"mismatches":[]}`
-  * where throughput_x = (streams × single_stream_s) / wall_s — the
-  * effective parallel speedup of multiplexing (1.0 = no benefit over
-  * serial streams, `streams` = perfectly free).
+  *   "single_stream_s":…,"throughput_x":…,"n_mismatch":0,"mismatches":[],
+  *   "cached_plans_left":false,"sf":…}`
+  * where throughput_x = (streams × single_stream_s) / wall_s (1.0 = no
+  * benefit over serial streams, `streams` = perfectly free), and
+  * cached_plans_left says whether the CacheManager still holds a plan.
   */
 object ConcurrentBench {
 
-  /** Mixed list: TPC-H joins/aggs, window funnels, the staged/closure
-    * family (corpus pipeline, provenance, minhash, component labels —
-    * the CacheManager-contention targets), text kernels, and (r12) the
-    * FULL heavy funnel family — prefix sim-join, substring spans,
-    * semdedup, the shared-pair-funnel consumers — so the contention
-    * record covers the queries whose staged frames and PairFunnel
-    * builds are the biggest concurrent-session surface.
+  /** Mixed list: TPC-H joins/aggs, window funnels, text kernels, and
+    * the staged/closure and heavy funnel families, whose staged frames
+    * and PairFunnel builds are the biggest concurrent-session surface.
     */
   private val QueryList: Seq[String] = Seq(
     "q_tpch_q1", "q_tpch_q3", "q_tpch_q5", "q_tpch_q18",
@@ -86,20 +87,30 @@ object ConcurrentBench {
     (s, r.getLong(2), r.getLong(3))
   }
 
+  /** Runs `d` through [[graft.Runner]] with its fingerprint as the
+    * sink: the run releases its own stages and no other stream's. */
+  private def fingerprinted(spark: SparkSession, d: QueryDef,
+      sfDir: String): Either[String, (Long, Long, Long)] = {
+    var fp: (Long, Long, Long) = null
+    val r = graft.Runner.run(spark, d, sfDir, df => fp = fingerprint(df))
+    r.err.map(e => Option(e.getMessage).getOrElse(e.getClass.getName).take(120)).toLeft(fp)
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/repo/sfgen/sf1")
-    val streams = args.lift(1).map(_.toInt).getOrElse(6)
+    val sfDir = args.headOption.getOrElse(graft.Sessions.sfDir)
+    val streams = args.lift(1).map(_.toInt).getOrElse(graft.Sessions.cpus)
     val root = graft.Sessions.start(graft.Sessions.builder()
       // FAIR pools: FIFO starves late streams behind early ones' big
       // stages; fair sharing is what a multiplexing cluster runs.
       .config("spark.scheduler.mode", "FAIR"))
 
-    val queries = graft.SparkEntry.queries
+    val defs = QueryList.map(q => q -> graft.SparkEntry.defs.find(_.name == q).get).toMap
     // single-stream reference pass: expected fingerprint per query +
     // the serial wall for the throughput_x denominator
     val t0 = System.nanoTime()
     val expected: Map[String, (Long, Long, Long)] = QueryList.map { q =>
-      q -> fingerprint(queries(q)(root, sfDir))
+      q -> fingerprinted(root, defs(q), sfDir)
+        .fold(msg => throw new IllegalStateException(s"reference pass: $q: $msg"), identity)
     }.toMap
     val singleS = (System.nanoTime() - t0) / 1e9
 
@@ -113,12 +124,7 @@ object ConcurrentBench {
           QueryList.take(s % QueryList.size)
         val st0 = System.nanoTime()
         val mismatches = rotated.flatMap { q =>
-          val fp =
-            try Right(fingerprint(queries(q)(sess, sfDir)))
-            catch { case e: Throwable =>
-              Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(120))
-            }
-          fp match {
+          fingerprinted(sess, defs(q), sfDir) match {
             case Right(got) if got == expected(q) => None
             case Right(got) =>
               Some(s"""{"stream":$s,"q":"$q","kind":"fingerprint","got":"$got","want":"${expected(q)}"}""")
@@ -142,6 +148,7 @@ object ConcurrentBench {
         f""""throughput_x":${streams * singleS / wallS}%.2f,""" +
         s""""n_mismatch":${mismatches.size},""" +
         s""""mismatches":[${mismatches.take(8).mkString(",")}],""" +
+        s""""cached_plans_left":${!CacheBridge.noCachedPlans(root)},""" +
         s""""sf":"$sfDir"}""")
     root.stop()
   }

@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.CountDownLatch
+
+import org.apache.spark.sql.functions._
+
+import graft.queries.QueryDef
+
 /** Construct-phase job budget: the Spark jobs a query runs while its
   * DataFrame is built, before any result is computed. Schema inference
   * and staging counts are pure overhead there, so a reintroduced one
@@ -75,5 +81,31 @@ class ConstructJobsSpec extends SparkSpecBase {
       (q, r.construct.jobs, r.execute.jobs)
     }
     assert(got === pinned)
+  }
+
+  /** Jobs carry the run's own `graft.run` id: a job another thread
+    * submits while the run builds is neither construct nor background
+    * of it. The other thread is started before the run, so it does not
+    * inherit the run's properties. */
+  test("Runner.run does not count a job that another thread submits during the run") {
+    val s = spark.newSession()
+    val go, done = new CountDownLatch(1)
+    val other = new Thread(() => {
+      go.await()
+      s.range(0L, 1000L, 1L, 4).groupBy((col("id") % 7).as("m")).count().collect()
+      done.countDown()
+    })
+    other.start()
+    val d = QueryDef("q_overlap_probe", (s2, _) => {
+      go.countDown()
+      done.await()
+      s2.range(0L, 10L).toDF("id")
+    }, None)
+    val r = Runner.run(s, d, Sf0001, Runner.noop)
+    other.join()
+    assert(r.err.isEmpty, s"${r.err}")
+    val (_, writeJobs) = JobCount(s)(Runner.noop(s.range(0L, 10L).toDF("id")))
+    assert((r.construct.jobs, r.execute.jobs, r.background.jobs) === ((0, writeJobs, 0)))
+    assert(r.construct.stages.isEmpty && r.background.stages.isEmpty)
   }
 }

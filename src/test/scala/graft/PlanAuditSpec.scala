@@ -347,9 +347,9 @@ class PlanAuditSpec extends SparkSpecBase {
     // intact (partition keys == join keys, in order), so the join
     // inserts no exchange at all.
     val e = sources.Tables.embeddings(spark, Sf001)
-    val buckets = ops.Staging.stage(ops.Dedup.embeddingBuckets(
-      e, "embedding", "vec_id", Seq(12, 12, 11), 42L, 64, 57, 16, 8))
-    try {
+    ops.Staging.scoped {
+      val buckets = ops.Staging.stage(ops.Dedup.embeddingBuckets(
+        e, "embedding", "vec_id", Seq(12, 12, 11), 42L, 64, 57, 16, 8))
       val a = buckets.as("a"); val b = buckets.as("b")
       val joined = a.hint("shuffle_hash").join(b,
           col("a.t") === col("b.t") && col("a.sig") === col("b.sig") &&
@@ -366,6 +366,6 @@ class PlanAuditSpec extends SparkSpecBase {
         s"staged self-join must not re-exchange the bucket rows:\n$p")
       assert(joinRegion.contains("InMemoryTableScan"),
         s"staged self-join must read the cached blocks:\n$p")
-    } finally ops.Staging.release(buckets)
+    }
   }
 }

@@ -15,6 +15,12 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
   val Sf0001 = "/root/testdata/sf0.001"
   val Sf001 = "/root/testdata/sf0.01"
+
+  /** Suites share one session, and a frame staged outside any
+    * `Staging.scoped` scope stays cached until someone clears it: each
+    * suite leaves the cache empty for the next. */
+  override def afterAll(): Unit =
+    try SparkSpecBase.clearCache() finally super.afterAll()
 }
 
 object SparkSpecBase {
@@ -33,5 +39,9 @@ object SparkSpecBase {
         logLevel = "ERROR")
     }
     cached
+  }
+
+  def clearCache(): Unit = synchronized {
+    if (cached != null && !cached.sparkContext.isStopped) cached.catalog.clearCache()
   }
 }
