@@ -225,6 +225,10 @@ object Bench {
       line(qsFull, "", extra))
   }
 
+  /** The share of the compared wall that summed steal may reach before
+    * the comparison is marked `host_loaded`. */
+  private val StealShare = 0.10
+
   /** Per-query regression gate vs a same-sf baseline. Ratios are
     * SHARE-normalized — (sec/total) / (old_sec/old_total) — because
     * the benching host's speed swings by 2x between runs (measured:
@@ -254,7 +258,10 @@ object Bench {
     // query, a flagged share-ratio regression whose own cpu_s did NOT
     // grow is reported as wall_only (rerun), not as a regression —
     // only cpu-corroborated slowdowns (or queries with no baseline
-    // cpu) make the regressions list.
+    // cpu) make the regressions list. (c) Hypervisor steal inflates
+    // task cpu along with wall, so (a) cannot see it: a run whose
+    // summed per-query steal_s passes StealShare of the compared total
+    // is host_loaded too.
     def median(xs: Seq[Double]): Double =
       if (xs.isEmpty) 1.0
       else { val s = xs.sorted; s(s.size / 2) }
@@ -266,7 +273,8 @@ object Bench {
     }
     val medianWall = median(cpuRated.map(_._1))
     val medianCpu = median(cpuRated.map(_._2))
-    val hostLoaded = cpuRated.size >= 20 && medianWall > 1.4 && medianCpu < 1.15
+    val flatCpu = cpuRated.size >= 20 && medianWall > 1.4 && medianCpu < 1.15
+    val stolen = common.map(_.stealS).sum > StealShare * newTotal
     def cpuGrew(name: String): Boolean =
       base(name) match {
         case (_, Some(oc)) if oc > 0.05 =>
@@ -284,10 +292,11 @@ object Bench {
       }.mkString("[", ",", "]")
     s""""vs_prev":{"baseline":${jstr(file)},"n_compared":${rated.size},""" +
       s""""median_wall_ratio":${r2(medianWall)},"median_cpu_ratio":${r2(medianCpu)},""" +
-      (if (hostLoaded)
+      (if (flatCpu || stolen)
         s""""host_loaded":true,"verdict":${jstr(
-          "wall inflated with flat cpu across the suite — host " +
-          "loaded; rerun required, do not commit as a baseline")},"""
+          (if (stolen) s"hypervisor steal over ${(StealShare * 100).round}% of the compared wall"
+           else "wall inflated with flat cpu across the suite") +
+          " — host loaded; rerun required, do not commit as a baseline")},"""
        else "") +
       s""""worst":${rated.maxByOption(_._4).map { case (q, _, _, r) =>
         s"""{"q":${jstr(q)},"ratio":${r2(r)}}""" }.getOrElse("null")},""" +

@@ -114,20 +114,12 @@ object Clustering {
     * no-oracle row): the reference pipeline keeps its Spark-ML-parity
     * check (`q_kmeans_clusters`, k-means‖ init is not portably
     * replayable), and THIS fit gives the same clustering shape a full
-    * DuckDB oracle, via the [[graft.ops.Dedup.semDeDup]] discipline:
+    * DuckDB oracle. Features arrive as already-exact integers (cents,
+    * flags — caller's responsibility; no quantization step here), and
+    * the fit is [[graft.ops.Lloyd.fitStaged]] with init tag `tag`.
     *
-    *  - features arrive as already-exact integers (cents, flags —
-    *    caller's responsibility; no quantization step here);
-    *  - init = the k rows of smallest (md5(tag+":"+id), id-as-string) in
-    *    rank order (the portable deterministic draw; the md5 hashes the
-    *    STRING form of the id, so the string form is the tiebreak too);
-    *  - `iters` fixed Lloyd rounds: assignment = argmin of exact int64
-    *    squared distance (ties → smallest cell), update = TRUNCATING
-    *    integer division of component sums (DuckDB `//`), empty cells
-    *    carry over.
-    *
-    * Scale shape: identical to the semDeDup fit — each round is one
-    * [[graft.ops.Lloyd.round]] job over the staged features, a k×dim
+    * Scale shape: identical to the semDeDup level-1 fit — each round is
+    * one [[graft.ops.Lloyd.round]] job over the staged features, a k×dim
     * partial per partition summed driver-side; nothing corpus-sized
     * ever reaches the driver. Caller must keep Σ(Δfeature)² inside
     * int64 (cents-scale features with dim ≤ ~16 are far inside it);
@@ -142,17 +134,8 @@ object Clustering {
       df: DataFrame, idCol: String, featCols: Seq[Column],
       k: Int, iters: Int, tag: String = "km"): DataFrame = {
     import graft.functions.exprs
-    // the init collect is the first consumer and fills the stage
-    val staged = Staging.stage(df.select(
-      col(idCol).as("id"), array(featCols.map(_.cast("long")): _*).as("qv")))
-    val initRows = staged
-      .withColumn("h", md5(concat(lit(tag + ":"), col("id").cast("string"))))
-      .orderBy(col("h"), col("id").cast("string")).limit(k)
-      .select(col("qv")).collect()
-    require(initRows.length >= k, s"portable k-means: ${initRows.length} rows < k=$k")
-    var cents: Array[Array[Long]] =
-      initRows.map(_.getAs[scala.collection.Seq[Long]](0).toArray)
-    for (_ <- 1 to iters) cents = graft.ops.Lloyd.round(staged, cents)
+    val (staged, cents) = graft.ops.Lloyd.fitStaged(df.select(
+      col(idCol).as("id"), array(featCols.map(_.cast("long")): _*).as("qv")), tag, k, iters)
     staged.select(col("id"), col("qv"),
       exprs.argmin_cell(col("qv"), cents.flatten, k, cents(0).length).as("cluster"))
   }

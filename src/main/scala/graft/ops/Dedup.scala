@@ -1232,8 +1232,8 @@ object Dedup {
     *
     *  - LEVEL 1: `k` coarse cells (callers size k ≈ ⌈√(n/target)⌉,
     *    clamped ≤ 1024 so the codebook stays a bounded codegen
-    *    literal), exactly the r9 integer Lloyd — distributed argmin,
-    *    k×dim aggregate collected driver-side per round;
+    *    literal), one [[Lloyd.fitStaged]] — a Spark job per round,
+    *    k×dim partials summed driver-side;
     *  - LEVEL 2: within each coarse cell c, k₂(c) = ⌈|c|/target⌉
     *    subcells (≤ 1024), ALL cells fitted in the same passes: init =
     *    the k₂(c) members of smallest md5 per cell (one window), each
@@ -1258,24 +1258,17 @@ object Dedup {
     */
   def semDeDup(
       embs: DataFrame, idCol: String, vecCol: String,
-      k: Int = 8, tau: Double = 0.95, seed: Long = 1L,
+      k: Int = 8, tau: Double = 0.95,
       maxIter: Int = 2, subCellTarget: Int = 256): DataFrame = {
     val spark = embs.sparkSession
-    // r9: the clustering moved from Spark ML KMeans to a PORTABLE
+    // r9: the clustering moved from Spark ML KMeans to the PORTABLE
     // integer Lloyd so the ENTIRE operator is DuckDB-replayable and
-    // q_semdedup carries a full oracle instead of rows+spec:
-    //  - components quantized floor(v·2^20 + 0.5) (exact in double;
-    //    1e-6 relative — far inside any real τ margin, and BOTH engines
-    //    compare the identical quantized values, so boundary behavior
-    //    matches bit-for-bit);
-    //  - init = the k vectors of smallest md5("sd:"+id) (a portable
-    //    deterministic draw — `seed` is retained in the signature for
-    //    API stability but the hash draw ignores it);
-    //  - `maxIter` fixed Lloyd rounds: assignment = argmin of exact
-    //    integer squared distance (ties → smallest cell), update =
-    //    TRUNCATING integer division of component sums (DuckDB's `//`
-    //    truncates, so the engine matches it rather than floorDiv);
-    //    empty cells keep their previous centroid.
+    // q_semdedup carries a full oracle instead of rows+spec.
+    // Components are quantized floor(v·2^20 + 0.5) (exact in double;
+    // 1e-6 relative — far inside any real τ margin, and BOTH engines
+    // compare the identical quantized values, so boundary behavior
+    // matches bit-for-bit); level 1 is a Lloyd.fitStaged with init
+    // tag "sd" and `maxIter` rounds.
     // Clustering still only GATES candidate generation — every
     // correctness invariant (one kept per τ-group, keep-rule) holds for
     // ANY partition of the vectors — so two loose rounds are enough;
@@ -1287,18 +1280,10 @@ object Dedup {
     val keyed = embs.select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("qv", graft.functions.exprs.quantize20_q(col("v")))
       .select(col("id"), col("qv"))
-    // staged: consumed by the init draw (which fills it — it reads
-    // every partition), every Lloyd round, the final labeling, and the
-    // pair join.
-    val staged = Staging.stage(keyed)
-    val initRows = staged
-      .withColumn("h", md5(concat(lit("sd:"), col("id").cast("string"))))
-      .orderBy(col("h"), col("id")).limit(k)
-      .select(col("qv")).collect()
-    var cents: Array[Array[Long]] =
-      initRows.map(_.getAs[scala.collection.Seq[Long]](0).toArray)
+    // staged: consumed by the init draw, every Lloyd round, the final
+    // labeling, and the pair join.
+    val (staged, cents) = Lloyd.fitStaged(keyed, "sd", k, maxIter)
     val dim = cents(0).length
-    for (_ <- 1 to maxIter) cents = Lloyd.round(staged, cents)
     // final LEVEL-1 assignment — staged: consumed by the k₂ counts, the
     // level-2 init window, every level-2 round, and the final labeling
     val lvl1 = Staging.stage(staged.withColumn("cell",
@@ -1334,7 +1319,7 @@ object Dedup {
         .select(col("id"), col("w.sub").as("sub"))
       // update: (cell, sub, i) sums; empty subcells keep their previous
       // centroid (the LEFT join); truncating div = DuckDB `//` on the
-      // non-negative counts, and matches the level-1 driver loop on the
+      // non-negative counts, and matches the level-1 Lloyd update on the
       // possibly-negative sums only because BOTH engines truncate
       val sums2 = lvl1.select(col("id"), col("cell"), col("qv"))
         .join(asg2, "id")

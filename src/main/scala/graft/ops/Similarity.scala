@@ -238,28 +238,22 @@ object Similarity {
   private def ivfCellsAndRankedProbes(
       corpus: DataFrame, corpusId: String, corpusVec: String,
       queries: DataFrame, queryId: String, queryVec: String,
-      numCells: Int, seed: Long, fitFraction: Double,
+      numCells: Int, fitFraction: Double,
       fitMaxIter: Int): (DataFrame, DataFrame) = {
     // r9: the whole front half — fit draw, coarse-quantizer fit, cell
-    // assignment, radius statistic, probe ranking — moved to PORTABLE
-    // integer arithmetic (the semDeDup discipline) so q_ann_ivf /
-    // q_ann_ivf_recall / q_ann_ivf_sweep carry full DuckDB oracles
-    // instead of rows+spec. Contract, mirrored in AnnQueries'
-    // AnnIvfCandidateCte:
+    // assignment, radius statistic, probe ranking — is PORTABLE integer
+    // arithmetic, so q_ann_ivf / q_ann_ivf_recall / q_ann_ivf_sweep
+    // carry full DuckDB oracles (mirrored in AnnQueries'
+    // AnnIvfCandidateCte):
     //  - components quantized floor(v·2^20 + 0.5) (quantize20);
-    //  - fit draw = rows whose md5("ivffit:"+id) hex prefix is below
-    //    round(fitFraction·256) as two hex digits (1/256 granularity —
-    //    a content-stable portable Bernoulli; the r8 Spark-native
+    //  - fit draw = md5FitDraw with tag "ivffit" (the r8 Spark-native
     //    sample() drew via XORShift, which no other engine can replay);
-    //  - init = the numCells sample vectors of smallest
-    //    (md5("ivf:"+id), id);
-    //  - fitMaxIter integer Lloyd rounds over the sample: assignment =
-    //    exact int64 argmin (ties → smallest cell), update = TRUNCATING
-    //    integer division (DuckDB `//`), empty cells carry over. A
-    //    coarse quantizer doesn't need convergence — nProbe probing
-    //    absorbs boundary error — so 2 rounds is the default, and each
-    //    round is driver-local arithmetic over the collected sample
-    //    (the r3 Spark-ML fit paid a scheduler round-trip per round).
+    //  - the coarse quantizer is a Lloyd.fit over the sample in
+    //    init order "ivf". A coarse quantizer doesn't need convergence
+    //    — nProbe probing absorbs boundary error — so 2 rounds is the
+    //    default, and each round is driver-local arithmetic over the
+    //    collected sample (the r3 Spark-ML fit paid a scheduler
+    //    round-trip per round).
     // capFitSample still guards the collect: it engages above ~100k
     // sampled vectors, and since r10 the cut is itself portable (md5
     // 8-hex-digit prefix, replayed verbatim by the fit CTEs), so the
@@ -275,44 +269,12 @@ object Similarity {
     // result bytes.
     val fitRes =
       memoized[(Array[Array[Long]], Map[Int, Long])]("ivffit", Seq(vecs),
-          numCells, seed, fitFraction, fitMaxIter) {
+          numCells, fitFraction, fitMaxIter) {
     val sampled = capFitSample(
       md5FitDraw(vecs, "neighbor_id", fitFraction, "ivffit"), "neighbor_id")
-    // portable order (md5, id-as-string): the md5 runs over the string
-    // form of the id, so the string form is the natural tiebreak too —
-    // and it keeps the fit contract alive for string-keyed corpora
-    // (the r9 cast-to-long NPE'd on non-numeric ids)
-    val fitRows = sampled
-      .select(md5(concat(lit("ivf:"), col("neighbor_id").cast("string"))).as("h"),
-        col("neighbor_id").cast("string").as("id"), col("qv_q"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1),
-        r.getAs[scala.collection.Seq[Long]](2).toArray))
-      .sortBy { case (h, id, _) => (h, id) }
-    require(fitRows.length >= numCells,
-      s"IVF fit sample ${fitRows.length} < numCells $numCells")
-    var cents: Array[Array[Long]] = fitRows.take(numCells).map(_._3.clone())
+    val cents = Lloyd.fit(collectFitRowsQ(sampled, "neighbor_id", "qv_q", "ivf"),
+      numCells, fitMaxIter)
     val dimA = cents(0).length
-    for (_ <- 1 to fitMaxIter) {
-      val sums = Array.fill(numCells)(new Array[Long](dimA))
-      val cnt = new Array[Long](numCells)
-      fitRows.foreach { case (_, _, q) =>
-        var best = Long.MaxValue; var cell = 0; var j = 0
-        while (j < numCells) {
-          var d = 0L; var i = 0
-          while (i < dimA) { val df = q(i) - cents(j)(i); d += df * df; i += 1 }
-          if (d < best) { best = d; cell = j }
-          j += 1
-        }
-        cnt(cell) += 1
-        var i = 0
-        while (i < dimA) { sums(cell)(i) += q(i); i += 1 }
-      }
-      cents = cents.zipWithIndex.map { case (c, j) =>
-        if (cnt(j) == 0L) c // empty cells carry over
-        else Array.tabulate(dimA)(i => sums(j)(i) / cnt(j)) // truncating
-      }
-    }
     val cellsFit = vecs.withColumn("cell",
       exprs.argmin_cell(col("qv_q"), cents.flatten, numCells, dimA))
 
@@ -383,7 +345,7 @@ object Similarity {
       rerankShortlist: Int = 0, sketchDim: Int = 16, dim: Int = 64,
       fitMaxIter: Int = 2): DataFrame = {
     val (cells, ranked) = ivfCellsAndRankedProbes(corpus, corpusId, corpusVec,
-      queries, queryId, queryVec, numCells, seed, fitFraction, fitMaxIter)
+      queries, queryId, queryVec, numCells, fitFraction, fitMaxIter)
     val probes = ranked.filter(col("rn") <= nProbe)
       .select(col("query_id"), col("qv"), col("cell"))
 
@@ -447,12 +409,12 @@ object Similarity {
       corpus: DataFrame, corpusId: String, corpusVec: String,
       queries: DataFrame, queryId: String, queryVec: String,
       k: Int, numCells: Int = 16, nProbes: Seq[Int] = Seq(2, 4, 8, 12, 16),
-      seed: Long = 42L, fitFraction: Double = 1.0,
+      fitFraction: Double = 1.0,
       fitMaxIter: Int = 2): DataFrame = {
     require(nProbes.nonEmpty && nProbes.forall(n => n >= 1 && n <= numCells))
     val grid = nProbes.distinct.sorted
     val (cells, ranked) = ivfCellsAndRankedProbes(corpus, corpusId, corpusVec,
-      queries, queryId, queryVec, numCells, seed, fitFraction, fitMaxIter)
+      queries, queryId, queryVec, numCells, fitFraction, fitMaxIter)
     val cand = cells
       .join(broadcast(ranked.filter(col("rn") <= grid.max)), Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
@@ -470,23 +432,16 @@ object Similarity {
         col("neighbor_id"), col("cosine"))
   }
 
-  /** PORTABLE PQ codebook fit (r9): per subspace, integer Lloyd rounds
-    * over integer-quantized sample subvectors, with no RNG anywhere —
-    * the semDeDup/IVF portability discipline, so every code, ADC score
-    * and shortlist the codebook produces can be replayed bit-for-bit
-    * by another engine (the q_ann_pq / q_ann_ivfpq DuckDB oracles do).
-    * Contract, mirrored in AnnQueries' AnnPq… and AnnIvfPq… CTEs:
-    *  - components are quantNorm20 integers (raw fits) or exact
-    *    integer residuals of them (IVF+PQ residual fits);
-    *  - `rows` arrive SORTED by (md5(initTag+":"+id), id) — the
-    *    caller's draw/order contract (see [[collectFitRowsQ]]);
-    *  - init: codeword (s, j) = subspace-s subvector of the rank-(j+1)
-    *    sample row (md5-rank init — the portable analog of random
-    *    seeding; Lloyd rounds do the shaping);
-    *  - `iters` integer Lloyd rounds: assignment = exact int64 argmin,
-    *    ties to the smallest j; update = TRUNCATING integer division
-    *    (DuckDB `//` truncates toward zero exactly like Java `/`);
-    *    empty codewords carry over.
+  /** PORTABLE PQ codebook fit (r9): one [[Lloyd.fit]] per subspace over
+    * that subspace's slice of every row — subspaces are independent in
+    * init, assignment and update — with no RNG anywhere, so every code,
+    * ADC score and shortlist the codebook produces can be replayed
+    * bit-for-bit by another engine (the q_ann_pq / q_ann_ivfpq DuckDB
+    * oracles do, via AnnQueries' AnnPq… and AnnIvfPq… CTEs).
+    * Components are quantNorm20 integers (raw fits) or exact integer
+    * residuals of them (IVF+PQ residual fits, [[Lloyd.residuals]]);
+    * `rows` arrive in the init order of [[collectFitRowsQ]], so
+    * codeword (s, j) starts as the subspace-s slice of row j.
     *
     * Driver-bounded by design (like the IVF coarse-quantizer fit): PQ
     * codebooks are trained on a small sample even at 100 TB (Faiss
@@ -503,65 +458,10 @@ object Similarity {
     val dim = rows.head.length
     require(dim % m == 0, s"m=$m must divide dim=$dim")
     val dsub = dim / m
-    val cb = new Array[Long](m * k * dsub)
-    var s = 0
-    while (s < m) {
-      var j = 0
-      while (j < k) {
-        var d = 0
-        while (d < dsub) {
-          cb((s * k + j) * dsub + d) = rows(j)(s * dsub + d)
-          d += 1
-        }
-        j += 1
-      }
-      s += 1
+    (0 until m).toArray.flatMap { s =>
+      Lloyd.fit(rows.map(java.util.Arrays.copyOfRange(_, s * dsub, (s + 1) * dsub)),
+        k, iters).flatten
     }
-    var it = 0
-    while (it < iters) {
-      val sums = new Array[Long](m * k * dsub)
-      val cnt = new Array[Long](m * k)
-      rows.foreach { r =>
-        var s2 = 0
-        while (s2 < m) {
-          var best = Long.MaxValue
-          var bj = 0
-          var j = 0
-          while (j < k) {
-            val off = (s2 * k + j) * dsub
-            var dd = 0L
-            var d = 0
-            while (d < dsub) {
-              val df = r(s2 * dsub + d) - cb(off + d)
-              dd += df * df
-              d += 1
-            }
-            if (dd < best) { best = dd; bj = j }
-            j += 1
-          }
-          cnt(s2 * k + bj) += 1
-          var d = 0
-          while (d < dsub) {
-            sums((s2 * k + bj) * dsub + d) += r(s2 * dsub + d)
-            d += 1
-          }
-          s2 += 1
-        }
-      }
-      var sj = 0
-      while (sj < m * k) {
-        if (cnt(sj) > 0L) {
-          var d = 0
-          while (d < dsub) {
-            cb(sj * dsub + d) = sums(sj * dsub + d) / cnt(sj) // truncating
-            d += 1
-          }
-        } // empty codeword carries over
-        sj += 1
-      }
-      it += 1
-    }
-    cb
   }
 
   /** Portable Bernoulli fit draw: keep rows whose md5(tag+":"+id) hex
@@ -583,22 +483,15 @@ object Similarity {
         md5(concat(lit(tag + ":"), col(idCol).cast("string"))), 1, 2) < lit(thr))
     }
 
-  /** Collect a fit sample's quantized vectors driver-side in the
-    * PORTABLE order (md5(initTag+":"+id), id) — the order
-    * [[fitPqCodebookQ]]'s md5-rank init consumes. The collect is
-    * bounded by [[capFitSample]] upstream.
+  /** Collect a fit sample's quantized vectors driver-side in
+    * [[Lloyd.initOrder]] under `initTag` — the order [[Lloyd.fit]]'s
+    * init consumes (the r9 cast-to-long tiebreak NPE'd on string ids).
+    * The collect is bounded by [[capFitSample]] upstream.
     */
   private def collectFitRowsQ(
       sampled: DataFrame, idCol: String, nqCol: String,
       initTag: String): Array[Array[Long]] =
-    sampled
-      .select(
-        md5(concat(lit(initTag + ":"), col(idCol).cast("string"))).as("h"),
-        // tiebreak on the STRING form of the id — the same form the md5
-        // hashes — so string-keyed corpora fit too (the r9 cast-to-long
-        // NPE'd on them); md5 ties never occur in practice, so numeric
-        // corpora order identically
-        col(idCol).cast("string").as("id"), col(nqCol))
+    sampled.select(Lloyd.initOrder(initTag, idCol) :+ col(nqCol): _*)
       .collect()
       .map(r => (r.getString(0), r.getString(1),
         r.getAs[scala.collection.Seq[Long]](2).toArray))
@@ -699,12 +592,13 @@ object Similarity {
     *
     * Both codebooks are trained driver-side on the same md5-drawn
     * sample (tag "ivfpqfit", order "ivfpqinit" — content-stable under
-    * repartitioning) with [[fitPqCodebookQ]]'s r9 PORTABLE integer
-    * Lloyd: the coarse quantizer is the degenerate m=1, k=numCells
-    * fit over the whole [[graft.functions.HashKernels.quantNorm20]]
-    * vector, the PQ codebook fits the exact-integer residuals of the
-    * SAME sample (assign cell → subtract centroid, mirroring exactly
-    * what the distributed encode below computes per corpus row). No
+    * repartitioning) with the portable [[Lloyd]] contract: the coarse
+    * quantizer is a [[Lloyd.fit]] over the whole
+    * [[graft.functions.HashKernels.quantNorm20]] vector, the PQ
+    * codebook ([[fitPqCodebookQ]]) fits the exact-integer
+    * [[Lloyd.residuals]] of the SAME sample (assign cell → subtract
+    * centroid, mirroring exactly what the distributed encode below
+    * computes per corpus row). No
     * RNG anywhere, so cells, codes and every downstream ADC ranking
     * replay bit-for-bit cross-engine — the q_ann_ivfpq* DuckDB
     * oracles do exactly that.
@@ -739,33 +633,13 @@ object Similarity {
     require(fitRows.nonEmpty,
       s"buildIvfPqIndex: fitFraction=$fitFraction selected zero rows to fit " +
         "the codebooks on — raise fitFraction or check the corpus is non-empty")
-    // coarse quantizer: the degenerate one-subspace PQ fit (cells over
-    // quantized-normalized vectors — cosine geometry)
-    val coarseCb = fitPqCodebookQ(fitRows, 1, numCells, fitIters)
-    val dim = fitRows.head.length
-    // PQ codebook: trained on the residuals of the SAME sample
-    // (assign cell → subtract centroid), mirroring exactly what the
-    // distributed encode below computes per corpus row; exact integer
-    // arithmetic end-to-end (argmin ties to the smallest cell, like
-    // argminCell)
-    val residuals = fitRows.map { nq =>
-      var best = Long.MaxValue
-      var cell = 0
-      var j = 0
-      while (j < numCells) {
-        var dd = 0L
-        var d = 0
-        while (d < dim) {
-          val df = nq(d) - coarseCb(j * dim + d)
-          dd += df * df
-          d += 1
-        }
-        if (dd < best) { best = dd; cell = j }
-        j += 1
-      }
-      Array.tabulate(dim)(d => nq(d) - coarseCb(cell * dim + d))
-    }
-    (coarseCb, fitPqCodebookQ(residuals, m, codebookSize, fitIters))
+    // coarse quantizer: cells over quantized-normalized vectors
+    // (cosine geometry); the PQ codebook is trained on the residuals
+    // of the SAME sample, mirroring exactly what the distributed
+    // encode below computes per corpus row
+    val coarse = Lloyd.fit(fitRows, numCells, fitIters)
+    (coarse.flatten,
+      fitPqCodebookQ(Lloyd.residuals(fitRows, coarse), m, codebookSize, fitIters))
     }
     val coarseCb = cbs._1
     val pqCb = cbs._2

@@ -74,8 +74,8 @@ object AnnQueries {
       annPrefetch(s, dir)
       val e = Tables.embeddings(s, dir)
       val queries = annQueries(e)
-      // the full 100 TB fit path exercised: quantizer fitted by a
-      // deterministic driver-local Lloyd (k-means++ seeded) on a seeded
+      // the full 100 TB fit path exercised: quantizer fitted by the
+      // driver-local portable Lloyd (graft.ops.Lloyd.fit) on an md5-drawn
       // 25% sample — a quantizer fit is bounded-sample by design at any
       // corpus size, and the r3 Spark-ML fit here paid a scheduler
       // round-trip per Lloyd iteration (~5 s to cluster 1600 rows).
@@ -936,15 +936,14 @@ object AnnQueries {
       |  FROM qd JOIN nrm USING (vec_id)),
       |""".stripMargin
 
-  /** Generated integer-Lloyd rounds replaying
-    * [[graft.ops.Similarity.fitPqCodebookQ]]: from init `{tag}c0(s, j,
-    * d, c)` over subvector rows `sv(vec_id, s, d, x)`, each round is
-    * assignment (exact BIGINT argmin; ties → smallest j via the
-    * `min(dist·kk + j)` encoding — dist ≤ dsub·2^44 so dist·kk ≪ 2^63)
-    * then a TRUNCATING `//` centroid update with empty codewords
-    * carried over (the q_semdedup / q_ann_ivf pattern). Emits `iters`
-    * round blocks, each ending with a trailing comma; the final
-    * centroid table is `{tag}c{iters}`.
+  /** Generated rounds of the portable integer k-means
+    * ([[graft.ops.Lloyd]]), one fit per subspace as
+    * [[graft.ops.Similarity.fitPqCodebookQ]] runs them: from init
+    * `{tag}c0(s, j, d, c)` over subvector rows `sv(vec_id, s, d, x)`,
+    * each round is an assignment then an update block. Ties go to the
+    * smallest j via the `min(dist·kk + j)` encoding (dist ≤ dsub·2^44,
+    * so dist·kk ≪ 2^63). Emits `iters` round blocks, each ending with a
+    * trailing comma; the final centroid table is `{tag}c{iters}`.
     */
   private def lloydRoundsSql(tag: String, sv: String, kk: Int, iters: Int): String =
     (1 to iters).map { r =>

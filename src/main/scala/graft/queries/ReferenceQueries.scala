@@ -162,10 +162,9 @@ object ReferenceQueries {
     // change-analysis clustering on the PORTABLE integer Lloyd.
     // q_kmeans_clusters stays the Spark-ML-parity rows check (its
     // k-means‖ init is not portably replayable); this variant's fit is
-    // the semDeDup contract — exact integer features (change CENTS +
-    // reduced flag), md5-rank init, truncating-division updates — so
-    // every assignment and the per-cluster summary (all exact ints)
-    // replay bit-for-bit in DuckDB.
+    // graft.ops.Lloyd over exact integer features (change CENTS +
+    // reduced flag), so every assignment and the per-cluster summary
+    // (all exact ints) replay bit-for-bit in DuckDB.
     QueryDef("q_kmeans_portable", (s, dir) => {
       val ch = changeDf(s, dir)
         .select(col("o_custkey"),

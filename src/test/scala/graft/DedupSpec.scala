@@ -350,7 +350,7 @@ class DedupSpec extends SparkSpecBase {
     val embs = rows.toDF("vec_id", "embedding")
     val tau = 0.95
     val out = graft.ops.Dedup.semDeDup(embs, "vec_id", "embedding",
-        k = 3, tau = tau, seed = 7L)
+        k = 3, tau = tau)
       .collect().map(r => (r.getLong(0),
         (r.getInt(1), r.getDouble(2), r.getLong(3), r.getBoolean(4)))).toMap
     assert(out.keySet === rows.map(_._1).toSet, "exactly one row per vector")
@@ -384,7 +384,7 @@ class DedupSpec extends SparkSpecBase {
     }
     // determinism: a second run (same seed) is identical
     val again = graft.ops.Dedup.semDeDup(embs, "vec_id", "embedding",
-        k = 3, tau = tau, seed = 7L)
+        k = 3, tau = tau)
       .collect().map(r => (r.getLong(0),
         (r.getInt(1), r.getDouble(2), r.getLong(3), r.getBoolean(4)))).toMap
     assert(again === out, "seeded run is reproducible")
@@ -395,7 +395,7 @@ class DedupSpec extends SparkSpecBase {
     val embs = graft.sources.Tables.embeddings(spark, Sf0001)
     val tau = 0.95
     val out = graft.ops.Dedup.semDeDup(embs, "vec_id", "embedding",
-      k = 8, tau = tau, seed = 1L)
+      k = 8, tau = tau)
     val n = embs.count()
     assert(out.count() === n, "one output row per vector")
     assert(out.select(count_distinct(col("id"))).head().getLong(0) === n)
