@@ -4,9 +4,8 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
@@ -61,7 +60,7 @@ final class CMBuffer(val depth: Int, val width: Int, val seed: Long) {
 }
 
 /** `count_min(token, depth, width, seed)` → flat `array<long>` counter
-  * table (row-major), query it with [[CMEstimate]].
+  * table (row-major), query it with [[CountMin.estimate]].
   */
 case class CountMinAgg(
     child: Expression, depth: Int, width: Int, seed: Long,
@@ -112,30 +111,15 @@ case class CountMinAgg(
     copy(child = c)
 }
 
-/** `cm_estimate(sketch, token)`: min-of-counters point estimate. */
-case class CMEstimate(
-    left: Expression, right: Expression, depth: Int, width: Int, seed: Long)
-  extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "cm_estimate"
-  override def nullSafeEval(sketch: Any, item: Any): Any =
-    CMKernels.estimate(sketch.asInstanceOf[ArrayData],
-      item.asInstanceOf[UTF8String], depth, width, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, t) =>
-      s"graft.functions.CMKernels.estimate($s, $t, $depth, $width, ${seed}L)")
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): CMEstimate = copy(left = l, right = r)
-}
-
 object CountMin {
   def agg(token: Column, depth: Int, width: Int, seed: Long): Column =
     ColumnBridge.column(
       CountMinAgg(ColumnBridge.expression(token), depth, width, seed)
         .toAggregateExpression())
+  /** Min-of-counters point estimate of `token` in a [[agg]] sketch. */
   def estimate(sketch: Column, token: Column,
       depth: Int, width: Int, seed: Long): Column =
-    ColumnBridge.column(CMEstimate(
+    ColumnBridge.column(exprs.kernel(CMKernels, LongType, "estimate",
       ColumnBridge.expression(sketch), ColumnBridge.expression(token),
-      depth, width, seed))
+      Literal(depth), Literal(width), Literal(seed)))
 }

@@ -1,17 +1,25 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, FloatType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Custom Catalyst expressions for the hashing hot paths. Both generate
-  * Java in `doGenCode` (a static helper call), so they stay inside
-  * WholeStageCodegen spans with the parquet scan — no interpreted-eval
-  * fallback, no UDF serialization, no boxing per row.
+/** The row kernels behind graft's hot paths, and how a query calls them.
+  *
+  * A kernel is one method on [[HashKernels]], [[CMKernels]] or
+  * [[ZOrderKernels]] over Catalyst's internal types (`UTF8String`,
+  * `ArrayData`, `Array[Byte]`, primitives; a Java array for a constant
+  * such as a codebook), plus one facade line in [[exprs]], [[zorder]] or
+  * [[CountMin]] that calls it through [[exprs.kernel]]: Spark's
+  * `StaticInvoke`, which compiles to a static call inside the
+  * WholeStageCodegen span with the parquet scan — no UDF serialization,
+  * no boxing per row — and evaluates by reflection when codegen is off.
+  * A SQL name is one more entry in [[GraftFunctionDefs]] that calls the
+  * facade.
   */
 object HashKernels extends Serializable {
   /** 64-bit Karp-Rabin polynomial over the UTF-8 bytes,
@@ -67,6 +75,12 @@ object HashKernels extends Serializable {
     count
   }
 
+  /** UTF-8 lead byte → char width; continuation/invalid bytes count 1
+    * so malformed input degrades to byte-stepping instead of drifting.
+    */
+  @inline private def utf8Width(lead: Int): Int =
+    if (lead < 0xc0) 1 else if (lead < 0xe0) 2 else if (lead < 0xf0) 3 else 4
+
   /** Per-position 64-bit char n-gram hashes in ONE rolling pass —
     * position i (0-based, in CHARACTERS) holds the hash of the n-char
     * window starting at character i. Positions count Unicode code
@@ -87,12 +101,6 @@ object HashKernels extends Serializable {
     * short-document fallback the gram-set callers rely on). Same
     * polynomial+splitmix64 construction as [[simHash]].
     */
-  /** UTF-8 lead byte → char width; continuation/invalid bytes count 1
-    * so malformed input degrades to byte-stepping instead of drifting.
-    */
-  @inline private def utf8Width(lead: Int): Int =
-    if (lead < 0xc0) 1 else if (lead < 0xe0) 2 else if (lead < 0xf0) 3 else 4
-
   def gramHashes64(s: UTF8String, n: Int): ArrayData = {
     val bytes = s.getBytes
     val len = bytes.length
@@ -339,10 +347,9 @@ object HashKernels extends Serializable {
     * alignment diagonal, scanned over a bounded char window — the exact
     * span measurement behind [[graft.ops.Dedup.sharedSubstringSpans]].
     *
-    * `packed` carries (d, lo, hi): d = pa − pb (the diagonal), lo/hi =
-    * first/last matching anchor gram position (1-based, code-point
-    * indexed) — packed into one long so the expression stays a ternary
-    * (Catalyst has no 5-ary codegen base; see [[LongestCommonRun]]).
+    * `packed` carries (d, lo, hi) in one long: d = pa − pb (the
+    * diagonal), lo/hi = first/last matching anchor gram position
+    * (1-based, code-point indexed), 21 bits each.
     * The scan window [lo − w + 1, hi + m + w − 2] is the provable
     * extent of any span containing those anchors (first/last anchor
     * each sit within w − 1 gram positions of the span's ends). Hash
@@ -594,10 +601,13 @@ object HashKernels extends Serializable {
 
   /** Nearest-centroid assignment over a flat k×dim codebook of
     * quantized components: argmin_j Σᵢ (qᵢ − c_{j,i})², ties to the
-    * smallest j. All-int64 arithmetic (components ≲ 2^24 ⇒ per-cell
-    * distance ≤ 64·2^50 ≪ 2^63) — the Lloyd assignment both engines
-    * replay exactly. Codebook rides as a codegen reference object
-    * (the PqEncode pattern); one pass, no n×k row explosion.
+    * smallest j — the Lloyd assignment both engines replay exactly. The
+    * difference, square and sum are checked int64: a distance past
+    * 2^63 − 1 (a component gap of 2^32 is enough) throws
+    * `ArithmeticException`, as DuckDB's replay of the same sum fails,
+    * instead of wrapping to a wrong cell. Quantized vectors
+    * (components ≲ 2^24, dim 64 ⇒ distance ≤ 2^56) stay far inside.
+    * One pass, no n×k row explosion.
     */
   def argminCell(v: ArrayData, codebook: Array[Long], k: Int, dim: Int): Int = {
     val n = math.min(v.numElements(), dim)
@@ -609,8 +619,8 @@ object HashKernels extends Serializable {
       val off = j * dim
       var i = 0
       while (i < n) {
-        val diff = v.getLong(i) - codebook(off + i)
-        d += diff * diff
+        val diff = Math.subtractExact(v.getLong(i), codebook(off + i))
+        d = Math.addExact(d, Math.multiplyExact(diff, diff))
         i += 1
       }
       if (d < best) { best = d; cell = j }
@@ -621,17 +631,18 @@ object HashKernels extends Serializable {
 
   /** Exact integer squared L2 distance of two quantized long-array
     * vectors — the distance the portable IVF cell ranking and radius
-    * statistic are built from. Same overflow envelope as [[argminCell]]
-    * (components ≲ 2^21 ⇒ sums ≪ 2^63); order-free integer arithmetic,
-    * so DuckDB's `sum((a − b)²)` replays it bit-for-bit.
+    * statistic are built from. Checked int64 like [[argminCell]]: a
+    * distance past 2^63 − 1 throws `ArithmeticException` instead of
+    * wrapping (components ≲ 2^21 stay far inside); order-free integer
+    * arithmetic, so DuckDB's `sum((a − b)²)` replays it bit-for-bit.
     */
   def dist2Q(a: ArrayData, b: ArrayData): Long = {
     val n = math.min(a.numElements(), b.numElements())
     var d = 0L
     var i = 0
     while (i < n) {
-      val diff = a.getLong(i) - b.getLong(i)
-      d += diff * diff
+      val diff = Math.subtractExact(a.getLong(i), b.getLong(i))
+      d = Math.addExact(d, Math.multiplyExact(diff, diff))
       i += 1
     }
     d
@@ -706,19 +717,9 @@ object HashKernels extends Serializable {
   // an encode: m small ints — the 32x-compressed stored form of the
   // vector (8 codes vs 64 floats at the default geometry).
 
-  /** Unit-sphere integer quantization — the shared front door of every
-    * PORTABLE PQ kernel (r9): q_i = floor(v_i·2^20 + 0.5) (exact:
-    * float→double is exact, ·2^20 is a power-of-2 scale), n2 = Σ q_i²
-    * (exact int64), then nq_i = floor(q_i·2^20/√n2 + 0.5). q_i·2^20 is
-    * exact in double (≪ 2^52), √n2 and the division are single
-    * correctly-rounded IEEE ops — so nq replays bit-for-bit in any
-    * engine computing the same formula (DuckDB:
-    * `floor(q*1048576.0/sqrt(n2)+0.5)`). The zero vector maps to
-    * zeros, not NaN. Output ≈ the unit vector at scale 2^20.
-    */
-  /** Elementwise int64 difference (see [[SubQ]]). Length = min of the
-    * two arrays, matching zip_with-on-equal-length semantics for the
-    * equal-dim vectors this is used on.
+  /** Elementwise int64 difference; length = min of the two arrays,
+    * matching zip_with-on-equal-length semantics for the equal-dim
+    * vectors this is used on.
     */
   def subQ(a: ArrayData, b: ArrayData): ArrayData = {
     val n = math.min(a.numElements(), b.numElements())
@@ -731,8 +732,8 @@ object HashKernels extends Serializable {
   /** Plain 2^20 integer quantization (no normalization): the exact
     * arithmetic of the Catalyst HOF `transform(v, x ->
     * cast(floor(cast(x as double)·1048576.0 + 0.5) as bigint))` —
-    * float→double exact, power-of-2 scale, Math.floor — in one
-    * codegen-friendly kernel call (see [[Quantize20]]).
+    * float→double exact, power-of-2 scale, Math.floor — in one kernel
+    * call.
     */
   def quantize20(v: ArrayData): ArrayData = {
     val n = v.numElements()
@@ -745,6 +746,16 @@ object HashKernels extends Serializable {
     new GenericArrayData(out)
   }
 
+  /** Unit-sphere integer quantization — the shared front door of every
+    * PORTABLE PQ kernel (r9): q_i = floor(v_i·2^20 + 0.5) (exact:
+    * float→double is exact, ·2^20 is a power-of-2 scale), n2 = Σ q_i²
+    * (exact int64), then nq_i = floor(q_i·2^20/√n2 + 0.5). q_i·2^20 is
+    * exact in double (≪ 2^52), √n2 and the division are single
+    * correctly-rounded IEEE ops — so nq replays bit-for-bit in any
+    * engine computing the same formula (DuckDB:
+    * `floor(q*1048576.0/sqrt(n2)+0.5)`). The zero vector maps to
+    * zeros, not NaN. Output ≈ the unit vector at scale 2^20.
+    */
   def quantNorm20(v: ArrayData): ArrayData = {
     val n = v.numElements()
     val q = new Array[Long](n)
@@ -861,522 +872,110 @@ object HashKernels extends Serializable {
   }
 }
 
-/** `rolling_hash(text)`: 64-bit content fingerprint. A cross-engine-stable
-  * alternative to md5 when only 8 bytes of key are needed (half the
-  * shuffle width of a hex md5 string).
+/** Column-facing kernel calls. Each facade is one [[kernel]] call of a
+  * [[HashKernels]] method; the notes below say only what the kernel's
+  * own scaladoc does not.
   */
-case class RollingHash(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "rolling_hash"
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.rollingHash(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HashKernels.rollingHash($c)")
-  override protected def withNewChildInternal(c: Expression): RollingHash = copy(c)
-}
-
-/** `simhash64(text, n)`: 64-bit SimHash over char n-gram shingles.
-  * Near-duplicate texts land within a small hamming distance, so
-  * band-bucketing on 16-bit chunks finds candidates without any O(n²)
-  * comparison (see [[graft.ops.Dedup.simhashNearDupPairs]]).
-  */
-case class SimHash64(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.simHash(v.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HashKernels.simHash($c, $n)")
-  override protected def withNewChildInternal(c: Expression): SimHash64 = copy(child = c)
-}
-
-/** `minhash_sig(text, n, k, seed)`: k-long MinHash signature, one pass. */
-case class MinHashSig(child: Expression, n: Int, k: Int, seed: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.minhashSig(v.asInstanceOf[UTF8String], n, k, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HashKernels.minhashSig($c, $n, $k, ${seed}L)")
-  override protected def withNewChildInternal(c: Expression): MinHashSig = copy(child = c)
-}
-
-/** `minhash_sig_l(long_array, k, seed)`: k-long MinHash signature over
-  * pre-hashed set elements (see [[HashKernels.minhashSigL]]).
-  */
-case class MinHashSigL(child: Expression, k: Int, seed: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig_l"
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.minhashSigL(v.asInstanceOf[ArrayData], k, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HashKernels.minhashSigL($c, $k, ${seed}L)")
-  override protected def withNewChildInternal(c: Expression): MinHashSigL = copy(child = c)
-}
-
-/** `winnow_anchors(hash_array, w)`: robust-winnowing anchor positions
-  * (see [[HashKernels.winnowAnchors]]) as `array<struct<p:int,h:long>>`.
-  */
-/** `basket_pairs(items, directed)` — see [[HashKernels.basketPairs]]. */
-case class BasketPairs(child: Expression, directed: Boolean) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("a", LongType, nullable = false),
-      StructField("b", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "basket_pairs"
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.basketPairs(v.asInstanceOf[ArrayData], directed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HashKernels.basketPairs($c, $directed)")
-  override protected def withNewChildInternal(c: Expression): BasketPairs = copy(child = c)
-}
-
-case class WinnowAnchors(child: Expression, w: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("p", IntegerType, nullable = false),
-      StructField("h", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "winnow_anchors"
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.winnowAnchors(v.asInstanceOf[ArrayData], w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HashKernels.winnowAnchors($c, $w)")
-  override protected def withNewChildInternal(c: Expression): WinnowAnchors = copy(child = c)
-}
-
-/** `longest_common_run(ta, tb, packed_dlohi)`: exact longest equal
-  * code-point run along one diagonal within the anchors' provable span
-  * window (see [[HashKernels.longestCommonRun]]). The (d, lo, hi)
-  * triple rides one packed long so the expression fits Catalyst's
-  * ternary codegen base.
-  */
-case class LongestCommonRun(first: Expression, second: Expression,
-    third: Expression, w: Int, m: Int) extends TernaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "longest_common_run"
-  override def nullSafeEval(a: Any, b: Any, p: Any): Any =
-    HashKernels.longestCommonRun(a.asInstanceOf[UTF8String],
-      b.asInstanceOf[UTF8String], p.asInstanceOf[Long], w, m)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, p) =>
-      s"graft.functions.HashKernels.longestCommonRun($a, $b, $p, $w, $m)")
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): LongestCommonRun =
-    copy(first = f, second = s, third = t)
-}
-
-/** `sig_digest(sig)`: low-byte digest of a MinHash signature (binary,
-  * one byte per position — see [[HashKernels.sigDigest]]).
-  */
-case class SigDigest(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "sig_digest"
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.sigDigest(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.sigDigest($c)")
-  override protected def withNewChildInternal(c: Expression): SigDigest = copy(child = c)
-}
-
-/** `digest_agree(a, b)`: agreeing-byte fraction of two sig_digest
-  * digests (the shuffle-compact MinHash agreement estimator) — the
-  * near-dup funnel's pre-verify cut: banding recalls far below the
-  * verify threshold, so the raw candidates of a boilerplate-heavy
-  * corpus are mostly ~0.2-Jaccard pairs, and 64 byte compares per pair
-  * drop them before any shingle set is built.
-  */
-case class DigestAgree(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "digest_agree"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.digestAgree(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.HashKernels.digestAgree($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DigestAgree =
-    copy(left = l, right = r)
-}
-
-/** `shingle_set(text, n)`: sorted distinct int shingle hashes. */
-case class ShingleSet(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "shingle_set"
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.shingleSet(v.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.shingleSet($c, $n)")
-  override protected def withNewChildInternal(c: Expression): ShingleSet = copy(child = c)
-}
-
-/** `jaccard_sorted(a, b)`: Jaccard over sorted-distinct int arrays. */
-case class JaccardSorted(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "jaccard_sorted"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.jaccardSorted(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.HashKernels.jaccardSorted($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): JaccardSorted =
-    copy(left = l, right = r)
-}
-
-/** `jaccard_sorted_l(a, b)`: merge-walk Jaccard over sorted long arrays
-  * (zero allocation per comparison — the verify kernel of the exact
-  * prefix-filter similarity join).
-  */
-case class JaccardSortedL(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "jaccard_sorted_l"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.jaccardSortedL(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.HashKernels.jaccardSortedL($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): JaccardSortedL =
-    copy(left = l, right = r)
-}
-
-/** `cosine_f(a, b)` / `dot_f(a, b)`: float-vector similarity in double
-  * precision, sequential accumulation (bit-stable).
-  */
-case class CosineF(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "cosine_f"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.cosineF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashKernels.cosineF($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineF =
-    copy(left = l, right = r)
-}
-
-/** `cosine_q(a, b)`: cosine of integer-quantized long-array vectors —
-  * bit-identical cross-engine (see HashKernels.cosineQ).
-  */
-case class CosineQ(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "cosine_q"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.cosineQ(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashKernels.cosineQ($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineQ =
-    copy(left = l, right = r)
-}
-
-/** `argmin_cell(qv)`: nearest-centroid id over a quantized codebook
-  * riding as a codegen reference object (the PqEncode pattern).
-  */
-case class ArgMinCell(child: Expression, codebook: Array[Long], k: Int, dim: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "argmin_cell"
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.argminCell(v.asInstanceOf[ArrayData], codebook, k, dim)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("lloydCodebook", codebook, "long[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HashKernels.argminCell($c, $ref, $k, $dim)")
-  }
-  override protected def withNewChildInternal(c: Expression): ArgMinCell =
-    copy(child = c)
-}
-
-case class DotF(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "dot_f"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.dotF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashKernels.dotF($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotF =
-    copy(left = l, right = r)
-}
-
-/** `dist2_q(a, b)`: exact integer squared L2 distance of quantized
-  * long-array vectors (see HashKernels.dist2Q).
-  */
-case class Dist2Q(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "dist2_q"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.dist2Q(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashKernels.dist2Q($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Dist2Q =
-    copy(left = l, right = r)
-}
-
-/** `rad_sketch_q(vec, sketchDim, dim, seed)`: integer Rademacher
-  * projection sketch — the DuckDB-replayable JL sketch (see
-  * HashKernels.radSketchQ's portability contract).
-  */
-case class RadSketchQ(child: Expression, sketchDim: Int, dim: Int, seed: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "rad_sketch_q"
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.radSketchQ(v.asInstanceOf[ArrayData], sketchDim, dim, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HashKernels.radSketchQ($c, $sketchDim, $dim, ${seed}L)")
-  override protected def withNewChildInternal(c: Expression): RadSketchQ = copy(child = c)
-}
-
-/** `hyperplane_sig(vec, numPlanes, dim, seed)`: sign-LSH bucket key. */
-case class HyperplaneSig(child: Expression, numPlanes: Int, dim: Int, seed: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hyperplane_sig"
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.hyperplaneSig(v.asInstanceOf[ArrayData], numPlanes, dim, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HashKernels.hyperplaneSig($c, $numPlanes, $dim, ${seed}L)")
-  override protected def withNewChildInternal(c: Expression): HyperplaneSig = copy(child = c)
-}
-
-/** `containment_counts(text)`: per-document intersection sizes against a
-  * fixed family of eval shingle sets. The eval sets ride inside the
-  * expression as a reference object (same technique as the PQ codebook)
-  * — the corpus scan emits one int-array row per document instead of
-  * one row per (document, shingle), so the fused plan never shuffles or
-  * joins anything corpus-sized.
-  */
-case class ContainmentCounts(child: Expression, n: Int, evalSets: Array[Array[Int]])
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "containment_counts"
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.containmentCounts(v.asInstanceOf[UTF8String], n, evalSets)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("evalShingleSets", evalSets, "int[][]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HashKernels.containmentCounts($c, $n, $ref)")
-  }
-  override protected def withNewChildInternal(c: Expression): ContainmentCounts =
-    copy(child = c)
-}
-
-/** `quantize20(vec)`: plain (un-normalized) integer quantization
-  * q_i = floor(v_i·2^20 + 0.5) of a float vector — bit-identical to
-  * the `transform(v, x -> floor(cast(x as double)·1048576.0 + 0.5))`
-  * HOF it replaces on the IVF/semdedup front halves. The HOF form is
-  * CodegenFallback (every HigherOrderFunction is), which dropped the
-  * corpus-scan projection out of whole-stage codegen into per-element
-  * interpreted eval — measured ~100 µs/row at dim 64 vs ~1 µs here,
-  * ×3 consumer passes of the unstaged cells frame = the dominant cost
-  * of q_ann_ivf at the 2M-vector probe.
-  */
-case class Quantize20(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "quantize20"
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.quantize20(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.quantize20($c)")
-  override protected def withNewChildInternal(c: Expression): Quantize20 = copy(child = c)
-}
-
-/** `sub_q(a, b)`: elementwise int64 difference of two long arrays —
-  * the PQ residual (nq − centroid). Replaces `zip_with(a, b, _-_)`,
-  * which (like every HigherOrderFunction) is CodegenFallback and was
-  * evaluated interpreted per corpus row on the IVF+PQ index path.
-  */
-case class SubQ(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "sub_q"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.subQ(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashKernels.subQ($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SubQ =
-    copy(left = l, right = r)
-}
-
-/** `quant_norm20(vec)`: unit-sphere integer quantization of a float
-  * vector (see [[HashKernels.quantNorm20]]'s portability contract) —
-  * the shared front door of the portable PQ / IVF+PQ kernels.
-  */
-case class QuantNorm20(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "quant_norm20"
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.quantNorm20(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.quantNorm20($c)")
-  override protected def withNewChildInternal(c: Expression): QuantNorm20 = copy(child = c)
-}
-
-/** `pq_encode_q(nq)`: portable product-quantization codes for an
-  * integer-quantized vector. The trained codebook rides inside the
-  * expression (shipped to executors via `addReferenceObj` — the
-  * codegen analog of a broadcast literal); geometry (m subspaces × k
-  * codewords) is compile-time constant so the generated loop bounds
-  * are literals.
-  */
-case class PqEncodeQ(child: Expression, codebook: Array[Long], m: Int, k: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "pq_encode_q"
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.pqEncodeQ(v.asInstanceOf[ArrayData], codebook, m, k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("pqCodebook", codebook, "long[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HashKernels.pqEncodeQ($c, $cbRef, $m, $k)")
-  }
-  override protected def withNewChildInternal(c: Expression): PqEncodeQ = copy(child = c)
-}
-
-/** `pq_table_q(nq)`: per-query integer ADC lookup table (m×k exact
-  * int64 inner products).
-  */
-case class PqTableQ(child: Expression, codebook: Array[Long], m: Int, k: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "pq_table_q"
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.pqTableQ(v.asInstanceOf[ArrayData], codebook, m, k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("pqCodebook", codebook, "long[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HashKernels.pqTableQ($c, $cbRef, $m, $k)")
-  }
-  override protected def withNewChildInternal(c: Expression): PqTableQ = copy(child = c)
-}
-
-/** `pq_adc_score_q(codes, table)`: exact-integer ADC score via m table
-  * lookups — the portable compressed-domain ranking key.
-  */
-case class PqAdcScoreQ(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "pq_adc_score_q"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.pqAdcScoreQ(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.HashKernels.pqAdcScoreQ($a, $b, $k)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): PqAdcScoreQ =
-    copy(left = l, right = r)
-}
-
-/** `dot_q(a, b)`: exact int64 dot product of quantized long-array
-  * vectors (see [[HashKernels.dotQ]]).
-  */
-case class DotQ(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "dot_q"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.dotQ(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashKernels.dotQ($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotQ =
-    copy(left = l, right = r)
-}
-
-/** `gram_hashes64(text, n)`: per-position 64-bit n-gram hashes, one
-  * rolling pass (see [[HashKernels.gramHashes64]]).
-  */
-case class GramHashes64(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "gram_hashes64"
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.gramHashes64(v.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HashKernels.gramHashes64($c, $n)")
-  override protected def withNewChildInternal(c: Expression): GramHashes64 =
-    copy(child = c)
-}
-
-/** `luhn_card_count(text)`: how many MAXIMAL runs of 13–19 ASCII
-  * digits in the text pass the Luhn mod-10 checksum — the card-number
-  * detector behind payment-PII auditing (ISO/IEC 7812 check digit;
-  * public algorithm). Maximal-run semantics: a 20+-digit run is not a
-  * candidate at all (not truncated into one), matching the
-  * `[0-9]+`-then-length-filter formulation a SQL oracle uses.
-  */
-case class LuhnCardCount(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "luhn_card_count"
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.luhnCardCount(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HashKernels.luhnCardCount($c)")
-  override protected def withNewChildInternal(c: Expression): LuhnCardCount =
-    copy(child = c)
-}
-
-/** Column-facing wrappers. */
 object exprs {
-  private def expr(c: Column): Expression = ColumnBridge.expression(c)
+  /** `obj.method(args...)` as a Catalyst expression: Spark's
+    * `StaticInvoke` compiles it to a direct static call inside the
+    * WholeStageCodegen span and evaluates it by reflection when codegen
+    * is off. A null argument gives a null result without calling the
+    * kernel, so the optimizer treats the call as null-intolerant: a
+    * filter on its result infers `isnotnull` on its inputs and may push
+    * that below a join (see q_simjoin_prefix's verify filter). Constant
+    * parameters are `Literal`s of the kernel's parameter type
+    * (`Literal(n)` for an Int, `Literal(seed)` for a Long); a Java array
+    * parameter is `Literal.fromObject(array)`, which the generated code
+    * holds as a reference object.
+    */
+  private[functions] def kernel(obj: AnyRef, dataType: DataType, method: String,
+      args: Expression*): Expression =
+    StaticInvoke(obj.getClass, dataType, method, args, returnNullable = false)
 
-  def rolling_hash(c: Column): Column = ColumnBridge.column(RollingHash(expr(c)))
-  def simhash64(c: Column, n: Int = 3): Column = ColumnBridge.column(SimHash64(expr(c), n))
+  private def hash(dataType: DataType, method: String, args: Expression*): Column =
+    ColumnBridge.column(kernel(HashKernels, dataType, method, args: _*))
+  private def e(c: Column): Expression = ColumnBridge.expression(c)
+
+  private val LongArray = ArrayType(LongType, containsNull = false)
+  private val IntArray = ArrayType(IntegerType, containsNull = false)
+  private def pairs(a: String, ta: DataType, b: String): DataType = ArrayType(
+    StructType(Seq(StructField(a, ta, nullable = false),
+      StructField(b, LongType, nullable = false))), containsNull = false)
+
+  /** 64-bit content fingerprint: a cross-engine-stable alternative to
+    * md5 when 8 bytes of key are enough (half the shuffle width of a
+    * hex md5 string).
+    */
+  def rolling_hash(c: Column): Column = hash(LongType, "rollingHash", e(c))
+  /** Near-duplicate texts land within a small hamming distance, so
+    * band-bucketing on 16-bit chunks finds candidates without any O(n²)
+    * comparison (see [[graft.ops.Dedup.simhashNearDupPairs]]).
+    */
+  def simhash64(c: Column, n: Int = 3): Column =
+    hash(LongType, "simHash", e(c), Literal(n))
   def minhash_sig(c: Column, n: Int, k: Int, seed: Long): Column =
-    ColumnBridge.column(MinHashSig(expr(c), n, k, seed))
+    hash(LongArray, "minhashSig", e(c), Literal(n), Literal(k), Literal(seed))
   def minhash_sig_l(c: Column, k: Int, seed: Long): Column =
-    ColumnBridge.column(MinHashSigL(expr(c), k, seed))
+    hash(LongArray, "minhashSigL", e(c), Literal(k), Literal(seed))
   def winnow_anchors(c: Column, w: Int): Column =
-    ColumnBridge.column(WinnowAnchors(expr(c), w))
+    hash(pairs("p", IntegerType, "h"), "winnowAnchors", e(c), Literal(w))
   def basket_pairs(c: Column, directed: Boolean): Column =
-    ColumnBridge.column(BasketPairs(expr(c), directed))
+    hash(pairs("a", LongType, "b"), "basketPairs", e(c), Literal(directed))
   def longest_common_run(ta: Column, tb: Column, packed: Column, w: Int, m: Int): Column =
-    ColumnBridge.column(LongestCommonRun(expr(ta), expr(tb), expr(packed), w, m))
+    hash(IntegerType, "longestCommonRun", e(ta), e(tb), e(packed), Literal(w), Literal(m))
   def shingle_set(c: Column, n: Int): Column =
-    ColumnBridge.column(ShingleSet(expr(c), n))
+    hash(IntArray, "shingleSet", e(c), Literal(n))
   def jaccard_sorted(a: Column, b: Column): Column =
-    ColumnBridge.column(JaccardSorted(expr(a), expr(b)))
-  def sig_digest(a: Column): Column =
-    ColumnBridge.column(SigDigest(expr(a)))
+    hash(DoubleType, "jaccardSorted", e(a), e(b))
+  def sig_digest(a: Column): Column = hash(BinaryType, "sigDigest", e(a))
+  /** The near-dup funnel's pre-verify cut: banding recalls far below
+    * the verify threshold, so the raw candidates of a boilerplate-heavy
+    * corpus are mostly ~0.2-Jaccard pairs, and 64 byte compares per pair
+    * drop them before any shingle set is built.
+    */
   def digest_agree(a: Column, b: Column): Column =
-    ColumnBridge.column(DigestAgree(expr(a), expr(b)))
+    hash(DoubleType, "digestAgree", e(a), e(b))
   def jaccard_sorted_l(a: Column, b: Column): Column =
-    ColumnBridge.column(JaccardSortedL(expr(a), expr(b)))
-  def cosine_f(a: Column, b: Column): Column =
-    ColumnBridge.column(CosineF(expr(a), expr(b)))
-  def cosine_q(a: Column, b: Column): Column =
-    ColumnBridge.column(CosineQ(expr(a), expr(b)))
+    hash(DoubleType, "jaccardSortedL", e(a), e(b))
+  def cosine_f(a: Column, b: Column): Column = hash(DoubleType, "cosineF", e(a), e(b))
+  def cosine_q(a: Column, b: Column): Column = hash(DoubleType, "cosineQ", e(a), e(b))
   def argmin_cell(c: Column, codebook: Array[Long], k: Int, dim: Int): Column =
-    ColumnBridge.column(ArgMinCell(expr(c), codebook, k, dim))
-  def dot_f(a: Column, b: Column): Column =
-    ColumnBridge.column(DotF(expr(a), expr(b)))
+    hash(IntegerType, "argminCell", e(c), Literal.fromObject(codebook), Literal(k), Literal(dim))
+  def dot_f(a: Column, b: Column): Column = hash(DoubleType, "dotF", e(a), e(b))
   def hyperplane_sig(c: Column, numPlanes: Int, dim: Int, seed: Long): Column =
-    ColumnBridge.column(HyperplaneSig(expr(c), numPlanes, dim, seed))
+    hash(LongType, "hyperplaneSig", e(c), Literal(numPlanes), Literal(dim), Literal(seed))
   def rad_sketch_q(c: Column, sketchDim: Int, dim: Int, seed: Long): Column =
-    ColumnBridge.column(RadSketchQ(expr(c), sketchDim, dim, seed))
-  def dist2_q(a: Column, b: Column): Column =
-    ColumnBridge.column(Dist2Q(expr(a), expr(b)))
+    hash(LongArray, "radSketchQ", e(c), Literal(sketchDim), Literal(dim), Literal(seed))
+  def dist2_q(a: Column, b: Column): Column = hash(LongType, "dist2Q", e(a), e(b))
   def containment_counts(c: Column, n: Int, evalSets: Array[Array[Int]]): Column =
-    ColumnBridge.column(ContainmentCounts(expr(c), n, evalSets))
-  def quant_norm20(c: Column): Column =
-    ColumnBridge.column(QuantNorm20(expr(c)))
-  def quantize20_q(c: Column): Column =
-    ColumnBridge.column(Quantize20(expr(c)))
-  def sub_q(a: Column, b: Column): Column =
-    ColumnBridge.column(SubQ(expr(a), expr(b)))
+    hash(IntArray, "containmentCounts", e(c), Literal(n), Literal.fromObject(evalSets))
+  def quant_norm20(c: Column): Column = hash(LongArray, "quantNorm20", e(c))
+  /** Replaces the HOF `transform(v, x -> floor(cast(x as double) *
+    * 1048576.0 + 0.5))`: every HigherOrderFunction is CodegenFallback,
+    * which dropped the corpus-scan projection out of whole-stage codegen
+    * (~100 µs/row at dim 64 vs ~1 µs here, the dominant cost of
+    * q_ann_ivf at the 2M-vector probe).
+    */
+  def quantize20_q(c: Column): Column = hash(LongArray, "quantize20", e(c))
+  /** The PQ residual (nq − centroid). Replaces `zip_with(a, b, _ - _)`,
+    * which (like every HigherOrderFunction) is CodegenFallback and was
+    * evaluated interpreted per corpus row on the IVF+PQ index path.
+    */
+  def sub_q(a: Column, b: Column): Column = hash(LongArray, "subQ", e(a), e(b))
   def pq_encode_q(c: Column, codebook: Array[Long], m: Int, k: Int): Column =
-    ColumnBridge.column(PqEncodeQ(expr(c), codebook, m, k))
+    hash(IntArray, "pqEncodeQ", e(c), Literal.fromObject(codebook), Literal(m), Literal(k))
   def pq_table_q(c: Column, codebook: Array[Long], m: Int, k: Int): Column =
-    ColumnBridge.column(PqTableQ(expr(c), codebook, m, k))
+    hash(LongArray, "pqTableQ", e(c), Literal.fromObject(codebook), Literal(m), Literal(k))
   def pq_adc_score_q(codes: Column, table: Column, k: Int): Column =
-    ColumnBridge.column(PqAdcScoreQ(expr(codes), expr(table), k))
-  def dot_q(a: Column, b: Column): Column =
-    ColumnBridge.column(DotQ(expr(a), expr(b)))
-  def luhn_card_count(c: Column): Column =
-    ColumnBridge.column(LuhnCardCount(expr(c)))
+    hash(LongType, "pqAdcScoreQ", e(codes), e(table), Literal(k))
+  def dot_q(a: Column, b: Column): Column = hash(LongType, "dotQ", e(a), e(b))
+  /** The card-number detector behind payment-PII auditing (ISO/IEC 7812
+    * check digit). A 20+-digit run is no candidate at all (not truncated
+    * into one), matching the `[0-9]+`-then-length-filter formulation of
+    * the SQL oracle.
+    */
+  def luhn_card_count(c: Column): Column = hash(IntegerType, "luhnCardCount", e(c))
   def gram_hashes64(c: Column, n: Int): Column =
-    ColumnBridge.column(GramHashes64(expr(c), n))
+    hash(LongArray, "gramHashes64", e(c), Literal(n))
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** Z-order (Morton) clustering kernels.
   *
@@ -17,7 +16,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * so min/max footer stats become selective on EVERY clustered column
   * (parquet row-group stats and file-level skipping both feed on
   * exactly these bounds). This is the layout behind OPTIMIZE ZORDER in
-  * lakehouse table formats, built here from a codegen'd expression +
+  * lakehouse table formats, built here from two kernel calls +
   * `repartitionByRange` — no format extension needed.
   */
 object ZOrderKernels extends Serializable {
@@ -49,39 +48,13 @@ object ZOrderKernels extends Serializable {
   }
 }
 
-/** `quantile_bin(x)`: x's rank among precomputed quantile boundaries. */
-case class QuantileBin(child: Expression, bounds: Array[Double])
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "quantile_bin"
-  override def nullSafeEval(v: Any): Any =
-    ZOrderKernels.bin(v.asInstanceOf[Double], bounds)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bounds", bounds, "double[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.ZOrderKernels.bin($c, $ref)")
-  }
-  override protected def withNewChildInternal(c: Expression): QuantileBin =
-    copy(child = c)
-}
-
-/** `interleave_bits(a, b)`: 2-d Morton key from two ≤32-bit ranks. */
-case class InterleaveBits(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "interleave_bits"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ZOrderKernels.interleave2(a.asInstanceOf[Long], b.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.ZOrderKernels.interleave2($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): InterleaveBits =
-    copy(left = l, right = r)
-}
-
 object zorder {
+  /** `c` (a double column) → its rank among the sorted `bounds`. */
   def quantile_bin(c: Column, bounds: Array[Double]): Column =
-    ColumnBridge.column(QuantileBin(ColumnBridge.expression(c), bounds))
+    ColumnBridge.column(exprs.kernel(ZOrderKernels, LongType, "bin",
+      ColumnBridge.expression(c), Literal.fromObject(bounds)))
+  /** 2-d Morton key from two ≤ 32-bit ranks (long columns). */
   def interleave_bits(a: Column, b: Column): Column =
-    ColumnBridge.column(InterleaveBits(
+    ColumnBridge.column(exprs.kernel(ZOrderKernels, LongType, "interleave2",
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
 }

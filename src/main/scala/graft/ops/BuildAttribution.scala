@@ -1,7 +1,6 @@
 package graft.ops
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicReference
 
 /** Best-effort attribution of session-shared builds to the query that
   * paid them (r16 verdict item 9): the [[SharedBuilds]] memo makes
@@ -14,17 +13,22 @@ import java.util.concurrent.atomic.AtomicReference
   * `shared_builds` field in bench_full.json — the one-line stdout
   * contract does not grow.
   *
+  * The query name is per thread, so runs on concurrent sessions each
+  * keep their own. A thread inherits its creator's name when it is
+  * started, so a [[SharedBuilds.inBackground]] build is paid by the run
+  * that started it, even after that run clears its own.
+  *
   * Telemetry only: no query logic reads this, and with no context set
   * (library callers, specs) recording is a no-op.
   */
 object BuildAttribution {
-  private val current = new AtomicReference[String](null)
+  private val current = new InheritableThreadLocal[String]
   private val records = new ConcurrentLinkedQueue[(String, String)]()
 
-  /** Mark the query whose timed region is about to run. */
+  /** Mark the query whose timed region is about to run on this thread. */
   def setContext(query: String): Unit = current.set(query)
 
-  def clearContext(): Unit = current.set(null)
+  def clearContext(): Unit = current.remove()
 
   /** Called by [[SharedBuilds.Build.record]] when a build actually
     * EXECUTES (memo misses only — hits cost the consumer nothing worth

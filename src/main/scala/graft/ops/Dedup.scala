@@ -1131,9 +1131,9 @@ object Dedup {
       .withColumn("d", col("pa") - col("pb"))
       .groupBy(col("ia"), col("ib"), col("d"))
       .agg(min(col("pa")).as("lo"), max(col("pa")).as("hi"))
-    // (d, lo, hi) packed into one long so the char-scan expression fits
-    // Catalyst's ternary codegen base; positions are code-point counts
-    // < 2^21 (docs over 2M chars would need a wider packing)
+    // (d, lo, hi) packed into the one long the char-scan kernel reads;
+    // positions are code-point counts < 2^21 (docs over 2M chars would
+    // need a wider packing)
     val packed = ((col("d") + lit(1 << 20)).cast("long") * lit(1L << 42)
       + col("lo").cast("long") * lit(1L << 21) + col("hi").cast("long")).as("pk")
     val ta = docs.select(col(idCol).as("ia"), col(textCol).as("__ta"))

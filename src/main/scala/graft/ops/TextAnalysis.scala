@@ -115,8 +115,8 @@ object TextAnalysis {
     */
   def fingerprintMd5(text: Column): Column = md5(text)
 
-  /** 64-bit rolling polynomial (Karp-Rabin) fingerprint via the custom
-    * Catalyst expression [[graft.functions.RollingHash]].
+  /** 64-bit rolling polynomial (Karp-Rabin) fingerprint, the kernel
+    * [[graft.functions.HashKernels.rollingHash]].
     */
   def fingerprintRolling(text: Column): Column =
     graft.functions.exprs.rolling_hash(text)

@@ -704,7 +704,11 @@ object OverlapQueries {
         .join(broadcast(candF), "id_a")
         .join(sets.select(col("doc_id").as("id_b"), col("gs").as("gb")), "id_b")
         .withColumn("jaccard", graft.functions.exprs.jaccard_sorted_l(col("ga"), col("gb")))
-        .filter(col("jaccard") >= tau)
+        // coalesce keeps the same rows (a null jaccard fails either way)
+        // but stops the optimizer from inferring isnotnull(ga/gb) through
+        // the null-intolerant kernel call: pushed into the scan of `sets`,
+        // that filter computes every document's gram array a second time
+        .filter(coalesce(col("jaccard"), lit(-1.0)) >= tau)
         .select(col("id_a"), col("id_b"), col("jaccard"))
     },
       Some("""WITH g AS (

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+
+import graft.functions.HashKernels
 import graft.ops.{Lloyd, Similarity}
 
 /** One portable integer k-means contract across both executors: the
@@ -31,5 +34,12 @@ class LloydSpec extends SparkSpecBase {
     intercept[ArithmeticException] {
       Similarity.fitPqCodebookQ(Array.fill(3)(Array(big)), 1, 1, 1)
     }
+  }
+
+  test("the assignment distance fails on an int64 overflow instead of wrapping") {
+    // a component gap of 2^32 squares to 2^64, which wraps to 0
+    val v = new GenericArrayData(Array(1L << 32))
+    intercept[ArithmeticException](HashKernels.argminCell(v, Array(0L), 1, 1))
+    intercept[ArithmeticException](HashKernels.dist2Q(v, new GenericArrayData(Array(0L))))
   }
 }

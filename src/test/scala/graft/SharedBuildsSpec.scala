@@ -253,4 +253,29 @@ class SharedBuildsSpec extends SparkSpecBase {
     assert(results(0) != null && (results(0) eq results(1)))
     PairFunnel.invalidateAll()
   }
+
+  test("builds on two threads are attributed to each thread's own query") {
+    SharedBuilds.invalidate()
+    BuildAttribution.drain()
+    val d = docs
+    val ready = new CyclicBarrier(2)
+    val threads = Seq("query-a", "query-b").map { q =>
+      val t = new Thread(() => {
+        BuildAttribution.setContext(q)
+        ready.await() // both contexts are set before either build runs
+        SharedBuilds.getOrBuild(SharedBuilds.Fit, s"attribution-$q", Seq(d)) { b =>
+          b.record(); q
+        }
+        BuildAttribution.clearContext()
+      })
+      t.start(); t
+    }
+    threads.foreach(_.join())
+    val paid = BuildAttribution.drain()
+    assert(paid.size === 2)
+    paid.foreach { case (build, query) =>
+      assert(build.startsWith(s"attribution-${query}_"), s"$build paid by $query")
+    }
+    SharedBuilds.invalidate()
+  }
 }
