@@ -75,26 +75,6 @@ object Dedup {
       heavyBucketCap > 0 && BucketRefine.lossless(numHashes, estCut)
   }
 
-  /** Corpora whose parquet footers prove at most this many rows (and
-    * [[LocalFunnelMaxBytes]] uncompressed bytes) run the near-dup funnel
-    * on the driver; see [[minhashNearDupPairs]]. Measured on 4 cores
-    * (funnel + labels, warm median): 5k docs 0.63 s driver vs 2.46 s
-    * distributed, 20k 1.83 vs 3.53 s, 80k 7.36 vs 9.37 s, 160k 15.96 vs
-    * 17.43 s, so the crossover there is near 160k docs. The driver
-    * pass is one thread while the distributed one scales with cores,
-    * so the bound is an eighth of that crossover.
-    */
-  private val LocalFunnelMaxRows: Long = 20000L
-  /** Caps the uncompressed bytes one collect may bring to the driver
-    * (20k sf-style docs are ~6 MB), so a few huge docs cannot. */
-  private val LocalFunnelMaxBytes: Long = 32L << 20
-  /** Caps the candidate and verified pairs the driver pass may hold:
-    * a family of m copies is m(m-1)/2 pairs, so a few thousand copies
-    * of one page in a small file would otherwise fill the driver heap.
-    * Past the cap the corpus takes the distributed funnel, which
-    * checkpoints its pairs. Eight partners per doc at the row bound. */
-  private val LocalFunnelMaxPairs: Int = 8 * LocalFunnelMaxRows.toInt
-
   /** Near-duplicate pairs via MinHash banding, verified with exact
     * n-gram Jaccard.
     *
@@ -143,27 +123,25 @@ object Dedup {
     * returns.
     *
     * Small corpus: when `docs` is a plain parquet scan (projections and
-    * filters only) with integral ids and string text whose footers prove
-    * at most `localMaxRows` rows and [[LocalFunnelMaxBytes]] uncompressed
-    * bytes, the same funnel runs on the driver: one collect of
-    * (id, text), then the very [[HashKernels]] functions the expressions
-    * above call, band keys by the same xxhash64 fold, the same estimate
+    * filters only) with integral ids and string text that
+    * [[Scale.funnelOnDriver]] admits, the same funnel runs on the
+    * driver: one collect of (id, text), then the very [[HashKernels]]
+    * functions the expressions above call, band keys by the same
+    * xxhash64 fold, the same estimate
     * cut and heavy-bucket sub-keying, and the same exact verify. The
     * rows are identical; the result is a local relation, so it needs no
     * checkpoint. At that size the distributed funnel is nearly all
     * Spark's fixed cost per job (about 20 jobs and their planning and
     * codegen), not kernel work. A corpus whose candidate or verified
-    * pairs pass [[LocalFunnelMaxPairs]] (a large family of copies)
+    * pairs pass [[Scale.funnelMaxPairs]] (a large family of copies)
     * leaves the driver pass and takes the distributed funnel. Frames
     * the footers cannot bound (in-memory frames, joins, spread or
-    * repartitioned plans) always take the distributed path;
-    * `localMaxRows = 0` forces it.
+    * repartitioned plans) always take the distributed path.
     */
   def minhashNearDupPairs(
       docs: DataFrame, textCol: String, idCol: String,
-      p: MinhashParams = MinhashParams(),
-      localMaxRows: Long = LocalFunnelMaxRows): DataFrame =
-    minhashNearDupPairs(docs, textCol, idCol, p, localMaxRows, probe = None)
+      p: MinhashParams = MinhashParams()): DataFrame =
+    minhashNearDupPairs(docs, textCol, idCol, p, probe = None)
 
   /** The funnel itself. With a `probe` (a non-null Boolean column of
     * `docs`), a pair is emitted only when at least one of its rows has
@@ -174,16 +152,14 @@ object Dedup {
     */
   private def minhashNearDupPairs(
       docs: DataFrame, textCol: String, idCol: String, p: MinhashParams,
-      localMaxRows: Long, probe: Option[String]): DataFrame = {
+      probe: Option[String]): DataFrame = {
     val local =
-      if (localMaxRows > 0 && integralType(docs.schema(idCol).dataType) &&
-          docs.schema(textCol).dataType == StringType &&
-          graft.sources.Tables.footerBound(docs)
-            .exists(b => b.rows <= localMaxRows && b.bytes <= LocalFunnelMaxBytes))
+      if (integralType(docs.schema(idCol).dataType) &&
+          docs.schema(textCol).dataType == StringType && Scale.funnelOnDriver(docs))
         localMinhashPairs(docs, textCol, idCol, p, probe)
       else None
     if (local.isDefined) return local.get
-    // spread above Tables.SpreadMinBytes: the signature kernel must not
+    // spread above Scale.SpreadMinBytes: the signature kernel must not
     // serialize on a one-split scan of a larger corpus.
     // Bucket rows carry (id, band-hash, DIGEST) — the full 64-long
     // signature never leaves the map side. sig_digest keeps one byte per
@@ -345,7 +321,7 @@ object Dedup {
     * distinct ids with id_a < id_b, and each candidate is verified over
     * every row carrying its ids, as the distributed join-back does.
     * None when the candidate or verified pairs pass
-    * [[LocalFunnelMaxPairs]].
+    * [[Scale.funnelMaxPairs]].
     */
   private def localMinhashPairs(docs: DataFrame, textCol: String, idCol: String,
       p: MinhashParams, probe: Option[String]): Option[DataFrame] = {
@@ -371,8 +347,9 @@ object Dedup {
       i += 1
     }
     val estCut = p.estCut
+    val maxPairs = Scale.funnelMaxPairs
     val candidates = mutable.HashSet.empty[(Long, Long)]
-    def bounded: Boolean = candidates.size <= LocalFunnelMaxPairs
+    def bounded: Boolean = candidates.size <= maxPairs
     // false once the candidates pass the cap
     def emit(members: Iterable[Int]): Boolean = {
       val m = members.toArray
@@ -415,8 +392,8 @@ object Dedup {
       rb <- rowsOf(b)
       j = HashKernels.jaccardSorted(sh(ra), sh(rb))
       if j >= p.jaccardThreshold
-    } yield Row(asId(a), asId(b), j)).take(LocalFunnelMaxPairs + 1).toVector
-    if (verified.length > LocalFunnelMaxPairs) return None
+    } yield Row(asId(a), asId(b), j)).take(maxPairs + 1).toVector
+    if (verified.length > maxPairs) return None
     val schema = StructType(Seq(StructField("id_a", idType), StructField("id_b", idType),
       StructField("jaccard", DoubleType)))
     Some(docs.sparkSession.createDataFrame(verified.asJava, schema))
@@ -449,11 +426,10 @@ object Dedup {
     * partially-propagated labels that would silently under-dedup.
     *
     * Two-phase at scale: the distributed contraction rounds run ONLY
-    * while the edge set exceeds `localFinishMaxEdges`; once the
+    * while the edge set exceeds [[Scale.closureMaxEdges]]; once the
     * (contracted) graph fits trivially in driver memory the closure
     * finishes with a local union-find — one collect instead of ~8
-    * shuffle stages + 2 driver actions PER ROUND. On a 256-edge pair
-    * set this took the closure from 3.5 s to ~0.3 s; on a 100 TB corpus
+    * shuffle stages + 2 driver actions PER ROUND. On a 100 TB corpus
     * the near-dup pair graph after distinct is orders of magnitude
     * smaller than the corpus, and each contraction round shrinks it
     * further, so the local finish is where every real run ends. (The
@@ -467,9 +443,9 @@ object Dedup {
     * Applies only to integral id columns; other id types always use the
     * distributed fixed point.
     */
-  def componentMinLabels(pairs: DataFrame, maxRounds: Int = 20,
-      localFinishMaxEdges: Long = 2L * 1000 * 1000): DataFrame = {
+  def componentMinLabels(pairs: DataFrame, maxRounds: Int = 20): DataFrame = {
     val spark = pairs.sparkSession
+    val maxEdges = Scale.closureMaxEdges
     import spark.implicits._
     // canonical larger→smaller directed edges (src > dst)
     val canonical = pairs
@@ -521,13 +497,12 @@ object Dedup {
     // r5 shape spent 3 sequential driver actions to learn what this
     // single bounded collect already proves; under a contended
     // scheduler each action is fixed latency). Over a local relation
-    // (a driver-side funnel) the probe and the labels run no job. A
-    // full probe at the limit is ≤ ~32 MB of longs; past the limit,
-    // LocalLimit short-circuits and we fall through to the distributed
+    // (a driver-side funnel) the probe and the labels run no job. Past
+    // the limit, LocalLimit short-circuits and we fall through to the distributed
     // contraction below. Null ids join no edge and label to null, as
     // in the distributed form.
-    if (integralIds && localFinishMaxEdges < Int.MaxValue) {
-      val lim = localFinishMaxEdges.toInt + 1
+    if (integralIds && maxEdges < Int.MaxValue) {
+      val lim = maxEdges.toInt + 1
       val probe = pairs.select(col("id_a").cast(LongType), col("id_b").cast(LongType))
         .limit(lim).collect()
         .map(r => (Option(r.getAs[java.lang.Long](0)), Option(r.getAs[java.lang.Long](1))))
@@ -581,7 +556,7 @@ object Dedup {
     var round = 0
     var converged = false
     var prev = checksum(dir)
-    def localFinishEligible: Boolean = integralIds && prev._1 <= localFinishMaxEdges
+    def localFinishEligible: Boolean = integralIds && prev._1 <= maxEdges
     while (!converged && !localFinishEligible && round < maxRounds) {
       dir = smallStar(largeStar(dir)).localCheckpoint()
       val cur = checksum(dir)
@@ -695,7 +670,7 @@ object Dedup {
     val meta = spark.createDataFrame(
       spark.sparkContext.parallelize(metaRows, 1), metaSchema)
     // ungated spread: each document's work grows with the eval suite,
-    // which the corpus footers do not bound (Tables.SpreadMinBytes)
+    // which the corpus footers do not bound (Scale.SpreadMinBytes)
     graft.sources.Tables.roundRobinSpread(corpus)
       .select(col(idCol).as("corpus_id"),
         posexplode(exprs.containment_counts(col(textCol), shingleN, sets))
@@ -1025,8 +1000,7 @@ object Dedup {
         lit(false).as("is_delta"))
       .union(delta.select(col(idCol).as("doc_id"), col(textCol).as("text"),
         lit(true).as("is_delta")))
-    val pairs = minhashNearDupPairs(all, "text", "doc_id", p, LocalFunnelMaxRows,
-      probe = Some("is_delta"))
+    val pairs = minhashNearDupPairs(all, "text", "doc_id", p, probe = Some("is_delta"))
     // each verified pair seen from both of its docs, with the partner's side
     val partners = pairs.select(col("id_a").as("id_d"), col("id_b").as("id_o"))
       .union(pairs.select(col("id_b").as("id_d"), col("id_a").as("id_o")))

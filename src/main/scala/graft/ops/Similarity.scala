@@ -205,19 +205,13 @@ object Similarity {
     */
   private[graft] val MaxFitSample: Long = 100000L
 
-  private[graft] def capFitSample(
-      sel: DataFrame, idCol: String,
-      maxFit: Long = MaxFitSample): DataFrame = {
-    // r17 (§5: no scheduled jobs for what metadata already proves):
-    // the cap decision needs the exact count ONLY when it could
-    // engage. A footer-derived upper bound at or under maxFit proves
-    // cnt <= maxFit, so the sample passes through uncapped — exactly
-    // what the counted path would have decided — without the count
-    // job each fit previously paid. At scale the bound exceeds maxFit
-    // and the exact count (which the portable md5 threshold folds
-    // into the RESULT) still runs.
-    if (graft.sources.Tables.footerBound(sel).exists(_.rows <= maxFit)) return sel
-    val cnt = sel.count()
+  private[graft] def capFitSample(sel: DataFrame, idCol: String): DataFrame = {
+    // r17: a footer bound at or under maxFit proves cnt <= maxFit, so
+    // the sample passes uncapped without a count job; past it the
+    // exact count, which the md5 threshold folds into the result, runs.
+    val maxFit = Scale.fitSampleMax
+    if (Scale.bound(sel).exists(_.rows <= maxFit)) return sel
+    val cnt = Scale.rows(sel)
     if (cnt <= maxFit) sel
     else {
       val thr = math.max(1L, (maxFit << 32) / cnt)

@@ -4,7 +4,7 @@ package queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{SharedBuilds, Similarity}
+import graft.ops.{Scale, SharedBuilds, Similarity}
 import graft.sources.Tables
 
 /** Approximate nearest-neighbour search over the embeddings: exact top-k,
@@ -817,13 +817,11 @@ object AnnQueries {
     * deliberately keep their published literals — they chart the
     * operating surface; these are the operating points.
     *
-    * r16: the count comes from the parquet footers (driver metadata,
-    * no job) instead of `e.count()` — six ANN queries each scheduled a
-    * count stage just to size their shortlist. Sampled-oracle mode is
-    * handled inside parquetRowCount (real count of the sampled view).
+    * N is [[Scale.tableRows]]: no count job (r16), and the sampled
+    * view's count in the sampled-oracle mode.
     */
   private def fractionRerank(s: SparkSession, dir: String, base: Int): Int =
-    math.max(base, (Tables.parquetRowCount(s, dir, "embeddings") / 20L).toInt)
+    math.max(base, (Scale.tableRows(s, dir, "embeddings") / 20L).toInt)
 
   /** The ANN family's query set, exact qrels and PQ fit parameters,
     * declared once: every consumer builds through them, so the

@@ -4,7 +4,7 @@ package queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Chunking, Dedup, FuzzyJoin, TextAnalysis}
+import graft.ops.{Chunking, Dedup, FuzzyJoin, Scale, TextAnalysis}
 import graft.sources.Tables
 
 /** Document near-dup detection: exact, MinHash and SimHash dedup, the
@@ -191,7 +191,7 @@ object NearDupQueries {
     // the tiebreak), composing the closure labels with the quality
     // kernel. One max(struct) per component, no window.
     QueryDef("q_dedup_keep_best", (s, dir) => {
-      // spread above Tables.SpreadMinBytes: the quality kernel runs at
+      // spread above Scale.SpreadMinBytes: the quality kernel runs at
       // the scan otherwise — one task on a single-row-group file. Below
       // it the scan's one task is no slower. The funnel gets the UNSPREAD
       // plan: minhashNearDupPairs spreads internally, and the funnel
@@ -398,29 +398,17 @@ object NearDupQueries {
       val grams = (side: DataFrame) => side.select(col("source"),
         explode(array_distinct(
           graft.functions.exprs.gram_hashes64(col("text"), 12))).as("g"))
-      // r17 SCALE SHAPE (gated on the footer doc count, the
-      // exactDfAutoDocs idiom): below the gate the r16 plan is kept
-      // byte-for-byte — AQE broadcasts the corpus-gram set and the
-      // delta distinct's one exchange feeds the probe directly. Above
-      // it (sf10 stage profile: corpus vocab ~50M rows, join went
-      // sort-merge) two defects appear that the small plan never has:
-      // (1) dg pays TWO full exchanges — hash(source, g) for its
-      //     distinct, then hash(g) for the join (268 MB + 254 MB at
-      //     sf10). Pre-partitioning the raw delta grams by g lets the
-      //     subset rule (hash(g) clusters (source, g)) satisfy the
-      //     distinct AND the join from ONE exchange; the lost map-side
-      //     partial distinct only bought 20.4M -> 11M rows there, so
-      //     the single raw exchange is byte-comparable and a whole
-      //     aggregation stage + exchange shorter.
-      // (2) the sort-merge join sorts both vocab-scale sides (~58M
-      //     rows); the shuffle_hash hint builds the corpus side's
-      //     per-partition hash table instead (8-byte keys, ~1.6M rows
-      //     per partition at sf10) — the minhash funnel's standing
-      //     argument against sorting what a hash map can walk.
-      // Join strategy and partitioning change no values; the distinct
-      // sets and the left-join semantics are identical in both shapes.
-      val bigCorpusDocs = 200000L
-      val big = Tables.parquetRowCount(s, dir, "documents") > bigCorpusDocs
+      // r17 SCALE SHAPE (Scale.noveltyAtScale): below the gate the r16
+      // plan is kept — AQE broadcasts the corpus-gram set. Above it the
+      // sf10 stage profile (corpus vocab ~50M rows) showed two defects:
+      // (1) dg paid TWO exchanges, hash(source, g) for its distinct and
+      //     hash(g) for the join (268 + 254 MB); pre-partitioning the raw
+      //     delta grams by g serves both from ONE exchange;
+      // (2) the sort-merge join sorted both vocab-scale sides (~58M
+      //     rows); the shuffle_hash hint builds the corpus side's hash
+      //     table instead (~1.6M 8-byte keys per partition at sf10).
+      // Neither shape changes a value.
+      val big = Scale.noveltyAtScale(Scale.tableRows(s, dir, "documents"))
       val dgRaw = grams(docs.filter(col("doc_id") % 7 === 3))
         .select(col("source"), col("g"))
       val dg = (if (big) dgRaw.repartition(col("g")) else dgRaw).distinct()

@@ -3,7 +3,7 @@ package queries
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, Scale}
 import graft.sources.Tables
 
 /** Overlap beyond whole-document near-dups: shared substrings,
@@ -242,10 +242,8 @@ object OverlapQueries {
       // identically under EVERY plane set — including the cap's extra
       // bits, so a cap can never separate a genuine family), so the
       // brute-force all-pairs oracle stays hash-green at every oracle
-      // sf under any schedule — asserted each round. n comes from
-      // parquet footers — no job in the query graph (the q_semdedup
-      // discipline).
-      val n = 2L * Tables.parquetRowCount(s, dir, "embeddings")
+      // sf under any schedule — asserted each round. n: Scale.tableRows.
+      val n = 2L * Scale.tableRows(s, dir, "embeddings")
       val schedule = Dedup.occupancyPlanesSchedule(n, targetOcc = 8.0,
         theta = 0.98, extraBits = 2.0)
       val tables = schedule.length
@@ -315,51 +313,14 @@ object OverlapQueries {
       // for the ranks, a funnel-filtered pass for the verify sets); the
       // only staged frame is the PREFIX-sized keyed frame below.
       val srcDocs = Tables.documents(s, dir)
-      // EXACT-DF MODE (r14 verdict item 5, behind a flag): the sampled
-      // broadcast rank map below caps at 2M entries, and its heavy-gram
-      // coverage band narrows as vocabulary grows — at some corpus size
-      // the map no longer sees the medium-df grams it exists to push
-      // out of prefixes. The documented replacement is the LINEAR
-      // distributed exact-df join form: exact per-gram doc frequency
-      // via one partial-agg groupBy on the 8-byte gram key, ranks
-      // joined back onto the gram stream (shuffle on g), and the
-      // per-doc rarest-first reorder done with a sort_array regroup
-      // (shuffle on doc_id) instead of a map-side kernel — no driver
-      // state, no cap, coverage exact at ANY vocabulary. Costs two
-      // corpus×grams-scale exchanges the broadcast path never pays
-      // (the r10 measurement: ~90 GB of exchange at 5M docs), so it is
-      // a FLAG, not the default: flip it when the corpus outgrows the
-      // map (the A/B probe record in bench_baselines/ carries the
-      // measured crossover). Both orders are consistent total orders,
-      // so prefix filtering itself is lossless under either; the two
-      // modes DO flag different bucket sets heavy, and with width-3
-      // refinement the anchor is probabilistic, so cross-mode identity
-      // holds up to the documented ≤ 1e-5 per-pair anchor residual
-      // (observed bit-identical at sf0.01/sf0.1 — diff_verify).
-      // r17 AUTO-SWITCH (r16 verdict item 3): the flag now defaults
-      // from the corpus size instead of a constant `false`. The
-      // sampled map's coverage premise is that the ~df ≥ 40 gram tail
-      // fits its 2M-entry cap: the r13/r14 GramDfProbe measured the
-      // df ≥ 64 tail at 1.4M grams at 5M docs (growing ~linearly in
-      // docs), so the cap saturates somewhere near ~7M docs — past
-      // that the map silently truncates exactly the medium-df grams
-      // it exists to push out of prefixes, AND a 2M-row driver collect
-      // has no business in a default plan at that scale. Below the
-      // threshold the sampled path stays the default because it is
-      // MEASURED faster (r16_simjoin_exactdf_ab.json: exact = 2.31×
-      // sampled at 500k docs — the exact path's two corpus×grams
-      // exchanges dominate until the map's coverage breaks). Doc count
-      // comes from parquet footers (no job); both modes verify every
-      // surviving pair exactly, so the switch moves candidate COUNT,
-      // never results (the ≤ 1e-5 anchor residual caveat below applies
-      // to both modes identically). `spark.graft.simjoin.exactDf` or
-      // SPARK_GRAFT_SIMJOIN_EXACTDF still overrides in either direction.
-      val exactDfAutoDocs = 6000000L
-      val nSrcDocs = Tables.parquetRowCount(s, dir, "documents")
-      val exactDf = s.conf.getOption("spark.graft.simjoin.exactDf")
-        .orElse(sys.env.get("SPARK_GRAFT_SIMJOIN_EXACTDF"))
-        .map(_.toBoolean)
-        .getOrElse(nSrcDocs > exactDfAutoDocs)
+      // EXACT-DF MODE (r14 verdict item 5), past Scale's gate: exact
+      // per-gram df by a distributed join replaces the sampled broadcast
+      // rank map, whose 2M-entry cap stops covering the medium-df grams
+      // as vocabulary grows. Prefix filtering is lossless under either
+      // order; the modes agree up to the documented ≤ 1e-5 per-pair
+      // anchor residual, and both verify every surviving pair exactly.
+      val nSrcDocs = Scale.tableRows(s, dir, "documents")
+      val exactDf = Scale.simjoinExactDf(nSrcDocs)
       // Canonical token order WITHOUT a distributed frequency join
       // (r11): heavy-gram ranks are estimated from a deterministic 5%
       // doc sample, capped top-2M by count (driver state ≤ ~32 MB at
@@ -434,7 +395,7 @@ object OverlapQueries {
               .as("ptoks"),
             graft.functions.exprs.sig_digest(
               graft.functions.exprs.minhash_sig_l(col("toks"), 64, 42L)).as("dg"))
-      // exact-df keyed frame (flag path — see the exactDf scaladoc):
+      // exact-df keyed frame (the past-the-gate path, see EXACT-DF MODE):
       // rank = floor(log2(exact df)) for df ≥ 2 (length(bin(c)) − 1 is
       // the exact integer log2 — no float log2 boundary risk), else 0.
       // SINGLE-NODE-SAFE FORM (r16; the design the r15 A/B record
@@ -535,10 +496,7 @@ object OverlapQueries {
       // silently inheriting the probe host's boundary and growing
       // ~15M-row hash builds per task — the r11 failure mode the
       // adaptive count exists to prevent.
-      // Row count from parquet FOOTERS (nSrcDocs above) — through r16
-      // this was srcDocs.count(), which is metadata-only work but still
-      // scheduled a job in the query's graph (§5: keep the driver out
-      // of query paths — the same fix fractionRerank got in r16).
+      // Row count: nSrcDocs above (Scale.tableRows, no job).
       // ~57 prefix rows/doc measured ⇒ 15k docs/partition ≈ 900k-row
       // builds; sizing shared with q_embed_neardup (Dedup helper)
       val nParts = Dedup.sizedShufflePartitions(nSrcDocs, 15000L,
@@ -741,10 +699,8 @@ object OverlapQueries {
       // two levels — per-row assignment cost is k + n/(256k) ≈ 2√(n/256)
       // instead of the flat min(n/256, 1024) whose cap made cells (and
       // the within-cell quadratic term) grow superlinearly at the
-      // 2M-vector probe. n comes from the parquet footers DRIVER-SIDE
-      // (no job in this query's graph — `embs.count()` is metadata-only
-      // work but still schedules a stage per invocation).
-      val n = Tables.parquetRowCount(s, dir, "embeddings")
+      // 2M-vector probe. n: Scale.tableRows (no job in the query graph).
+      val n = Scale.tableRows(s, dir, "embeddings")
       val k = math.max(8L,
         math.min(1024L, math.ceil(math.sqrt(n / 256.0)).toLong)).toInt
       val d = graft.ops.Dedup.semDeDup(embs, "vec_id", "embedding", k = k)

@@ -55,12 +55,15 @@ object Tables {
     val path = s"$dir/$name.parquet"
     val df = pinnedSchema(spark, path)
       .fold(spark.read.parquet(path))(s => spark.read.schema(s).parquet(path))
-    tblSample.get(name).fold(df) { case (idCol, thr) =>
-      import org.apache.spark.sql.functions._
-      df.filter(substring(
-        md5(concat(lit("vsample:"), col(idCol).cast("string"))), 1, 2)
-        < lit(thr))
-    }
+    tblSample.get(name).fold(df) { case (idCol, thr) => sampled(df, idCol, thr) }
+  }
+
+  /** `df` restricted to the rows whose md5("vsample:"+id) 2-hex-digit
+    * prefix is below `thr`: the sampled-oracle view [[load]] returns for
+    * a table named in `SPARK_GRAFT_TBL_SAMPLE`. */
+  private[graft] def sampled(df: DataFrame, idCol: String, thr: String): DataFrame = {
+    import org.apache.spark.sql.functions._
+    df.filter(substring(md5(concat(lit("vsample:"), col(idCol).cast("string"))), 1, 2) < lit(thr))
   }
 
   /** The session confs that change what parquet schema inference returns
@@ -80,16 +83,6 @@ object Tables {
   /** One pinned schema per table path, process-wide. */
   private val pins = new java.util.concurrent.ConcurrentHashMap[String, Pin]()
 
-  /** Every file under a table path, recursively (a table is one parquet
-    * file or a directory of them). */
-  private def listing(spark: SparkSession, path: String)
-      : (org.apache.hadoop.conf.Configuration, Vector[org.apache.hadoop.fs.FileStatus]) = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val it = p.getFileSystem(conf).listFiles(p, true)
-    (conf, Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toVector)
-  }
-
   /** The inferred schema of the parquet file set at `path`, inferred at
     * most once per identity: every file's path, length and mtime, plus
     * the [[inferenceConfs]] values. A file rewritten in place or a
@@ -100,9 +93,14 @@ object Tables {
     * usual error.
     */
   private def pinnedSchema(spark: SparkSession, path: String): Option[StructType] = {
+    // every file under the path, recursively (a table is one parquet
+    // file or a directory of them)
+    val p = new org.apache.hadoop.fs.Path(path)
     val files =
-      try listing(spark, path)._2
-      catch { case _: java.io.FileNotFoundException => return None }
+      try {
+        val it = p.getFileSystem(spark.sessionState.newHadoopConf()).listFiles(p, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toVector
+      } catch { case _: java.io.FileNotFoundException => return None }
     val ids = files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
     val confs = inferenceConfs.map(spark.conf.getOption)
     val pin = pins.get(path)
@@ -124,22 +122,17 @@ object Tables {
     * splits) the condition is false and this is a no-op — the spread
     * never adds a shuffle where the source already parallelizes.
     *
-    * A frame whose parquet footers ([[footerBound]]) prove at most
-    * [[SpreadMinBytes]] uncompressed bytes is returned unchanged: below
-    * that size the kernel on the scan's one task is no slower than the
-    * round-robin exchange plus its extra tasks. Frames the footers
-    * cannot bound keep the spread. The spread exists for speed only:
-    * every caller's result is independent of its partition count.
-    *
-    * Only the kernels timed in [[SpreadMinBytes]]' table call this:
-    * MinHash signatures, winnow anchors, the weak-label votes and the
-    * quality score. Every other site calls [[roundRobinSpread]].
+    * A frame small enough for the scan's one task
+    * ([[graft.ops.Scale.kernelFitsOneTask]]) comes back unchanged. Only
+    * the kernels timed at `Scale.SpreadMinBytes` call this; every other
+    * site calls [[roundRobinSpread]]. Every caller's result is
+    * independent of its partition count.
     */
   def spreadForKernel(df: DataFrame): DataFrame = {
     val spread = roundRobinSpread(df)
     // footers are read only for an under-split frame, never per file of
     // a many-split table
-    if ((spread ne df) && footerBound(df).exists(_.bytes <= spreadMinBytes.value)) df
+    if ((spread ne df) && graft.ops.Scale.kernelFitsOneTask(df)) df
     else spread
   }
 
@@ -152,31 +145,6 @@ object Tables {
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
-
-  /** Footer bytes up to which [[spreadForKernel]] leaves a frame on the
-    * scan's own task. Measured warm on a 4-core host: kernel wall to a
-    * noop sink (median of 15) on one task vs spread over 4, on
-    * single-file cuts of the sf0.1 documents:
-    * {{{
-    * rows  footer KB  minhash     anchors     votes       quality    (s, one/spread)
-    *  400     130     .087/.138   .055/.084   .082/.097   .077/.101
-    *  500     161     .055/.065   .048/.070   .071/.082   .077/.084
-    *  550     178     .061/.065   .054/.068   .080/.083   .086/.088
-    *  600     194     .061/.062   .054/.072   .090/.083   .085/.083
-    *  700     223     .062/.058   .048/.062   .085/.071   .095/.089
-    * 1600     500     .096/.082   .072/.075   .160/.109   .154/.110  (median of 9)
-    * }}}
-    * so these four kernels cross between 178 and 194 KB. The
-    * containment scan at q_contamination's 5% eval split is slower on
-    * one task already at 161 KB (.094 vs .083 s) and faster at 130 KB
-    * (.100 vs .121 s); it uses [[roundRobinSpread]], as do the kernels
-    * not in this table.
-    */
-  val SpreadMinBytes: Long = 176L << 10
-
-  /** Test hook: a negative value spreads every under-split frame, as
-    * before the size gate (the specs check the gate changes no row). */
-  private[graft] val spreadMinBytes = new scala.util.DynamicVariable[Long](SpreadMinBytes)
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")
@@ -215,76 +183,6 @@ object Tables {
   }
   def documents(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
-
-  /** Driver-side exact row count from parquet FOOTERS — no Spark job.
-    * `df.count()` on a raw scan is metadata-only work too, but it still
-    * schedules a job (a stage, tasks, a result collection); callers
-    * that only need a row count to SIZE something (e.g. q_semdedup's
-    * k=n/256) shouldn't put an action in their query's job graph.
-    * Cost: one footer read per file, O(files) driver metadata I/O.
-    */
-  def parquetRowCount(spark: SparkSession, dir: String, name: String): Long = {
-    // sampled-oracle mode: corpus-sizing decisions (semdedup's k, the
-    // adaptive LSH plane count) must see the SAMPLED cardinality, or
-    // the engine would size for the full corpus while the mirrored
-    // DuckDB oracle counts the sampled view — a real count() of the
-    // sampled frame replaces the footer shortcut only in that mode
-    if (tblSample.contains(name)) return load(spark, dir, name).count()
-    val (conf, files) = listing(spark, s"$dir/$name.parquet")
-    footerSums(files.filter(_.getPath.getName.endsWith(".parquet"))
-      .map(f => org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))).rows
-  }
-
-  /** What parquet footers prove about a frame without a job: at most
-    * `rows` rows, whose uncompressed row groups total `bytes`. */
-  final case class FooterBound(rows: Long, bytes: Long)
-
-  /** Summed record counts and uncompressed row-group sizes of `files`. */
-  private def footerSums(files: Seq[org.apache.parquet.io.InputFile]): FooterBound =
-    files.foldLeft(FooterBound(0L, 0L)) { (acc, in) =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        var bytes = 0L
-        r.getRowGroups.forEach(g => bytes += g.getTotalByteSize)
-        FooterBound(acc.rows + r.getRecordCount, acc.bytes + bytes)
-      } finally r.close()
-    }
-
-  /** Upper bound on a frame's rows (and their uncompressed bytes)
-    * derivable WITHOUT a job: when the plan is only
-    * row-preserving-or-filtering operators over one parquet scan, the
-    * summed footers of its files bound the result; a union is bounded
-    * by the sum of its children's bounds. Conservative — any operator
-    * that could EXPAND rows (join, explode), a union with an unbounded
-    * child, or any other source returns None, and the caller falls back
-    * to a real count or the distributed path.
-    */
-  def footerBound(df: DataFrame): Option[FooterBound] = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    def walk(p: LogicalPlan): Option[FooterBound] = p match {
-      case Project(_, c) => walk(c)
-      case Filter(_, c) => walk(c)
-      case SubqueryAlias(_, c) => walk(c)
-      case u: Union =>
-        u.children.foldLeft(Option(FooterBound(0L, 0L))) { (acc, c) =>
-          for (sum <- acc; b <- walk(c)) yield FooterBound(sum.rows + b.rows, sum.bytes + b.bytes)
-        }
-      case l: LogicalRelation => l.relation match {
-        case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
-          try {
-            val conf = df.sparkSession.sessionState.newHadoopConf()
-            Some(footerSums(fs.location.inputFiles.toSeq.map(f =>
-              org.apache.parquet.hadoop.util.HadoopInputFile
-                .fromPath(new org.apache.hadoop.fs.Path(f), conf))))
-          } catch { case scala.util.control.NonFatal(_) => None }
-        case _ => None
-      }
-      case _ => None
-    }
-    walk(df.queryExecution.optimizedPlan)
-  }
 
   /** Typed rows for the corpus tables — `Dataset[T]` with case-class
     * encoders where compile-time safety helps (pipeline code passing

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.Dedup
+import graft.ops.{Dedup, Scale}
 import graft.functions.exprs
 
 class DedupSpec extends SparkSpecBase {
@@ -86,11 +86,11 @@ class DedupSpec extends SparkSpecBase {
     // diameter 119. Min-label propagation needs one round per hop; star
     // contraction must finish within 10 rounds (~log₂ n + slack) — the
     // call would throw on exhaustion, so passing IS the round bound.
-    // localFinishMaxEdges = 0 forces the distributed rounds the default
+    // closureMaxEdges = 0 forces the distributed rounds the default
     // would short-circuit for a graph this small.
     val pairs = (1L until 120L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val labels = Dedup.componentMinLabels(pairs, maxRounds = 10,
-        localFinishMaxEdges = 0L)
+    val labels = Scale.forcing(_.copy(closureMaxEdges = 0L))(
+        Dedup.componentMinLabels(pairs, maxRounds = 10))
       .as[(Long, Long)].collect()
     assert(labels.length === 120)
     assert(labels.forall(_._2 == 1L), "every chain node must label to the min id 1")
@@ -105,7 +105,8 @@ class DedupSpec extends SparkSpecBase {
     val df = (chain ++ hub ++ pair).toDF("id_a", "id_b")
     val local = Dedup.componentMinLabels(df)
       .as[(Long, Long)].collect().toMap
-    val distributed = Dedup.componentMinLabels(df, localFinishMaxEdges = 0L)
+    val distributed = Scale.forcing(_.copy(closureMaxEdges = 0L))(
+        Dedup.componentMinLabels(df))
       .as[(Long, Long)].collect().toMap
     assert(local === distributed,
       "local union-find finish must produce the distributed fixed point exactly")
@@ -120,7 +121,8 @@ class DedupSpec extends SparkSpecBase {
     // height) and original edge counts — exercises the "non-root nodes
     // survive contraction" invariant the handoff depends on
     val pairs = (1L until 200L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val labels = Dedup.componentMinLabels(pairs, localFinishMaxEdges = 150L)
+    val labels = Scale.forcing(_.copy(closureMaxEdges = 150L))(
+        Dedup.componentMinLabels(pairs))
       .as[(Long, Long)].collect()
     assert(labels.length === 200)
     assert(labels.forall(_._2 == 1L),

@@ -10,13 +10,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.{HashKernels, exprs}
-import graft.ops.{Dedup, PairFunnel}
+import graft.ops.{Dedup, PairFunnel, Scale}
 import graft.sources.Tables
 
 /** The driver-side near-dup funnel: on a parquet corpus whose footers
   * prove it small, [[Dedup.minhashNearDupPairs]] computes the pair set
   * on the driver. It must give exactly the rows the distributed funnel
-  * (`localMaxRows = 0`) gives, and so must the component labels over
+  * (forced with `funnelMaxRows = 0`) gives, and so must the component labels over
   * them.
   */
 class LocalFunnelSpec extends SparkSpecBase {
@@ -32,7 +32,8 @@ class LocalFunnelSpec extends SparkSpecBase {
   private def assertSame(docs: DataFrame,
       p: Dedup.MinhashParams = Dedup.MinhashParams()): Seq[String] = {
     val local = Dedup.minhashNearDupPairs(docs, "text", "doc_id", p)
-    val dist = Dedup.minhashNearDupPairs(docs, "text", "doc_id", p, localMaxRows = 0L)
+    val dist = Scale.forcing(_.copy(funnelMaxRows = 0L))(
+      Dedup.minhashNearDupPairs(docs, "text", "doc_id", p))
     assert(isLocal(local), "a footer-bounded parquet corpus runs on the driver")
     assert(dist.queryExecution.logical.isInstanceOf[LogicalRDD])
     assert(local.schema.map(_.dataType) === dist.schema.map(_.dataType))
@@ -40,7 +41,8 @@ class LocalFunnelSpec extends SparkSpecBase {
     val got = rows(local)
     assert(got === rows(dist))
     val labels = rows(Dedup.componentMinLabels(local))
-    assert(labels === rows(Dedup.componentMinLabels(dist, localFinishMaxEdges = 0L)))
+    assert(labels === rows(Scale.forcing(_.copy(closureMaxEdges = 0L))(
+      Dedup.componentMinLabels(dist))))
     assert(labels === rows(Dedup.componentMinLabels(dist)))
     got
   }
@@ -240,7 +242,8 @@ class LocalFunnelSpec extends SparkSpecBase {
       Row(1L, 2L), Row(2L, 3L), Row(3L, 2L), Row(7L, 7L), Row(null, 9L),
       Row(10L, null), Row(null, null), Row(5L, 4L)), schema)
     val probe = rows(Dedup.componentMinLabels(pairs))
-    assert(probe === rows(Dedup.componentMinLabels(pairs, localFinishMaxEdges = 0L)))
+    assert(probe === rows(Scale.forcing(_.copy(closureMaxEdges = 0L))(
+      Dedup.componentMinLabels(pairs))))
     assert(probe.contains("null|null") && probe.contains("7|7") && probe.contains("5|4"))
   }
 

@@ -287,8 +287,8 @@ class PlanAuditSpec extends SparkSpecBase {
     // the smallest_k bounded-heap aggregate, shuffled-hash joins for the
     // corpus×grams rank/plen edges (never a broadcast of the unbounded
     // exact-df rank table), and no collect_list anywhere
-    spark.conf.set("spark.graft.simjoin.exactDf", "true")
-    try {
+    // a gate below any corpus forces the exact-df path
+    graft.ops.Scale.forcing(_.copy(simjoinSampledMaxDocs = -1L)) {
       val p = plan("q_simjoin_prefix")
       assert(p.contains("smallest_k"),
         s"exact-df prefix must ride the bounded-heap aggregate:\n$p")
@@ -298,7 +298,7 @@ class PlanAuditSpec extends SparkSpecBase {
         s"no full-array regroup in the exact-df path:\n$p")
       assert(nOcc(p, "ShuffledHashJoin") >= 4,
         s"rank/plen/meta/candidate joins must all be shuffled-hash:\n$p")
-    } finally spark.conf.unset("spark.graft.simjoin.exactDf")
+    }
   }
 
   test("embeddingNearDupPairs: explicit (t, sig) partition count reaches the bucket self-join (r15/r16 sizing)") {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-import graft.ops.{Dedup, Similarity}
+import graft.ops.{Dedup, Scale, Similarity}
 import graft.sources.Tables
 
 /** Task-retry determinism (r9 verdict item 7): the portability contract
@@ -79,7 +79,8 @@ class RetrySpec extends AnyFunSuite with BeforeAndAfterAll {
     assertRetryStable("minhashNearDupPairs",
       // 0: the distributed funnel, whose tasks the chaos retries (the
       // driver-side one would take the clean run off Spark)
-      d => Dedup.minhashNearDupPairs(d, "text", "doc_id", localMaxRows = 0L), docs)
+      d => Scale.forcing(_.copy(funnelMaxRows = 0L))(
+        Dedup.minhashNearDupPairs(d, "text", "doc_id")), docs)
   }
 
   test("semDeDup (integer Lloyd + closure + keep-rule) is hash-identical under task retries") {

@@ -705,7 +705,8 @@ class SimilaritySpec extends SparkSpecBase {
     val n = 1000L
     val maxFit = 100L
     val df = spark.range(n).select(col("id").as("vec_id"))
-    val got = Similarity.capFitSample(df, "vec_id", maxFit = maxFit)
+    val got = graft.ops.Scale.forcing(_.copy(fitSampleMax = maxFit))(
+        Similarity.capFitSample(df, "vec_id"))
       .select("vec_id").collect().map(_.getLong(0)).toSet
     val thr = f"${math.max(1L, (maxFit << 32) / n)}%08x"
     def md5hex(s: String): String =

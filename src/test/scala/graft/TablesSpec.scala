@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{BinaryType, StringType}
+import graft.ops.Scale
 import graft.sources.Tables
 
 class TablesSpec extends SparkSpecBase {
@@ -196,21 +197,9 @@ class TablesSpec extends SparkSpecBase {
       case _ => false
     }
 
-  test("footerBound: a union sums its children's bounds, and an unbounded child unbounds it") {
-    val docs = Tables.documents(spark, Sf0001).select("doc_id", "text")
-    val isDelta = col("doc_id") % 5 === 4
-    val one = Tables.footerBound(docs.filter(isDelta)).get
-    assert(Tables.footerBound(docs.filter(!isDelta).union(docs.filter(isDelta))) ===
-      Some(Tables.FooterBound(2 * one.rows, 2 * one.bytes)))
-    val s = spark; import s.implicits._
-    val inMemory = Seq((1L, "a")).toDF("doc_id", "text")
-    assert(Tables.footerBound(docs.union(inMemory)).isEmpty)
-    assert(Tables.footerBound(inMemory.union(docs)).isEmpty)
-  }
-
   test("spreadForKernel: a footer-small parquet frame comes back unchanged") {
     val docs = Tables.documents(spark, Sf0001)
-    assert(Tables.footerBound(docs).exists(_.bytes <= Tables.SpreadMinBytes))
+    assert(Scale.bound(docs).exists(_.bytes <= Scale.SpreadMinBytes))
     assert(Tables.spreadForKernel(docs) eq docs)
     assert(!spreads(Tables.spreadForKernel(docs.select(col("text")))))
   }
@@ -218,7 +207,7 @@ class TablesSpec extends SparkSpecBase {
   test("spreadForKernel: sf0.1 documents and an in-memory frame still spread") {
     val sf01 = new java.io.File(new java.io.File(Sf001).getParentFile, "sf0.1").getPath
     val docs = Tables.documents(spark, sf01)
-    assert(Tables.footerBound(docs).exists(_.bytes > Tables.SpreadMinBytes))
+    assert(Scale.bound(docs).exists(_.bytes > Scale.SpreadMinBytes))
     assert(spreads(Tables.spreadForKernel(docs)))
     val s = spark; import s.implicits._
     assert(spreads(Tables.spreadForKernel(Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text"))))
@@ -243,13 +232,13 @@ class TablesSpec extends SparkSpecBase {
     }
     Seq("q_weak_labels", "q_component_labels", "q_dedup_keep_best").foreach { q =>
       val (gated, _) = run(q)
-      val (spread, _) = Tables.spreadMinBytes.withValue(-1L)(run(q))
+      val (spread, _) = Scale.forcing(_.copy(spreadMinBytes = -1L))(run(q))
       assert(gated.nonEmpty)
       assert(gated === spread, q)
     }
     // the forced-off gate does reach the queries' plans
     assert(!run("q_dedup_keep_best")._2)
-    assert(Tables.spreadMinBytes.withValue(-1L)(run("q_dedup_keep_best"))._2)
+    assert(Scale.forcing(_.copy(spreadMinBytes = -1L))(run("q_dedup_keep_best"))._2)
   }
 
   test("entry (flagship) returns rows on sf0.001") {
